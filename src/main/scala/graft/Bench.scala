@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.Session
 
 /** Per-round benchmark: every registered query against
   * SPARK_GRAFT_SF_DIR, one JSON line on stdout.
@@ -17,38 +17,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // InferFiltersFromGenerate excluded (r17, measured): for every
-      // Generate in this engine the generator input is a COMPUTED array
-      // (shingles, band structs, bin sequences — never a stored column),
-      // so the inferred `size(e)>0 AND isnotnull(e)` filter re-inlines
-      // the whole array expression and predicate pushdown drags it
-      // below the scan-spread exchange, where it re-evaluates the
-      // expensive interpreted HOF per row in the single scan task —
-      // 2-3 redundant shingle-array builds per document that drop
-      // nothing the Generate would not drop anyway (explicit
-      // size(toks)>=n guards already run at the scan). Same
-      // pessimization at any scale; q_split_leakage 3.0 -> 1.2 s
-      // in-session A/B. Semantics-preserving (optimizer rule).
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      // r18: partitioned-index probes (vindex / IVF-PQ cells) read
-      // directories with 100-4000 partition dirs; past the default
-      // threshold (32) Spark launches a DISTRIBUTED listing job — one
-      // task per path, ~60 ms deser each, twice per probe — that
-      // costs more than listing a few hundred dirs on the driver.
-      // 1024 keeps listing driver-side for every bounded index layout
-      // while genuinely huge tables still list in parallel.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        "1024")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
 
     def force(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.mode("overwrite").format("noop").save()
@@ -159,19 +129,18 @@ object Bench {
       val agg = graft.streaming.StreamAggregator.dailyAggExact(
         graft.streaming.StreamAggregator.replayStream(spark,
           chunkDir, maxFilesPerTrigger = Some(2)))
-      // state width scoped to the stateful run (see
+      // state width fixed at start (see
       // StreamAggregator.withStreamShuffle): 32 one-group state stores
       // per micro-batch cost more commit overhead than aggregation
       val q = graft.streaming.StreamAggregator.withStreamShuffle(spark) {
-        val q0 = agg.writeStream
+        agg.writeStream
           .outputMode("complete").format("memory").queryName(name)
           .option("checkpointLocation", java.nio.file.Files
             .createTempDirectory("graft-bench-ckpt").toString)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
-        q0.awaitTermination()
-        q0
       }
+      q.awaitTermination()
       val sec = (System.nanoTime() - t0) / 1e9
       (sec, nEvents / sec, q.recentProgress.toSeq
         .filter(_.numInputRows > 0)

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.Session
 
 /** Dump `explain("formatted")` for registered queries — the plan
   * evidence tool for the optimization rounds. Env knobs so plan
@@ -12,23 +12,8 @@ import org.apache.spark.sql.SparkSession
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      // r18: partitioned-index probes (vindex / IVF-PQ cells) read
-      // directories with 100-4000 partition dirs; past the default
-      // threshold (32) Spark launches a DISTRIBUTED listing job — one
-      // task per path, ~60 ms deser each, twice per probe — that
-      // costs more than listing a few hundred dirs on the driver.
-      // 1024 keeps listing driver-side for every bounded index layout
-      // while genuinely huge tables still list in parallel.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        "1024")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session.build(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val outDir = sys.env.get("GRAFT_PLAN_DIR")

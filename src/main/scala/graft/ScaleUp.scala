@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Session, Tables}
 
 /** Deterministic ×`mult` replication of a provisioned testdata dir —
   * the input for the one-decade-up bench (BENCH_full_latest_sf1.json):
@@ -66,11 +66,8 @@ object ScaleUp {
     val textMode = args.lift(3).getOrElse("decorr")
     require(textMode == "decorr" || textMode == "suffix",
       s"text mode must be decorr|suffix, got $textMode")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session.build(32,
+      Map("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS"))
     spark.sparkContext.setLogLevel("ERROR")
 
     def maxKey(df: DataFrame, c: String): Long =

@@ -1,42 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.Session
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // InferFiltersFromGenerate excluded (r17, measured): for every
-      // Generate in this engine the generator input is a COMPUTED array
-      // (shingles, band structs, bin sequences — never a stored column),
-      // so the inferred `size(e)>0 AND isnotnull(e)` filter re-inlines
-      // the whole array expression and predicate pushdown drags it
-      // below the scan-spread exchange, where it re-evaluates the
-      // expensive interpreted HOF per row in the single scan task —
-      // 2-3 redundant shingle-array builds per document that drop
-      // nothing the Generate would not drop anyway (explicit
-      // size(toks)>=n guards already run at the scan). Same
-      // pessimization at any scale; q_split_leakage 3.0 -> 1.2 s
-      // in-session A/B. Semantics-preserving (optimizer rule).
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      // r18: partitioned-index probes (vindex / IVF-PQ cells) read
-      // directories with 100-4000 partition dirs; past the default
-      // threshold (32) Spark launches a DISTRIBUTED listing job — one
-      // task per path, ~60 ms deser each, twice per probe — that
-      // costs more than listing a few hundred dirs on the driver.
-      // 1024 keeps listing driver-side for every bounded index layout
-      // while genuinely huge tables still list in parallel.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        "1024")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     // dev loop: SPARK_GRAFT_ONLY=q_a,q_b runs a subset (the driver
     // never sets it, so the gate always dumps everything)

@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.SparkSession
+import graft.core.Session
 
 /** Runnable golden-parity check: replays the reference pipeline over
   * the reference's own hotel-weather dataset and diffs the top-10
@@ -11,14 +11,8 @@ object GoldenReplay {
   def main(args: Array[String]): Unit = {
     val path = args.headOption.getOrElse(
       "/root/reference/m13sparkstreaming/hotel-weather")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     val t0 = System.nanoTime()
     val got = HotelWeather.goldenPipeline(spark, path)
       .collect()

@@ -374,7 +374,7 @@ object Dedup {
     * the filter frame's shuffle volume never exceeds
     * ~parallelism × filter bytes. Verdicts are per-row functions of
     * (h, shard filters), so results are salt-invariant by
-    * construction (StressBloom measures the shard-flatness row;
+    * construction (SCALE.md's StressBloom shard-flatness row;
     * hashes pinned by the registered store twin).
     *
     * Tradeoff knob `spark.graft.dedup.screenSalts` (> 0 overrides):
@@ -435,7 +435,7 @@ object Dedup {
     * per group and probes the slice's precomputed `xxhash64(fp)`
     * hashes. No plan ever embeds a filter literal at all, no driver
     * loop runs, and per-batch wall is flat in BOTH history size and
-    * shard count (StressBloom measures both): shard groups spread
+    * shard count (SCALE.md's StressBloom rows): shard groups spread
     * across the cluster like any other aggregation key, and executor
     * memory holds one deserialized filter per in-flight group.
     *
@@ -803,7 +803,7 @@ object Dedup {
     * returns the batch (slim projection + fp) tagged `__maybe` —
     * the pure per-batch steady-state stage, one cogroup job whose
     * cost is batch-sized and FLAT in both history size and shard
-    * count (StressBloom measures both; see
+    * count (SCALE.md's StressBloom rows; see
     * [[dedupAgainstHistoryBloomSharded]] for the plan story).
     * Downstream, bloom-positive rows go to the exact confirm join —
     * whose cost is a store-layout property: against an fp-BUCKETED
@@ -844,8 +844,8 @@ object Dedup {
     * `sortBy(fp)` order) NO sort on the history side, per batch, no
     * matter how large the accumulated history grows. Only the
     * bloom-positive slice of the batch shuffles (IngestSpec
-    * plan-asserts both properties; StressBloom measures the full
-    * column flat where the flat-table twin grew 4.3→51 s over 16×).
+    * plan-asserts both properties; SCALE.md's StressBloom rows show
+    * the full column flat where the flat-table twin grew 4.3→51 s over 16×).
     *
     * Sort-free reading needs Spark's opt-in
     * `spark.sql.legacy.bucketedTableScan.outputOrdering` (the scan

@@ -178,7 +178,7 @@ object Layout {
               .as("file_id")))).as("lf"))
       .select(col("lf.layout").as("layout"), col("lf.file_id").as("file_id"),
         col("xb"), col("yb"), col("n_rows"), col("in_box"))
-    filed.groupBy("layout", "file_id")
+    val profile = filed.groupBy("layout", "file_id")
       .agg(sum("n_rows").as("f_rows"),
         sum(col("in_box") * col("n_rows")).as("f_match"),
         min("xb").as("x_lo"), max("xb").as("x_hi"),
@@ -191,7 +191,12 @@ object Layout {
         sum("hit").as("files_read"),
         sum(col("hit") * col("f_rows")).as("rows_read"),
         sum("f_match").as("rows_match"))
-      .select(col("layout"), col("n_files"),
+    // one row per layout even over an empty events table, as the
+    // oracle's three global aggregates give: n_files = 0, NULL sums
+    val layouts = spark.range(1).select(explode(array(
+      lit("zorder"), lit("lexicographic"), lit("unsorted"))).as("layout"))
+    layouts.join(broadcast(profile), Seq("layout"), "left")
+      .select(col("layout"), coalesce(col("n_files"), lit(0L)).as("n_files"),
         col("files_read"), col("rows_read"), col("rows_match"))
   }
 
@@ -271,7 +276,7 @@ object Layout {
     * reader and report what each layout's scan delivered.
     * [[zorderPruneEffect]]'s overlap arithmetic is the claim; the
     * scan metric here is the proof (LayoutSpec asserts z < x-sort;
-    * the probe main records the numbers per SF).
+    * SCALE.md records the numbers per SF).
     *
     * Timestamps are written as TIMESTAMP_MICROS explicitly: INT96
     * parquet timestamps carry no usable min/max stats, which would

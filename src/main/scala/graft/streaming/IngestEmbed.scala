@@ -109,8 +109,8 @@ object IngestEmbed {
     *    the same per-member witness the pair join's CC gives
     *    non-survivors. No pair term at any batch size: duplicate-
     *    heavy streams pay Θ(rows · k) per batch instead of the pair
-    *    join's occupancy² ([[graft.StressIngestEmbed]] prices the
-    *    A/B; SCALE.md row). Moderate-similarity batch-local pairs
+    *    join's occupancy² (SCALE.md's StressIngestEmbed row prices
+    *    the A/B). Moderate-similarity batch-local pairs
     *    that only the pair join would link stay un-merged (kept,
     *    never wrongly dropped). The history probe (step 1) is
     *    identical in both modes. */

@@ -2,8 +2,9 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
+
+import graft.core.Session
 
 /** Runnable end-to-end demo of the reference's full loop, CONCURRENT
   * like the original (`upload.py` sleeps 1 s per day against a live
@@ -17,14 +18,8 @@ import org.apache.spark.sql.streaming.Trigger
 object ReplayDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
 
     val watched = Files.createTempDirectory("graft-replay-demo").toString
     println(s"[demo] live replay of $sfDir events into $watched")

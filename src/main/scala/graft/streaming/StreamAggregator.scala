@@ -111,49 +111,43 @@ object StreamAggregator {
     * the result table. Checkpoint is explicit (the reference omits it —
     * SURVEY §2.9 flags that as a rebuild fix). */
   def runToMemoryTable(spark: SparkSession, agg: DataFrame,
-      queryName: String): DataFrame = withStreamShuffle(spark) {
+      queryName: String): DataFrame = {
     val checkpoint = Files.createTempDirectory(s"graft-ckpt-$queryName")
       .toString
-    val q = agg.writeStream
-      .outputMode(OutputMode.Complete())
-      .format("memory")
-      .queryName(queryName)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    val q = withStreamShuffle(spark) {
+      agg.writeStream
+        .outputMode(OutputMode.Complete())
+        .format("memory")
+        .queryName(queryName)
+        .option("checkpointLocation", checkpoint)
+        .trigger(Trigger.AvailableNow())
+        .start()
+    }
     q.awaitTermination()
     spark.table(queryName)
   }
 
-  /** Scoped state-store width for STATEFUL streaming runs — guide §2.1
-    * sized to the state, §5 parameterized. A stateful aggregate's
-    * state-partition count is pinned from `spark.sql.shuffle.partitions`
-    * at the query's FIRST batch; a batch-oriented session runs that at
-    * core count (32 here), which for a keys-bounded aggregate (~150
-    * (event_type, day) groups) is 32 HDFS-backed state stores doing
-    * per-batch checkpoint commits for a handful of groups each —
-    * measured 1.9 → 1.2 s on q_stream_agg at 32→8. `spark.graft
-    * .stream.shuffle` = auto (min(8, session width) — right whenever
-    * the distinct-key count is small) | off (keep session width) | an
-    * explicit integer for wide-state production streams. Applied
-    * around start+awaitTermination and restored after, so batch plans
-    * in the same session are untouched. Results are width-invariant
-    * (exact, order-independent aggregates — the module's invariant). */
+  /** State-store width for STATEFUL streaming runs — guide §2.1 sized
+    * to the state. A stateful aggregate's state-partition count is
+    * pinned from `spark.sql.shuffle.partitions` at the query's FIRST
+    * batch; a batch-oriented session runs that at core count (32
+    * here), which for a keys-bounded aggregate (~150 (event_type, day)
+    * groups) is 32 HDFS-backed state stores doing per-batch checkpoint
+    * commits for a handful of groups each — measured 1.9 → 1.2 s on
+    * q_stream_agg at 32→8. The rule is min(8, session width).
+    *
+    * Wrap only `start()`: the query clones its session when it is
+    * constructed (Structured Streaming fixes a query's configuration
+    * at start), so the width is restored before the stream runs; batch
+    * plans made concurrently in the caller's session can only see it
+    * while `start()` itself runs, not for the stream's lifetime.
+    * Results are width-invariant (exact, order-independent aggregates
+    * — the module's invariant). */
   def withStreamShuffle[T](spark: SparkSession)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
-    val target = spark.conf.get("spark.graft.stream.shuffle", "auto") match {
-      case "off" => None
-      case "auto" =>
-        Some(math.min(8, spark.conf.get(key).toInt).toString)
-      case n => Some(n)
-    }
-    target match {
-      case None => body
-      case Some(t) =>
-        val prev = spark.conf.get(key)
-        spark.conf.set(key, t)
-        try body finally spark.conf.set(key, prev)
-    }
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, math.min(8, prev.toInt).toString)
+    try body finally spark.conf.set(key, prev)
   }
 
   /** Production-path sink: foreachBatch → overwrite parquet. The memory

@@ -65,6 +65,20 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
     assert(unFiles > 0 && unHit > 0)
   }
 
+  test("zorderPruneEffect on an empty events table: one row per layout, " +
+    "as the oracle SQL gives") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-zorder-empty").toString
+    spark.read.parquet(s"$sf/events.parquet").where(lit(false))
+      .write.parquet(s"$dir/events.parquet")
+    val rows = Layout.zorderPruneEffect(spark, dir).collect()
+      .map(r => r.getString(0) ->
+        (r.getLong(1), r.get(2), r.get(3), r.get(4))).toMap
+    assert(rows.keySet === Set("zorder", "lexicographic", "unsorted"))
+    // COUNT(*) over no files is 0; SUM over no files is NULL
+    rows.values.foreach(v => assert(v === ((0L, null, null, null))))
+  }
+
   // ----- the physical write: per-file stats actually tighten -----
 
   test("zorderWrite files: a 2-D box touches fewer files than x-sort") {

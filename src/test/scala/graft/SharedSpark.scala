@@ -2,34 +2,14 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One session per suite (guide: lazy val, not per test). */
+/** One session per suite (guide: lazy val, not per test). Built by the
+  * mains' factory, so plan-shape specs assert the same plans the bench
+  * times. */
 trait SharedSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      // match the mains: InferFiltersFromGenerate excluded (see the
-      // Bench.scala session builder for the measured rationale) so
-      // plan-shape specs assert the same plans the bench times
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      // r18: partitioned-index probes (vindex / IVF-PQ cells) read
-      // directories with 100-4000 partition dirs; past the default
-      // threshold (32) Spark launches a DISTRIBUTED listing job — one
-      // task per path, ~60 ms deser each, twice per probe — that
-      // costs more than listing a few hundred dirs on the driver.
-      // 1024 keeps listing driver-side for every bounded index layout
-      // while genuinely huge tables still list in parallel.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        "1024")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = graft.core.Session.build(4, Map(
+    "spark.app.name" -> "graft-test",
+    "spark.sql.shuffle.partitions" -> "8",
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-warehouse").toString))
   val sf: String = "/root/testdata/sf0.001"
 }

@@ -97,6 +97,68 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     } finally q.stop()
   }
 
+  test("stream state width is fixed at start(): 8 state partitions " +
+    "while the caller session keeps its own width") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", "16")
+    val target = Files.createTempDirectory("graft-width").toString
+    val t0 = new java.sql.Timestamp(0L)
+    val days = IncrementalProducer.eventDays(s, sf)
+    IncrementalProducer.dropDay(s, sf, target, days.head, t0)
+    val q = StreamAggregator.withStreamShuffle(s) {
+      StreamAggregator.dailyAgg(
+        StreamAggregator.replayStream(s, s"$target/day=*"))
+        .writeStream.outputMode("complete").format("memory")
+        .queryName("width_agg")
+        .option("checkpointLocation",
+          Files.createTempDirectory("graft-width-ckpt").toString)
+        .trigger(org.apache.spark.sql.streaming.Trigger
+          .ProcessingTime("200 milliseconds"))
+        .start()
+    }
+    try {
+      IncrementalProducer.dropDay(s, sf, target, days(1), t0)
+      q.processAllAvailable()
+      assert(q.isActive)
+      assert(q.lastProgress.stateOperators(0).numShufflePartitions === 8)
+      assert(s.conf.get("spark.sql.shuffle.partitions") === "16")
+    } finally q.stop()
+  }
+
+  test("runToMemoryTable runs q_stream_agg's state at 8 partitions and " +
+    "leaves the session conf unchanged") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", "16")
+    val widths = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    @volatile var terminated = false
+    // progress and termination arrive in order on one listener bus, so
+    // once the terminated event is seen every progress event has been
+    val listener = new StreamingQueryListener {
+      def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      def onQueryProgress(e: QueryProgressEvent): Unit =
+        e.progress.stateOperators.foreach(o => widths.add(o.numShufflePartitions))
+      def onQueryTerminated(e: QueryTerminatedEvent): Unit = terminated = true
+    }
+    s.streams.addListener(listener)
+    try {
+      // q_stream_agg's composition (streamAggQuery); the snapshot comes
+      // after the source is built, which sets its own reader conf
+      val agg = StreamAggregator.dailyAggExact(
+        StreamAggregator.eventsStream(s, s"$sf/{events.parquet}"))
+      val before = s.conf.getAll
+      assert(StreamAggregator.runToMemoryTable(s, agg, "width_run")
+        .count() > 0)
+      assert(s.conf.getAll === before)
+      eventually(timeout(30.seconds)) { assert(terminated) }
+    } finally s.streams.removeListener(listener)
+    assert(!widths.isEmpty)
+    widths.forEach(w => assert(w === 8L))
+  }
+
   test("stream-stream range join equals batch join (bounded state)") {
     val stream = StreamAggregator.eventsStream(spark, s"$sf/{events.parquet}")
     val joined = graft.streaming.StreamJoin.flaggedFollowups(stream)
