@@ -98,12 +98,9 @@ object Bench {
     }
 
     // SPARK_GRAFT_BENCH_NOSTREAM=1 skips the streaming-throughput
-    // section (stream_* fields report -1): the memory-sink stream is
-    // the ONE part of this main that cannot run outside sbt
-    // (EXPRESSION_DECODING_FAILED under a bare java classpath), and
-    // the scale boards run sbt-free so compiles/tests can proceed
-    // while a multi-hour board is in flight. Scale-board streaming
-    // numbers come from the dedicated streaming stress mains instead.
+    // section (stream_* fields report -1), so a multi-hour scale board
+    // pays only for the per-query rows; measure the stream separately
+    // (SPARK_GRAFT_BENCH_STREAMONLY=1, or RunOne q_stream_agg).
     val noStream = sys.env.get("SPARK_GRAFT_BENCH_NOSTREAM").contains("1")
 
     // streaming throughput + per-micro-batch latency: pace the file

@@ -159,18 +159,14 @@ object SparkEntry {
     // all-integer churn metrics (the drift gate of the graph family)
     "q_link_rank_churn" -> ((s: SparkSession, d: String) =>
       graft.ops.LinkRank.linkRankChurn(s, d)),
-    // the components family shares one memoized (doc_id, component)
-    // frame per session (immutable testdata dir — the memoSurvivors
-    // rule): the label build runs once, each query keeps its own
-    // derivation honest
     "q_near_dup_components" -> ((s: SparkSession, d: String) =>
-      graft.ops.Components.nearDupComponents(s, d, memo = true)),
+      graft.ops.Components.nearDupComponents(s, d)),
     "q_dedup_survivors" -> ((s: SparkSession, d: String) =>
-      graft.ops.Components.dedupNearSurvivors(s, d, memo = true)),
+      graft.ops.Components.dedupNearSurvivors(s, d)),
     "q_dedup_best_survivors" -> ((s: SparkSession, d: String) =>
-      graft.ops.Components.bestQualitySurvivors(s, d, memo = true)),
+      graft.ops.Components.bestQualitySurvivors(s, d)),
     "q_corpus_clean" -> ((s: SparkSession, d: String) =>
-      graft.ops.Components.cleanCorpus(s, d, memo = true)),
+      graft.ops.Components.cleanCorpus(s, d)),
     "q_dedup_clusters_lsh" -> (graft.ops.Components.lshDedupClusters _),
     "q_dedup_clusters_portable" ->
       (graft.ops.Components.lshDedupClustersPortable _),
@@ -336,7 +332,7 @@ object SparkEntry {
     "q_decontaminated_corpus" -> ((s: SparkSession, d: String) =>
       graft.ops.Decontaminate.decontaminatedCorpus(s, d)),
     "q_governed_corpus" -> ((s: SparkSession, d: String) =>
-      graft.ops.Decontaminate.governedCorpus(s, d, memoComponents = true)),
+      graft.ops.Decontaminate.governedCorpus(s, d)),
     // fuzzy (MinHash-LSH) decontamination: production xxhash64 form is
     // rows-only; the md5 portable twin + composed corpus are the
     // hash-exact proofs of the same cross-corpus banding machinery
@@ -347,19 +343,17 @@ object SparkEntry {
     "q_fuzzy_decontaminated" -> ((s: SparkSession, d: String) =>
       graft.ops.Decontaminate.fuzzyDecontaminatedCorpus(s, d)),
     // the full end-to-end pipeline (ingest → dedup → decontaminate →
-    // quality → shuffle → pack) as ONE hash-oracled artifact. The
-    // three variants share the memoized survivor set (safe here: the
-    // provisioned testdata dir is immutable for the session), so the
-    // governance chain's cost lands on whichever variant runs first.
+    // quality → shuffle → pack) as ONE hash-oracled artifact; each
+    // variant builds its own survivor set
     "q_training_shards" -> ((s: SparkSession, d: String) =>
-      graft.ops.Corpus.trainingShards(s, d, memoSurvivors = true)),
+      graft.ops.Corpus.trainingShards(s, d)),
     // the complete pipeline with the weighted-mixing stage composed in
     "q_training_shards_mixed" -> ((s: SparkSession, d: String) =>
-      graft.ops.Corpus.trainingShardsMixed(s, d, memoSurvivors = true)),
+      graft.ops.Corpus.trainingShardsMixed(s, d)),
     // the pipeline with CHUNK-GRAIN boilerplate removal composed in
     // (non-overlapping chunks → cross-doc exact dedup → chunk packing)
     "q_training_shards_chunked" -> ((s: SparkSession, d: String) =>
-      graft.ops.Corpus.trainingShardsChunked(s, d, memoSurvivors = true)),
+      graft.ops.Corpus.trainingShardsChunked(s, d)),
     // similarity search
     "q_ann_topk" -> ((s: SparkSession, d: String) =>
       Similarity.bruteForceTopK(s, d)),
@@ -450,7 +444,7 @@ object SparkEntry {
     // the flagship composition: training shards with embedding-level
     // semantic dedup (rows-only) + its hash-exact gate row
     "q_training_shards_semantic" -> ((s: SparkSession, d: String) =>
-      graft.ops.Corpus.trainingShardsSemantic(s, d, memoSurvivors = true)),
+      graft.ops.Corpus.trainingShardsSemantic(s, d)),
     "q_training_shards_semantic_gate" -> ((s: SparkSession, d: String) =>
       graft.ops.Corpus.trainingShardsSemanticGate(s, d)),
     // multimodal plumbing; the *_portable twins run the same

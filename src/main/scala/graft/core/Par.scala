@@ -14,9 +14,8 @@ package graft.core
   * scheduling gives exactly that back-fill behaviour.
   *
   * Only for actions that are truly independent AND whose shared
-  * inputs are already materialized (localCheckpoint'd / persisted /
-  * session-memo-warmed): racing two thunks into a cold
-  * [[graft.ops.Scratch]] memo would build the artifact twice.
+  * inputs are already materialized (localCheckpoint'd / persisted):
+  * two thunks over a lazy shared input would each compute it.
   * Threads, not an ExecutionContext: the thunks BLOCK on Spark
   * actions, so a shared bounded pool risks starvation, and at
   * a-few-per-query frequency thread creation is free. Failures
@@ -25,14 +24,10 @@ package graft.core
 object Par {
 
   def all[T](thunks: (() => T)*): Seq[T] = {
-    // `spark.graft.par=off` degrades to sequential execution — the
-    // A/B knob (and the escape hatch for a resource-starved driver).
-    // The caller thread's active session also propagates to the
-    // worker threads so session-dependent code inside a thunk
-    // (implicits, SparkSession.active) behaves as if called inline.
+    // The caller thread's active session propagates to the worker
+    // threads so session-dependent code inside a thunk (implicits,
+    // SparkSession.active) behaves as if called inline.
     val session = org.apache.spark.sql.SparkSession.getActiveSession
-    if (session.exists(_.conf.get("spark.graft.par", "on") == "off"))
-      return thunks.map(_()).toSeq
     val results = new Array[Any](thunks.size)
     val err = new java.util.concurrent.atomic.AtomicReference[Throwable]()
     val ts = thunks.zipWithIndex.map { case (f, i) =>

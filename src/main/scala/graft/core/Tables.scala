@@ -203,16 +203,10 @@ object Tables {
     * the scan — is preserved exactly where it matters. `df` must be
     * scan-grade (scan + project/filter only): the probe plans the
     * frame to count partitions, and planning a frame with exchanges
-    * under AQE would execute its upstream stages. Knob:
-    * `spark.graft.scan.spread` = "auto" (default: target =
-    * defaultParallelism) | "off" | an explicit integer target. */
+    * under AQE would execute its upstream stages. The target is the
+    * session's defaultParallelism. */
   def spread(df: DataFrame, key: String): DataFrame = {
-    val spark = df.sparkSession
-    val conf = spark.conf.get("spark.graft.scan.spread", "auto")
-    if (conf == "off") return df
-    val target =
-      if (conf == "auto") spark.sparkContext.defaultParallelism
-      else conf.toInt
+    val target = df.sparkSession.sparkContext.defaultParallelism
     if (target <= 1) return df
     if (df.rdd.getNumPartitions >= target) df
     else df.repartition(target, org.apache.spark.sql.functions.col(key))
@@ -240,11 +234,9 @@ object Tables {
     * The one-call `getContentSummary` is driver-side metadata of the
     * same order as the directory listing the scan itself performs.
     * Call AFTER partition-pruning filters (coalesce sits above the
-    * filter, pruning is untouched). Knob: `spark.graft.scan.pack` =
-    * auto (default) | off. */
+    * filter, pruning is untouched). */
   def packedScan(df: DataFrame, path: String): DataFrame = {
     val spark = df.sparkSession
-    if (spark.conf.get("spark.graft.scan.pack", "auto") == "off") return df
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
     val bytes =

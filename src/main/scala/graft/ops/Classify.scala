@@ -207,26 +207,20 @@ object Classify {
     * the bounded-intermediate discipline — instead of re-scanning the
     * corpus. */
   private def bigramLm(spark: SparkSession, dir: String): DataFrame = {
-    // memoized per (session, dir) — the Scratch discipline: the LM is
-    // deterministic, so the four registered queries that each built
-    // (and pinned, via the c12 checkpoint) their own copy now ride ONE
-    // materialized table per session; the intermediate bigram-count
-    // checkpoint releases as soon as the memo copy exists
-    var c12Built: DataFrame = null
-    val lm = Scratch.memo(spark, s"bigramlm:$dir") {
-      val c12 = bigramPairs(Tables.documents(spark, dir))
-        .groupBy("l", "r")
-        .agg(count(lit(1)).as("c12"))
-        .localCheckpoint()
-      c12Built = c12
-      val c1 = c12.groupBy("l").agg(sum("c12").as("c1"))
-      c12.join(c1, "l")
-        .select(col("l"), col("r"),
-          expr("(c12 * 1000000L) div c1").as("p_micro"))
-    }
-    if (c12Built != null)
-      org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(c12Built)
-    // Size-GATED broadcast, re-applied on the memoized frame (the
+    val c12 = bigramPairs(Tables.documents(spark, dir))
+      .groupBy("l", "r")
+      .agg(count(lit(1)).as("c12"))
+      .localCheckpoint()
+    val c1 = c12.groupBy("l").agg(sum("c12").as("c1"))
+    // the LM is read twice — the size count below, then the caller's
+    // join — so it is materialized once; the bigram-count checkpoint
+    // is dead as soon as it is
+    val lm = c12.join(c1, "l")
+      .select(col("l"), col("r"),
+        expr("(c12 * 1000000L) div c1").as("p_micro"))
+      .localCheckpoint()
+    org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(c12)
+    // Size-GATED broadcast, re-applied on the checkpointed frame (the
     // checkpoint is a stats-less leaf — the Pack.autoParts MaxValue
     // pathology — so without the hint the planner assumes it is huge
     // and sort-merge-joins, shuffling the corpus-sized pair stream;
@@ -246,22 +240,14 @@ object Classify {
     * Two corpus scans by design (LM build + scoring) — caching the
     * token-grain pair frame would pin a corpus-sized intermediate. */
   def bigramLmScores(spark: SparkSession, dir: String): DataFrame =
-    // memoized per (session, dir) like the LM itself (r18): the
-    // scoring pass is rebuilt identically by q_bigram_lm_scores,
-    // pplBuckets (→ q_ppl_buckets, q_ppl_bucket_report) and the
-    // curriculum pair (q_curriculum, q_curriculum_audit); the result
-    // is a bounded per-doc label row (three longs + one IEEE div)
-    Scratch.memo(spark, s"bigramscores:$dir") {
-      val docs = Tables.documents(spark, dir)
-      bigramPairs(docs)
-        .join(bigramLm(spark, dir), Seq("l", "r"))
-        .groupBy("doc_id")
-        .agg(sum("p_micro").cast("long").as("sum_micro"),
-          count(lit(1)).as("n_pairs"))
-        .select(col("doc_id"), col("sum_micro"), col("n_pairs"),
-          (col("sum_micro") /
-            (col("n_pairs").cast("double") * lit(1e6))).as("fluency"))
-    }
+    bigramPairs(Tables.documents(spark, dir))
+      .join(bigramLm(spark, dir), Seq("l", "r"))
+      .groupBy("doc_id")
+      .agg(sum("p_micro").cast("long").as("sum_micro"),
+        count(lit(1)).as("n_pairs"))
+      .select(col("doc_id"), col("sum_micro"), col("n_pairs"),
+        (col("sum_micro") /
+          (col("n_pairs").cast("double") * lit(1e6))).as("fluency"))
 
   private val bigramSql: String =
     """WITH p AS (
@@ -378,14 +364,7 @@ object Classify {
   /** Per-document CCNet bucket: (doc_id, source, mean_nano, bucket)
     * with bucket ∈ head | middle | tail by per-source fluency
     * tercile (head = most fluent under the corpus bigram LM). */
-  def pplBuckets(spark: SparkSession, dir: String): DataFrame =
-    // memoized per (session, dir): a per-doc label row shared by
-    // q_ppl_buckets, q_ppl_bucket_report and the curriculum pair,
-    // each of which otherwise re-ran the stable-ids prefix-sum
-    // machinery on an identical input (r18, §1.2)
-    Scratch.memo(spark, s"pplbuckets:$dir")(pplBucketsBuild(spark, dir))
-
-  private def pplBucketsBuild(spark: SparkSession, dir: String): DataFrame = {
+  def pplBuckets(spark: SparkSession, dir: String): DataFrame = {
     val scored = bigramLmScores(spark, dir)
       .join(Tables.documents(spark, dir).select("doc_id", "source"),
         "doc_id")

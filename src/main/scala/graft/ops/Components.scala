@@ -268,32 +268,19 @@ object Components {
     * component. Pair generation runs on exact-dup representatives only
     * ([[collapseExact]] — identical output, the m² clique term gone).
     *
-    * `memo = true` shares the (doc_id, component) frame per (session,
-    * dir) across the whole derivative family — survivors, clean
-    * corpus, governed corpus — the way a production pipeline
-    * materializes its component labels once and derives everything
-    * downstream from them. This is the ONE corpus-sized frame the
-    * memo contract sanctions (see [[Scratch.memo]]): two longs per
-    * doc (~16 GB across a cluster at 10⁹ docs, a ~10⁻⁷ fraction of
-    * the corpus it labels), MEMORY_AND_DISK so memory pressure spills
-    * it to disk, pinned for the session precisely because five
-    * registered derivative queries re-read it. Deterministic.
-    * MUST stay false when `dir`'s content can change
-    * within the session (the [[Corpus.trainingShards]] memoSurvivors
-    * rule: streaming recomputations see a growing corpus). */
-  def nearDupComponents(spark: SparkSession, dir: String,
-      memo: Boolean = false): DataFrame = {
-    def build = {
-      val docs = Tables.documentsSpread(spark, dir).select("doc_id", "text")
-      val (reps, stars) = collapseExact(docs)
-      val edges = Dedup.ngramJaccardPairsFor(reps)
-        .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      connectedComponents(docs.select(col("doc_id").as("node")),
-          edges.unionByName(stars))
-        .select(col("node").as("doc_id"), col("component"))
-    }
-    if (memo) Scratch.memo(spark, s"neardup-components:$dir")(build)
-    else build
+    * [[connectedComponents]] checkpoints the edges and the labels
+    * before it returns, so a query that derives several views from
+    * the result (survivors, splits, audits) re-reads labels, never
+    * the pair pipeline. Nothing is cached across queries: every call
+    * labels the documents `dir` holds now. */
+  def nearDupComponents(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.documentsSpread(spark, dir).select("doc_id", "text")
+    val (reps, stars) = collapseExact(docs)
+    val edges = Dedup.ngramJaccardPairsFor(reps)
+      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
+    connectedComponents(docs.select(col("doc_id").as("node")),
+        edges.unionByName(stars))
+      .select(col("node").as("doc_id"), col("component"))
   }
 
   /** The component closure as a reusable CTE chain ending in
@@ -377,10 +364,9 @@ object Components {
     * one component), so keeping each component's minimum doc_id yields
     * the corpus with BOTH exact and near duplicates removed — one
     * semi-join against the survivor set. */
-  def cleanCorpus(spark: SparkSession, dir: String,
-      memo: Boolean = false): DataFrame =
+  def cleanCorpus(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
-      .join(dedupNearSurvivors(spark, dir, memo).select("doc_id"),
+      .join(dedupNearSurvivors(spark, dir).select("doc_id"),
         Seq("doc_id"), "left_semi")
       .select("doc_id", "lang", "source", "n_chars")
 
@@ -391,9 +377,8 @@ object Components {
 
   /** Survivors after near-dup clustering: one document (min doc_id) per
     * component — the rows a training pipeline would keep. */
-  def dedupNearSurvivors(spark: SparkSession, dir: String,
-      memo: Boolean = false): DataFrame =
-    nearDupComponents(spark, dir, memo)
+  def dedupNearSurvivors(spark: SparkSession, dir: String): DataFrame =
+    nearDupComponents(spark, dir)
       .groupBy("component")
       .agg(min(col("doc_id")).as("doc_id"),
         count(lit(1)).as("n_members"))
@@ -413,15 +398,15 @@ object Components {
     * ones, and keeping the first-seen id throws away the clean copy
     * whenever it arrived late.
     *
-    * Plan: the memoized component labels join the per-doc quality
+    * Plan: the checkpointed component labels join the per-doc quality
     * scalar (both (doc_id, few-columns) frames), then ONE shuffle by
     * component runs both window functions (the argmax row_number and
     * the n_members count share the partitioning). The ratio is
     * exact-int/exact-int → one IEEE division, hash-portable; ties
     * inside a clique of identical copies fall to doc_id, so the
     * output is deterministic on any partitioning. */
-  def bestQualitySurvivors(spark: SparkSession, dir: String,
-      memo: Boolean = false): DataFrame = {
+  def bestQualitySurvivors(spark: SparkSession, dir: String)
+      : DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val quality = Tables.documents(spark, dir).select(
       col("doc_id"),
@@ -429,7 +414,7 @@ object Components {
     val wRank = Window.partitionBy("component")
       .orderBy(col("stopword_ratio").desc, col("doc_id"))
     val wSize = Window.partitionBy("component")
-    nearDupComponents(spark, dir, memo)
+    nearDupComponents(spark, dir)
       .join(quality, "doc_id")
       .withColumn("r", row_number().over(wRank))
       .withColumn("n_members", count(lit(1)).over(wSize))

@@ -41,42 +41,29 @@ object Corpus {
 
   /** The survivor doc_id set shared by every composed pipeline below:
     * governance (near-dup CC + decontamination) ∩ quality filter.
-    *
-    * With `memo = true`, memoized per (session, dir) — the [[Scratch]]
-    * discipline: all three pipeline variants (plain / chunked / mixed)
-    * consume the IDENTICAL deterministic survivor set, so the LSH +
-    * connected components + decontamination chain runs once per
-    * session instead of once per variant, exactly like a production
-    * run that materializes its survivor list before packing. Bounded:
-    * doc_ids only, a few rows per thousand docs.
-    *
-    * `memo` MUST stay false when `dir`'s CONTENT can change within the
-    * session — [[graft.streaming.StreamShards]] recomputes the
-    * manifest per micro-batch against a corpus that grows between
-    * calls; a dir-keyed memo there would freeze the survivor set at
-    * the first batch and silently break stream ≡ batch. Only the
-    * SparkEntry gates (immutable provisioned testdata) opt in. The
-    * standalone operator queries (`q_governed_corpus`,
-    * `q_quality_filtered`, …) never go through this — each keeps its
-    * honest per-query cost. */
-  private def survivorIds(spark: SparkSession, dir: String,
-      memo: Boolean): DataFrame = {
-    def build = Decontaminate
-      .governedCorpus(spark, dir, memoComponents = memo).select("doc_id")
+    * Built per call from what `dir` holds now:
+    * [[graft.streaming.StreamShards]] recomputes it per micro-batch
+    * against a corpus that grows between calls. A query that reads it
+    * more than once materializes it itself
+    * ([[trainingShardsSemanticGate]]). */
+  private def survivorIds(spark: SparkSession, dir: String): DataFrame =
+    Decontaminate.governedCorpus(spark, dir).select("doc_id")
       .join(TextStats.qualityFiltered(spark, dir).select("doc_id"),
         Seq("doc_id"), "left_semi")
-    if (memo) Scratch.memo(spark, s"corpus-survivors:$dir")(build) else build
-  }
 
   /** Packed training shards over the governed + quality-filtered
     * corpus, in seeded-shuffle order: (shard_id, n_docs, shard_tokens,
     * payload). Deterministic end to end (md5 permutation, integer
     * token weights), hence hash-oracled. */
   def trainingShards(spark: SparkSession, dir: String, seed: Int = 0,
-      budget: Long = 4096L, memoSurvivors: Boolean = false): DataFrame = {
+      budget: Long = 4096L): DataFrame =
+    trainingShardsFor(spark, dir, survivorIds(spark, dir), seed, budget)
+
+  private def trainingShardsFor(spark: SparkSession, dir: String,
+      keepIds: DataFrame, seed: Int, budget: Long): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val survivors = docs.select("doc_id", "text")
-      .join(survivorIds(spark, dir, memoSurvivors), Seq("doc_id"), "left_semi")
+      .join(keepIds, Seq("doc_id"), "left_semi")
     // the corpusShuffle sort key: md5(seed:doc_id) prefix gives the
     // permutation, the doc_id suffix keeps it unique and parseable
     // back out — the prefix-sum shuffle stays (key, weight)-slim
@@ -128,11 +115,10 @@ object Corpus {
     * emitted by the pack is already a survivor so governance need not
     * recompute. Deterministic end to end → hash-oracled. */
   def trainingShardsChunked(spark: SparkSession, dir: String, seed: Int = 0,
-      budget: Long = 4096L, window: Int = 64,
-      memoSurvivors: Boolean = false): DataFrame = {
+      budget: Long = 4096L, window: Int = 64): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val survivors = docs.select("doc_id", "text")
-      .join(survivorIds(spark, dir, memoSurvivors), Seq("doc_id"), "left_semi")
+      .join(survivorIds(spark, dir), Seq("doc_id"), "left_semi")
     val chunks = Chunk.chunkTokens(survivors, window, stride = window)
     // chunk-grain dedup decision: the only exchange carries
     // (fp, doc_id, chunk_id) — the text column is dropped before it
@@ -226,10 +212,10 @@ object Corpus {
     * are (shard_id, n_rows, shard_tokens, payload); still fully
     * deterministic → hash-oracled. */
   def trainingShardsMixed(spark: SparkSession, dir: String, seed: Int = 0,
-      budget: Long = 4096L, memoSurvivors: Boolean = false): DataFrame = {
+      budget: Long = 4096L): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val survivors = docs.select("doc_id", "text", "source")
-      .join(survivorIds(spark, dir, memoSurvivors), Seq("doc_id"), "left_semi")
+      .join(survivorIds(spark, dir), Seq("doc_id"), "left_semi")
     // text is consumed entirely inside the survivors scan — the mix
     // bucket and the token weight are computed in that projection and
     // only (doc_id, w, epoch) rides the explode. The post-pack
@@ -332,13 +318,17 @@ object Corpus {
     * the hash-exact compensating row is
     * [[trainingShardsSemanticGate]]. */
   def trainingShardsSemantic(spark: SparkSession, dir: String,
-      seed: Int = 0, budget: Long = 4096L,
-      memoSurvivors: Boolean = false): DataFrame = {
+      seed: Int = 0, budget: Long = 4096L): DataFrame =
+    trainingShardsSemanticFor(spark, dir, survivorIds(spark, dir),
+      semanticDropIds(spark, dir), seed, budget)
+
+  private def trainingShardsSemanticFor(spark: SparkSession, dir: String,
+      keepIds: DataFrame, dropIds: DataFrame, seed: Int,
+      budget: Long): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val survivors = docs.select("doc_id", "text")
-      .join(survivorIds(spark, dir, memoSurvivors), Seq("doc_id"), "left_semi")
-      .join(semanticDropIds(spark, dir, memoSurvivors),
-        Seq("doc_id"), "left_anti")
+      .join(keepIds, Seq("doc_id"), "left_semi")
+      .join(dropIds, Seq("doc_id"), "left_anti")
     val keyed = survivors.select(
       concat(md5(concat(lit(s"graft:$seed:"), col("doc_id").cast("string"))),
         lit(":"), col("doc_id").cast("string")).as("k"),
@@ -357,16 +347,12 @@ object Corpus {
   }
 
   /** Doc ids the semantic stage removes: non-surviving members of the
-    * screened-hybrid clusters. Memoized per (session, dir) like the
-    * text survivor set when `memo` — ids only, and the gate + the
-    * registered query share one screened run. */
-  private def semanticDropIds(spark: SparkSession, dir: String,
-      memo: Boolean): DataFrame = {
-    def build = Similarity.semanticDedupClustersScreened(spark, dir)
+    * screened-hybrid clusters. */
+  private def semanticDropIds(spark: SparkSession, dir: String)
+      : DataFrame =
+    Similarity.semanticDedupClustersScreened(spark, dir)
       .where(col("vec_id") =!= col("cluster"))
       .select(col("vec_id").as("doc_id"))
-    if (memo) Scratch.memo(spark, s"semantic-drop:$dir")(build) else build
-  }
 
   /** Hash-exact driver gate for the semantic composition — the
     * thresholded-aggregate trick ([[Similarity.ivfRecall]]): DuckDB
@@ -397,9 +383,7 @@ object Corpus {
     import graft.functions.VectorFunctions.normalize
     // The two halves are independent job chains — the planted-corpus
     // screen (3n synthetic vectors) and the real-dir composition
-    // arithmetic — so they overlap (guide §2.6 / Par). Inside each
-    // half, ordering is preserved where a session memo must warm
-    // before dependents race into it.
+    // arithmetic — so they overlap (guide §2.6 / Par).
     val ((exactOk, nearOk), (expected, packed, plainDocs)) =
       graft.core.Par.both(
         {
@@ -413,12 +397,9 @@ object Corpus {
             normalize(zip_with(col("vec"), reverse(col("vec")),
               (a, b) => a + lit(0.001) * b)).as("vec"))
           val aug = base.unionByName(copies).unionByName(nearCopies)
-          // memoized label table (r18): deterministic per (session,
-          // dir) — the planted corpus is a pure function of the dir —
-          // so the bench's repeat pass reuses one screen build
-          val lab = Scratch.memo(spark, s"sem-screened-planted:$dir") {
-            Similarity.semanticDedupClustersScreenedFor(aug)
-          }
+          // read by both planted-pair joins: materialize once
+          val lab = Similarity.semanticDedupClustersScreenedFor(aug)
+            .localCheckpoint()
           def caught(off: Long): Long = lab.as("x")
             .join(lab.as("y"), col("x.vec_id") + off === col("y.vec_id") &&
               col("x.vec_id") < n)
@@ -429,27 +410,28 @@ object Corpus {
           (exactCaught == n, nearCaught == n)
         },
         {
-          // composition arithmetic over the real dir (shares the
-          // memoized survivor/drop sets with the registered query).
-          // `expected` runs FIRST: it warms the survivor and drop
-          // memos, so the two packs below race only into warm memos.
+          // composition arithmetic over the real dir: the survivor
+          // set is read three times below and the drop set twice, so
+          // both are materialized once, before the packs overlap
+          val survivors = survivorIds(spark, dir).localCheckpoint()
+          val drops = semanticDropIds(spark, dir).localCheckpoint()
           val expected = Tables.documents(spark, dir)
             .select("doc_id", "text")
-            .join(survivorIds(spark, dir, memo = true),
-              Seq("doc_id"), "left_semi")
-            .join(semanticDropIds(spark, dir, memo = true),
-              Seq("doc_id"), "left_anti")
+            .join(survivors, Seq("doc_id"), "left_semi")
+            .join(drops, Seq("doc_id"), "left_anti")
             .agg(count(lit(1)).as("n"),
               coalesce(sum(size(split(col("text"), " ")).cast("long")),
                 lit(0L)).as("tok"))
             .head()
           val (packed, plainDocs) = graft.core.Par.both(
-            trainingShardsSemantic(spark, dir, memoSurvivors = true)
+            trainingShardsSemanticFor(spark, dir, survivors, drops,
+                seed = 0, budget = 4096L)
               .agg(coalesce(sum("n_docs"), lit(0L)).as("n"),
                 coalesce(sum("shard_tokens"), lit(0L)).as("tok"),
                 count(lit(1)).as("n_shards"))
               .head(),
-            trainingShards(spark, dir, memoSurvivors = true)
+            trainingShardsFor(spark, dir, survivors, seed = 0,
+                budget = 4096L)
               .agg(coalesce(sum("n_docs"), lit(0L))).head().getLong(0))
           (expected, packed, plainDocs)
         })

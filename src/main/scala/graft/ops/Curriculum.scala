@@ -37,16 +37,7 @@ object Curriculum {
     * global position; steps of phase p all precede those of p+1 and
     * are contiguous by construction. */
   def curriculumSchedule(spark: SparkSession, dir: String,
-      seed: Int = 0): DataFrame =
-    // memoized per (session, dir, seed): q_curriculum and
-    // q_curriculum_audit consume the identical (doc_id, phase, step)
-    // label frame (r18, §1.2)
-    Scratch.memo(spark, s"curriculum:$dir:$seed") {
-      curriculumScheduleBuild(spark, dir, seed)
-    }
-
-  private def curriculumScheduleBuild(spark: SparkSession, dir: String,
-      seed: Int): DataFrame = {
+      seed: Int = 0): DataFrame = {
     val phased = Classify.pplBuckets(spark, dir).select(
       col("doc_id"),
       when(col("bucket") === "head", 1)

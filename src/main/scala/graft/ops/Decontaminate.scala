@@ -108,9 +108,8 @@ object Decontaminate {
     * corpus; both right sides are tiny (flagged ids), so AQE
     * broadcasts them. */
   def governedCorpus(spark: SparkSession, dir: String,
-      evalSource: String = "src19", n: Int = 4,
-      memoComponents: Boolean = false): DataFrame =
-    Components.cleanCorpus(spark, dir, memoComponents)
+      evalSource: String = "src19", n: Int = 4): DataFrame =
+    Components.cleanCorpus(spark, dir)
       .where(col("source") =!= evalSource)
       .join(contaminated(spark, dir, evalSource, n).select("doc_id"),
         Seq("doc_id"), "left_anti")

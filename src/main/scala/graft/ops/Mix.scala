@@ -488,16 +488,15 @@ object Mix {
     * residue is exactly what [[crossSplitLeakage]] reports. Splitting
     * at the component grain closes it.
     *
-    * Scale shape: the component labels are the session-memoized
-    * two-long frame ([[Components.nearDupComponents]] memo contract —
-    * ~16 GB at 10⁹ docs, the sanctioned corpus-sized memo); the split
-    * itself is one codegen projection over that frame (md5 of a
-    * decimal string, no shuffle, no text). Fractions drift from
+    * Scale shape: the component labels are a checkpointed two-long
+    * frame ([[Components.nearDupComponents]] — ~16 GB at 10⁹ docs);
+    * the split itself is one codegen projection over that frame (md5
+    * of a decimal string, no shuffle, no text). Fractions drift from
     * trainPct by cluster-size skew — the audit reports the achieved
     * sizes; the leakage column is the invariant. */
   def clusterSplit(spark: SparkSession, dir: String,
       trainPct: Int = 90): DataFrame =
-    Components.nearDupComponents(spark, dir, memo = true)
+    Components.nearDupComponents(spark, dir)
       .select(col("doc_id"),
         when(componentBucket(col("component")) < trainPct, lit("train"))
           .otherwise(lit("test")).as("split"))
@@ -524,7 +523,7 @@ object Mix {
     * two slim (doc_id, split) label lookups, never text. */
   def clusterSplitAudit(spark: SparkSession, dir: String,
       trainPct: Int = 90): DataFrame = {
-    val s = Components.nearDupComponents(spark, dir, memo = true)
+    val s = Components.nearDupComponents(spark, dir)
       .select(col("doc_id"), col("component"),
         when(componentBucket(col("component")) < trainPct, lit("train"))
           .otherwise(lit("test")).as("split"))

@@ -188,17 +188,6 @@ object Quantize {
     * rows out of 10⁹, and m/ksub grow to 8-bit codes (ksub=256). */
   def pqTopK(spark: SparkSession, dir: String, numQueries: Int = 10,
       k: Int = 10, m: Int = 16, ksub: Int = 32, rerank: Int = 20)
-      : DataFrame =
-    // q_ann_pq and q_ann_pq_recall both need this exact result; the
-    // memo (Scratch discipline) keeps the m-fold codebook training +
-    // full-corpus encode at once per (session, params) — the recall
-    // gate measures recall, not a second identical build
-    Scratch.memo(spark, s"pq:$dir:$numQueries:$k:$m:$ksub:$rerank") {
-      pqTopKUncached(spark, dir, numQueries, k, m, ksub, rerank)
-    }
-
-  private def pqTopKUncached(spark: SparkSession, dir: String,
-      numQueries: Int, k: Int, m: Int, ksub: Int, rerank: Int)
       : DataFrame = {
     val corpus = Similarity.normalized(spark, dir)
       .select("vec_id", "vec").localCheckpoint()
@@ -247,17 +236,9 @@ object Quantize {
     * as [[Similarity.ivfRecallPerQuery]]. */
   def pqRecallPerQuery(spark: SparkSession, dir: String,
       numQueries: Int = 10, k: Int = 10, m: Int = 16, ksub: Int = 32,
-      rerank: Int = 20): DataFrame = {
-    val pq = pqTopK(spark, dir, numQueries, k, m, ksub, rerank)
-      .select("query_id", "neighbor_id")
-    val brute = Similarity.bruteForceTopK(spark, dir, numQueries, k)
-      .select("query_id", "neighbor_id")
-    val hits = pq.join(brute, Seq("query_id", "neighbor_id"), "left_semi")
-      .groupBy("query_id").agg(count(lit(1)).as("n_hits"))
-    brute.select("query_id").distinct()
-      .join(hits, Seq("query_id"), "left")
-      .na.fill(0L, Seq("n_hits"))
-  }
+      rerank: Int = 20): DataFrame =
+    Similarity.recallHits(pqTopK(spark, dir, numQueries, k, m, ksub, rerank),
+      Similarity.bruteForceTopK(spark, dir, numQueries, k))
 
   /** Driver-gate recall row for [[pqTopK]]: ONE aggregate row
     * asserting the PQ+rerank path recovers ≥ 90% of all true top-k
@@ -561,12 +542,8 @@ object Quantize {
     // exactly once, and /tmp holds one copy, removed at JVM exit
     val idx = Scratch.cached(spark, s"ivfpq-gate:$dir", "graft-ivfpq-gate") {
       p => buildIvfPqIndex(spark, dir, p) }
-    // the recall twin re-asks for the identical probe result: memoize
-    // it (bounded: queries×k rows) so the pair pays one probe
-    Scratch.memo(spark, s"ivfpq-probe:$dir:$numQueries:$k:$nprobe:$rerank") {
-      ivfPqTopK(spark, idx, gateQueries(spark, dir, numQueries),
-        k, nprobe, rerank)
-    }
+    ivfPqTopK(spark, idx, gateQueries(spark, dir, numQueries),
+      k, nprobe, rerank)
   }
 
   /** Build-append-probe form for the driver gate (`q_ann_ivfpq_incr`):
@@ -586,11 +563,8 @@ object Quantize {
         buildIvfPqIndexFor(vecs.where(col("vec_id") % 2 === 0), p)
         appendToIvfPqIndex(spark, p, vecs.where(col("vec_id") % 2 === 1))
     }
-    Scratch.memo(spark,
-        s"ivfpq-incr-probe:$dir:$numQueries:$k:$nprobe:$rerank") {
-      ivfPqTopK(spark, idx, gateQueries(spark, dir, numQueries),
-        k, nprobe, rerank)
-    }
+    ivfPqTopK(spark, idx, gateQueries(spark, dir, numQueries),
+      k, nprobe, rerank)
   }
 
   /** Driver-gate recall row for the INCREMENTAL index path
@@ -600,20 +574,13 @@ object Quantize {
     * true neighbors" into a hard driver assertion. */
   def ivfPqIncrRecall(spark: SparkSession, dir: String,
       numQueries: Int = 10, k: Int = 10, nprobe: Int = 0,
-      rerank: Int = 20): DataFrame = {
-    val got = ivfPqIncrTopKQuery(spark, dir, numQueries, k, nprobe, rerank)
-      .select("query_id", "neighbor_id")
-    val brute = Similarity.bruteForceTopK(spark, dir, numQueries, k)
-      .select("query_id", "neighbor_id")
-    val hits = got.join(brute, Seq("query_id", "neighbor_id"), "left_semi")
-      .groupBy("query_id").agg(count(lit(1)).as("n_hits"))
-    brute.select("query_id").distinct()
-      .join(hits, Seq("query_id"), "left")
-      .na.fill(0L, Seq("n_hits"))
+      rerank: Int = 20): DataFrame =
+    Similarity.recallHits(
+        ivfPqIncrTopKQuery(spark, dir, numQueries, k, nprobe, rerank),
+        Similarity.bruteForceTopK(spark, dir, numQueries, k))
       .agg(count(lit(1)).as("n_queries"),
         (sum("n_hits") >= math.ceil(0.9 * k * numQueries).toLong)
           .cast("int").as("recall_ge_90"))
-  }
 
   /** Per-query hit counts of the persisted-index probe vs the TRUE
     * top-k — the [[pqRecallPerQuery]] instrument pointed at the
@@ -621,17 +588,10 @@ object Quantize {
     * cells AND quantized scoring). */
   def ivfPqRecallPerQuery(spark: SparkSession, dir: String,
       numQueries: Int = 10, k: Int = 10, nprobe: Int = 0,
-      rerank: Int = 20): DataFrame = {
-    val got = ivfPqTopKQuery(spark, dir, numQueries, k, nprobe, rerank)
-      .select("query_id", "neighbor_id")
-    val brute = Similarity.bruteForceTopK(spark, dir, numQueries, k)
-      .select("query_id", "neighbor_id")
-    val hits = got.join(brute, Seq("query_id", "neighbor_id"), "left_semi")
-      .groupBy("query_id").agg(count(lit(1)).as("n_hits"))
-    brute.select("query_id").distinct()
-      .join(hits, Seq("query_id"), "left")
-      .na.fill(0L, Seq("n_hits"))
-  }
+      rerank: Int = 20): DataFrame =
+    Similarity.recallHits(
+      ivfPqTopKQuery(spark, dir, numQueries, k, nprobe, rerank),
+      Similarity.bruteForceTopK(spark, dir, numQueries, k))
 
   /** Driver-gate recall row for the persisted IVF-PQ index
     * (`q_ann_ivfpq_recall`): ONE aggregate row asserting the pruned
@@ -688,12 +648,7 @@ object Quantize {
     val brute = Similarity.bruteForceTopKFor(
       Similarity.normalized(spark, dir).where(col("vec_id") % 3 =!= 0),
       gateQueries(spark, dir, numQueries), k)
-      .select("query_id", "neighbor_id")
-    val hits = got.join(brute, Seq("query_id", "neighbor_id"), "left_semi")
-      .groupBy("query_id").agg(count(lit(1)).as("n_hits"))
-    brute.select("query_id").distinct()
-      .join(hits, Seq("query_id"), "left")
-      .na.fill(0L, Seq("n_hits"))
+    Similarity.recallHits(got, brute)
       .agg(count(lit(1)).as("n_queries"),
         (sum("n_hits") >= math.ceil(0.9 * k * numQueries).toLong)
           .cast("int").as("recall_ge_90"))

@@ -55,9 +55,6 @@ object Retrieval {
   def hybridRrfTopK(spark: SparkSession, dir: String,
       numQueries: Int = 5, qTerms: Int = 2, k: Int = 10,
       k0: Int = 60, lexIn: Option[DataFrame] = None): DataFrame = {
-    // the dense side IS bruteForceTopK's memoized frame (identical
-    // corpus, identical query construction) — share it with the ANN
-    // recall gates instead of re-running the scoring scan (§1.2)
     val dense = Similarity.bruteForceTopK(spark, dir, numQueries, k)
       .select(col("query_id"), col("neighbor_id").as("doc_id"),
         col("rank").as("dense_rank"))
@@ -200,22 +197,10 @@ object Retrieval {
   /** Lexical ranks (query_id, doc_id, lex_rank ≤ k) for the first
     * `numQueries` seed documents. */
   private def lexRanks(spark: SparkSession, dir: String,
-      numQueries: Int, qTerms: Int, k: Int): DataFrame =
-    // memoized (r18): the exact hybrid, the IVF hybrid, and the gate
-    // all rank against the IDENTICAL (numQueries × k)-row lexical
-    // list; it is a bounded deterministic rank list — exactly the
-    // Scratch.memo contract — and rebuilding it re-paid the full
-    // tokenize + BM25 scoring pass per query
-    Scratch.memo(spark, s"lex-ranks:$dir:$numQueries:$qTerms:$k") {
-      lexRanksBuild(spark, dir, numQueries, qTerms, k)
-    }
-
-  private def lexRanksBuild(spark: SparkSession, dir: String,
       numQueries: Int, qTerms: Int, k: Int): DataFrame = {
     // deliberately NOT spread (re-measured r18 on the shared
     // bm25TopKWith chain: the text-bearing spread exchange loses to
-    // the single-task tokenize — 1.83 vs 1.15 s on q_bm25_topk); the
-    // memo above is what removes the repeated cost here
+    // the single-task tokenize — 1.83 vs 1.15 s on q_bm25_topk)
     val docs = Tables.documents(spark, dir)
     // one tokenization pass feeds seed-term selection AND scoring
     // (the bm25TopKWith discipline: localCheckpoint, reused 4×).

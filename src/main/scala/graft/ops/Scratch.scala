@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Session-scoped scratch directories for gate queries that BUILD a
   * persisted artifact (IVF-PQ index, BM25 index) before probing it.
@@ -23,18 +23,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the cache only collapses REPEATS of a deterministic build inside
   * one JVM. A failed build stores nothing (the builder runs OUTSIDE
   * the map and only a successful result is published), so a retry
-  * rebuilds cleanly.
+  * rebuilds cleanly. Entries are never evicted before JVM exit: the
+  * directories must outlive the lazy plans that read them, and no
+  * end-of-query hook exists to delete them earlier.
+  *
+  * Only directories live here. DataFrames are never cached across
+  * queries: a frame one query reads more than once is materialized
+  * with a local `localCheckpoint()` in the function that owns the
+  * reads, and its blocks are released once that frame is unreachable.
   *
   * Concurrency: lookups deliberately do NOT use `computeIfAbsent` —
-  * several builds are REENTRANT on these maps (the delete-gate index
-  * copies the shared gate index, the survivor memo builds through the
-  * components memo), and the JDK contract forbids a mapping function
-  * from touching its own map mid-computation: when two keys land in
-  * one hash bin that can livelock or corrupt the bin. Instead: check,
-  * build outside the map, publish with `putIfAbsent`. Builds are
-  * deterministic, so the rare lost race just discards an identical
-  * duplicate (the loser's temp dir / checkpoint blocks are released
-  * on the spot). */
+  * builds are REENTRANT on this map (the delete-gate index copies the
+  * shared gate index), and the JDK contract forbids a mapping
+  * function from touching its own map mid-computation: when two keys
+  * land in one hash bin that can livelock or corrupt the bin.
+  * Instead: check, build outside the map, publish with `putIfAbsent`.
+  * Builds are deterministic, so the rare lost race just discards an
+  * identical duplicate (the loser's temp dir is deleted on the
+  * spot). */
 object Scratch {
 
   private val dirs =
@@ -79,56 +85,5 @@ object Scratch {
       deleteRecursively(base.toFile)
       prior
     } else path
-  }
-
-  // Retention scope: entries are keyed by applicationId and never
-  // evicted — right for this library's one-session-per-JVM processes
-  // (Bench/Verify/RunOne/driver), where the maps die with the JVM. A
-  // host embedding MANY short-lived sessions in one JVM would retain
-  // each stopped session's memo frames (which pin their SparkSession
-  // graph) and cached dirs until exit; such a host should clear via
-  // its own lifecycle hooks rather than this library guessing one.
-  private val frames =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  /** Session-scoped memo for SMALL deterministic gate results — the
-    * [[cached]] discipline applied to a DataFrame instead of a
-    * directory. The recall gates re-run their approximate query AND
-    * the exact brute-force twin that several gates share; each repeat
-    * re-pays codebook training / a full-corpus scoring scan to
-    * reproduce a result that is deterministic within the session.
-    * `computeIfAbsent` + `localCheckpoint` collapses those repeats to
-    * one materialization pinned in executor storage.
-    *
-    * Only memoize results that are (a) bounded — gate top-k lists and
-    * recall instruments, O(queries·k) rows — and
-    * (b) deterministic within one session (seeded builds qualify: the
-    * partition-layout float caveat on Lloyd means cross-SESSION runs
-    * may differ in the last ulp, but a repeat inside one session is
-    * identical by construction, so caching changes nothing a driver
-    * gate can observe). Keyed by application id like [[cached]]:
-    * fresh process, fresh compute.
-    *
-    * ONE sanctioned exception to the bounded rule: the near-dup
-    * component labels ([[Components.nearDupComponents]] `memo=true`)
-    * are one (doc_id, component) row PER DOCUMENT — but two longs per
-    * doc (16 bytes; ~16 GB spread across a cluster at 10⁹ docs,
-    * ~0.00002% of the corpus it labels), stored MEMORY_AND_DISK by
-    * `localCheckpoint` so memory pressure spills it rather than
-    * evicting work, and it is exactly the artifact a production
-    * pipeline materializes once (the component-label table) before
-    * deriving survivors / clean corpus / governance from it. Anything
-    * larger — text, vectors, pair lists — stays out. */
-  def memo(spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    val fullKey = spark.sparkContext.applicationId + ":" + key
-    val hit = frames.get(fullKey)
-    if (hit != null) return hit
-    val built = build.localCheckpoint()
-    val prior = frames.putIfAbsent(fullKey, built)
-    if (prior != null) {
-      // lost a race to an identical build — free the duplicate blocks
-      org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(built)
-      prior
-    } else built
   }
 }

@@ -36,16 +36,12 @@ object Similarity {
     * hash-stable across engines, while raw cosines differ in the last
     * ulp. */
   def bruteForceTopK(spark: SparkSession, dir: String,
-      numQueries: Int = 10, k: Int = 10): DataFrame =
-    // the exact twin every ANN recall gate compares against — memoized
-    // (Scratch discipline) so the full-corpus scoring scan runs once
-    // per (session, dir, queries, k), not once per recall gate
-    Scratch.memo(spark, s"brute:$dir:$numQueries:$k") {
-      val corpus = normalized(spark, dir)
-      bruteForceTopKFor(corpus,
-        corpus.where(col("vec_id") < numQueries)
-          .select(col("vec_id").as("query_id"), col("vec").as("qvec")), k)
-    }
+      numQueries: Int = 10, k: Int = 10): DataFrame = {
+    val corpus = normalized(spark, dir)
+    bruteForceTopKFor(corpus,
+      corpus.where(col("vec_id") < numQueries)
+        .select(col("vec_id").as("query_id"), col("vec").as("qvec")), k)
+  }
 
   /** [[bruteForceTopK]] over an explicit candidate corpus and query
     * set — the form recall gates use when the ground truth must range
@@ -204,17 +200,20 @@ object Similarity {
     * of k). The spec-level recall instrument. */
   def ivfRecallPerQuery(spark: SparkSession, dir: String,
       numQueries: Int = 10, k: Int = 10, cells: Int = 16,
-      nprobe: Int = 0): DataFrame = {
-    val ivf = ivfTopK(spark, dir, numQueries, k, cells, nprobe)
-      .select("query_id", "neighbor_id")
-    val brute = bruteForceTopK(spark, dir, numQueries, k)
-      .select("query_id", "neighbor_id")
-    val hits = ivf.join(brute, Seq("query_id", "neighbor_id"), "left_semi")
-      .groupBy("query_id").agg(count(lit(1)).as("n_hits"))
-    brute.select("query_id").distinct()
-      .join(hits, Seq("query_id"), "left")
-      .na.fill(0L, Seq("n_hits"))
-  }
+      nprobe: Int = 0): DataFrame =
+    recallHits(ivfTopK(spark, dir, numQueries, k, cells, nprobe),
+      bruteForceTopK(spark, dir, numQueries, k))
+
+  /** Per-query hit counts of an approximate top-k `got` against the
+    * true top-k `truth`, both (query_id, neighbor_id, …): one
+    * (query_id, n_hits) row per truth query, 0 when none was found.
+    * `truth` is read once (a left join from its pairs), so its
+    * full-corpus scoring scan runs once per recall query. */
+  private[ops] def recallHits(got: DataFrame, truth: DataFrame): DataFrame =
+    truth.select("query_id", "neighbor_id")
+      .join(got.select(col("query_id"), col("neighbor_id"),
+        lit(1).as("hit")), Seq("query_id", "neighbor_id"), "left")
+      .groupBy("query_id").agg(count(col("hit")).as("n_hits"))
 
   /** Driver-gate recall row for [[ivfTopK]]: ONE aggregate row
     * asserting the IVF path recovers ≥ 90% of all true top-k
@@ -653,18 +652,7 @@ object Similarity {
 
   def semanticDedupClusters(spark: SparkSession, dir: String,
       tau: Double = 0.4, cells: Int = 0, nprobe: Int = 4,
-      twoLevelFrom: Int = 512): DataFrame =
-    // same memo discipline as [[semanticDedupClustersScreened]]: the
-    // survivor view and the registered query share one label build
-    Scratch.memo(spark,
-        s"sem-clusters:$dir:$tau:$cells:$nprobe:$twoLevelFrom") {
-      semanticDedupClustersBuild(spark, dir, tau, cells, nprobe,
-        twoLevelFrom)
-    }
-
-  private def semanticDedupClustersBuild(spark: SparkSession, dir: String,
-      tau: Double, cells: Int, nprobe: Int,
-      twoLevelFrom: Int): DataFrame = {
+      twoLevelFrom: Int = 512): DataFrame = {
     val corpusAll = normalized(spark, dir).cache()
     // exact-duplicate collapse before candidate generation — the
     // [[Components.collapseExact]] discipline applied to VECTORS.
@@ -775,17 +763,8 @@ object Similarity {
   def semanticDedupClustersScreened(spark: SparkSession, dir: String,
       tau: Double = 0.4, eps: Double = 5e-4, cells: Int = 0,
       nprobe: Int = 4, twoLevelFrom: Int = 512): DataFrame =
-    // session-memoized (r18, guide §1.2 "don't recompute"): the gate
-    // composition (trainingShardsSemanticGate → semanticDropIds) and
-    // the registered query both need the identical label frame; the
-    // memo is the sanctioned cluster-label-table exception in
-    // [[Scratch.memo]] — one (vec_id, cluster) row per vector, the
-    // artifact a production pipeline materializes once per corpus
-    Scratch.memo(spark,
-        s"sem-screened:$dir:$tau:$eps:$cells:$nprobe:$twoLevelFrom") {
-      semanticDedupClustersScreenedFor(normalized(spark, dir), tau, eps,
-        cells, nprobe, twoLevelFrom)
-    }
+    semanticDedupClustersScreenedFor(normalized(spark, dir), tau, eps,
+      cells, nprobe, twoLevelFrom)
 
   /** [[semanticDedupClustersScreened]] over any (vec_id, vec) frame of
     * unit vectors. */
@@ -962,12 +941,9 @@ object Similarity {
       normalize(zip_with(col("vec"), reverse(col("vec")),
         (a, b) => a + lit(0.001) * b)).as("vec"))
     val augmented = base.unionByName(copies).unionByName(nearCopies)
-    // memoized label table (r18, the trainingShardsSemanticGate
-    // discipline): the planted corpus is a pure function of the dir,
-    // so the bench's repeat pass reuses one screen build
-    val cent = Scratch.memo(spark, s"sem-centroid-planted:$dir") {
-      semanticDedupCentroidFor(augmented)
-    }
+    // the label table is read three times below (two planted-pair
+    // joins and the count aggregate): materialize it once
+    val cent = semanticDedupCentroidFor(augmented).localCheckpoint()
     // planted pair (i, i+off) is caught iff both sides carry the same
     // cluster label
     def caught(off: Long): Long = cent.as("x")

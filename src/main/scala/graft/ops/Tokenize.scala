@@ -177,45 +177,21 @@ object Tokenize {
     (merges.toSeq, words)
   }
 
-  /** The trained merge table as a DataFrame — memoized per (session,
-    * dir): the trainer is deterministic, so every gate in one session
-    * rides one training run. Bounded: nMerges rows. One run seeds the
-    * [[bpeWords]] memo too (Scratch builds outside its map, so the
-    * nested publish is the documented reentrancy-safe pattern). */
+  /** The trained merge table as a DataFrame: (rank, left_sym,
+    * right_sym, pair_count), nMerges rows. */
   def bpeMerges(spark: SparkSession, dir: String,
-      nMerges: Int = 16): DataFrame =
-    Scratch.memo(spark, s"bpe-merges:$dir:$nMerges") {
-      import spark.implicits._
-      val (m, words) =
-        runTrain(Tables.documents(spark, dir), nMerges, keepWords = true)
-      // the memo checkpoints its OWN copy of the vocabulary table —
-      // release the trainer's original or it stays pinned in the
-      // block manager, unreachable, for the session (the Components
-      // checkpoint-retention lesson)
-      Scratch.memo(spark, s"bpe-words:$dir:$nMerges")(words)
-      org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(words)
-      m.toDF("rank", "left_sym", "right_sym", "pair_count")
-    }
+      nMerges: Int = 16): DataFrame = {
+    import spark.implicits._
+    bpeTrainMerges(spark, dir, nMerges)
+      .toDF("rank", "left_sym", "right_sym", "pair_count")
+  }
 
   /** The fully-encoded vocabulary (word, syms, wc) — the trainer's own
-    * final state, memoized: encoding a corpus never re-applies merges.
-    * Bounded by the vocabulary (10⁷ words in production — the same
-    * order as the sanctioned component-label memo). */
+    * final state, checkpointed: encoding a corpus never re-applies
+    * merges. Bounded by the vocabulary. */
   def bpeWords(spark: SparkSession, dir: String,
-      nMerges: Int = 16): DataFrame = {
-    bpeMerges(spark, dir, nMerges) // ensure one training run published both
-    var orig: DataFrame = null
-    val out = Scratch.memo(spark, s"bpe-words:$dir:$nMerges") {
-      orig = runTrain(Tables.documents(spark, dir), nMerges,
-        keepWords = true)._2
-      orig
-    }
-    // memo re-checkpointed its own copy (when this fallback built at
-    // all) — release the trainer's original
-    if (orig != null)
-      org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(orig)
-    out
-  }
+      nMerges: Int = 16): DataFrame =
+    runTrain(Tables.documents(spark, dir), nMerges, keepWords = true)._2
 
   /** Gate for the (non-SQL-expressible) iterative trainer. The first
     * three columns are a TRUE differential test — DuckDB recomputes
@@ -256,15 +232,15 @@ object Tokenize {
       |FROM s ORDER BY pair_count DESC, l, r LIMIT 1""".stripMargin
 
   /** Encoded distinct words: (word, wc, encoded, n_tokens) — read
-    * straight off the trainer's memoized final state ([[bpeWords]]):
+    * straight off the trainer's final state ([[bpeWords]]):
     * no merge is ever re-applied to encode, and the vocabulary table
     * is bit-identical to what training produced. (A foldLeft of
     * nMerges stacked `aggregate` lambdas was the first cut — nested
     * HOFs re-evaluate their child per element and went
     * exponential-interpreted, 233 s at sf1 for a vocabulary the
     * trainer walks in milliseconds per round.) */
-  private def encodedWords(spark: SparkSession, dir: String): DataFrame =
-    bpeWords(spark, dir)
+  private def encodedWords(words: DataFrame): DataFrame =
+    words
       .withColumn("encoded", array_join(col("syms"), SEP))
       .withColumn("n_tokens", size(col("syms")))
 
@@ -273,8 +249,12 @@ object Tokenize {
     * run needs, WITHOUT re-scanning text per merge: distinct words
     * encode once, then one broadcast join onto the (doc, word, tf)
     * frequencies and one doc_id partial-agg shuffle. */
-  def bpeEncodeCounts(spark: SparkSession, dir: String): DataFrame = {
-    val perWord = encodedWords(spark, dir)
+  def bpeEncodeCounts(spark: SparkSession, dir: String): DataFrame =
+    bpeEncodeCountsFor(spark, dir, encodedWords(bpeWords(spark, dir)))
+
+  private def bpeEncodeCountsFor(spark: SparkSession, dir: String,
+      encoded: DataFrame): DataFrame = {
+    val perWord = encoded
       .select(col("word").as("term"), col("n_tokens"),
         length(col("word")).as("n_chars_w"))
     // no broadcast hint: a production vocabulary is 10⁷ words — AQE
@@ -295,14 +275,16 @@ object Tokenize {
     * word reproduces the word exactly — encoding is a segmentation,
     * never a rewrite) are self-gates the constants pin. */
   def bpeEncodeGate(spark: SparkSession, dir: String): DataFrame = {
-    val counts = bpeEncodeCounts(spark, dir)
+    // one training run feeds both the counts and the decode check
+    val encoded = encodedWords(bpeWords(spark, dir))
+    val counts = bpeEncodeCountsFor(spark, dir, encoded)
     val totals = counts.agg(
       sum("n_tokens_ws").cast("long").as("total_ws"),
       sum("n_chars_words").cast("long").as("total_chars"),
       min((col("n_tokens_ws") <= col("n_tokens_bpe") &&
         col("n_tokens_bpe") <= col("n_chars_words")).cast("int"))
         .as("bounds_ok"))
-    val decode = encodedWords(spark, dir)
+    val decode = encoded
       .agg(min((org.apache.spark.sql.functions.replace(
         col("encoded"), lit(SEP), lit("")) === col("word")).cast("int"))
         .as("decode_ok"))

@@ -30,6 +30,31 @@ class CurationSpec extends AnyFunSuite with SharedSpark {
       naive.collect().map(r => (r.getLong(0), r.getString(3))).toMap)
   }
 
+  test("q_near_dup_components and q_curriculum see a documents table " +
+    "rewritten between two runs in one session") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-rewritten-docs").toString
+    org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(sf), new java.io.File(dir))
+    def run(q: String): Array[org.apache.spark.sql.Row] =
+      graft.SparkEntry.queries(q)(spark, dir).collect()
+    val allIds = spark.read.parquet(s"$sf/documents.parquet")
+      .select("doc_id").as[Long].collect().toSet
+    assert(run("q_near_dup_components").map(_.getLong(0)).toSet === allIds)
+    assert(run("q_curriculum").nonEmpty)
+    // a different document set under the same path: the even ids only
+    spark.read.parquet(s"$sf/documents.parquet")
+      .where(col("doc_id") % 2 === 0)
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val newIds = allIds.filter(_ % 2 == 0)
+    assert(run("q_near_dup_components").map(_.getLong(0)).toSet === newIds)
+    // curriculum: only graded new documents, steps 1..n with no gap
+    val sched = run("q_curriculum")
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("step")))
+    assert(sched.nonEmpty && sched.forall(d => newIds(d._1)))
+    assert(sched.map(_._2).sorted.toSeq === (1L to sched.length.toLong))
+  }
+
   test("pplBuckets: per-source tercile sizes differ by at most one and " +
     "bucket fluency ranges are ordered head ≥ middle ≥ tail") {
     val rows = Classify.pplBucketReport(spark, sf).collect()

@@ -268,6 +268,21 @@ class LinkRankSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
+  test("q_link_rank_bucketed rewrites its edge table when the catalog " +
+    "no longer holds it") {
+    val run = () => SparkEntry.queries("q_link_rank_bucketed")(spark, dir)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val first = run()
+    // a new application's catalog starts without the table
+    val table = "graft_edges_b" + java.security.MessageDigest
+      .getInstance("MD5")
+      .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map("%02x".format(_)).mkString
+    spark.sql(s"DROP TABLE `$table`")
+    try assert(run() === first)
+    finally spark.sql(s"DROP TABLE IF EXISTS `$table`")
+  }
+
   test("linkRankTop is the total-order head of the full frame") {
     val full = LinkRank.linkRank(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
