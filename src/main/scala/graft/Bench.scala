@@ -54,8 +54,8 @@ object Bench {
     // media family, the r11 q_corpus_mix..q_cube window — neither
     // reproducible in isolation). Separated passes keep the same total
     // work and still time cold plans (plans aren't cached across
-    // runs); one-off JIT/scratch-build costs land in pass A and min()
-    // picks the steady pass, exactly as before.
+    // runs); one-off JIT costs land in pass A and min() picks the
+    // steady pass, exactly as before.
     // SPARK_GRAFT_BENCH_STREAMONLY=1 empties the board and runs ONLY
     // the streaming-throughput section — the sbt-bound part — so a
     // scale vintage can refresh its stream numbers without re-paying
@@ -114,8 +114,7 @@ object Bench {
       val nEvents = graft.core.Tables.events(spark, sfDir).count()
       // split into multiple files so maxFilesPerTrigger yields real
       // micro-batches (the source table is a single parquet file)
-      val chunkDir = java.nio.file.Files
-        .createTempDirectory("graft-bench-stream").toString
+      val chunkDir = graft.ops.Scratch.dir("graft-bench-stream")
       spark.conf.set("spark.sql.parquet.outputTimestampType",
         "TIMESTAMP_MICROS")
       graft.core.Tables.events(spark, sfDir)
@@ -132,8 +131,8 @@ object Bench {
       val q = graft.streaming.StreamAggregator.withStreamShuffle(spark) {
         agg.writeStream
           .outputMode("complete").format("memory").queryName(name)
-          .option("checkpointLocation", java.nio.file.Files
-            .createTempDirectory("graft-bench-ckpt").toString)
+          .option("checkpointLocation",
+            graft.ops.Scratch.dir("graft-bench-ckpt"))
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
       }

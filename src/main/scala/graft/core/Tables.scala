@@ -252,10 +252,6 @@ object Tables {
     // data-proportional splits past it
     val target = math.max(spark.sparkContext.defaultParallelism.toLong,
       (bytes + maxSplit - 1) / maxSplit)
-    if (sys.env.contains("GRAFT_PACK_DEBUG"))
-      // scalastyle:off println — opt-in calibration instrument
-      println(s"[packedScan] $path bytes=$bytes target=$target " +
-        s"natural=${df.rdd.getNumPartitions}")
     df.coalesce(math.min(target, Int.MaxValue.toLong).toInt)
   }
 

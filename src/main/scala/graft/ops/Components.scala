@@ -199,9 +199,6 @@ object Components {
       }
       val jumped = cur
       changed = jumped.where(col("component") =!= col("old")).count()
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(s"[cc] round $iter changed=$changed " +
-          s"t=${System.nanoTime() / 1000000}ms")
       // jumped is materialized (eager checkpoint) — the previous
       // round's blocks and this round's intermediate jumps are
       // unreachable now; free them

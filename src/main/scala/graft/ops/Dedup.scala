@@ -906,31 +906,26 @@ object Dedup {
     * and oracle as [[dedupIncremental]], but the history lives where
     * a production pipeline keeps it: fingerprints in the fp-BUCKETED
     * [[graft.streaming.Ingest]] store and the epoch filters in a
-    * [[buildBloomStore]] store, both built once per session (Scratch —
-    * the once-per-epoch layout cost) and read by every repeat. The
-    * hash match proves the whole steady-state path
+    * [[buildBloomStore]] store, both built by every call into a fresh
+    * scratch directory (the once-per-epoch layout cost). The hash
+    * match proves the whole steady-state path
     * ([[dedupAgainstIngestStore]]: cogroup screen + exchange-free,
     * sort-free confirm) result-invariant vs the from-scratch oracle. */
   def dedupIncrementalStore(spark: SparkSession, dir: String): DataFrame = {
     val shards = 8
-    val md5 = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    val base = Scratch.cached(spark, s"dedupstores:$md5",
-        "graft-dedup-store") { path =>
-      val docs = Tables.documents(spark, dir)
-      val history = docs.where(!col("source").isin("src0", "src1"))
-        .select(TextStats.fingerprint(col("text")).as("fp")).distinct()
-        .localCheckpoint()
-      // one append = one file per bucket (the aligned repartition in
-      // appendToStore), so the sort-free scan precondition holds
-      // without a compaction pass
-      graft.streaming.Ingest.appendToStore(spark, s"$path/fps", history,
-        buckets = spark.conf.get("spark.sql.shuffle.partitions").toInt)
-      buildBloomStore(history, s"$path/bloom", shards,
-        itemsPerShard = math.max(1L, (history.count() + shards - 1) / shards),
-        coversEpoch = graft.streaming.Ingest.storeEpoch(spark, s"$path/fps"))
-    }
+    val base = Scratch.dir("graft-dedup-store")
+    val history = Tables.documents(spark, dir)
+      .where(!col("source").isin("src0", "src1"))
+      .select(TextStats.fingerprint(col("text")).as("fp")).distinct()
+      .localCheckpoint()
+    // one append = one file per bucket (the aligned repartition in
+    // appendToStore), so the sort-free scan precondition holds
+    // without a compaction pass
+    graft.streaming.Ingest.appendToStore(spark, s"$base/fps", history,
+      buckets = spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    buildBloomStore(history, s"$base/bloom", shards,
+      itemsPerShard = math.max(1L, (history.count() + shards - 1) / shards),
+      coversEpoch = graft.streaming.Ingest.storeEpoch(spark, s"$base/fps"))
     dedupAgainstIngestStore(spark,
       Tables.documents(spark, dir).where(col("source").isin("src0", "src1")),
       s"$base/fps", s"$base/bloom", shards)

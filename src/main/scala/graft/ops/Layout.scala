@@ -289,9 +289,7 @@ object Layout {
   }
 
   /** The write half of [[zorderScanMeasure]]: events filed twice
-    * (z-clustered vs x-sorted) under `outBase` — deterministic per
-    * (dir, numFiles), so the gate query Scratch-caches it and repeat
-    * probes pay only the pruned scans. */
+    * (z-clustered vs x-sorted) under `outBase`. */
   def zorderScanWrite(spark: SparkSession, dir: String, outBase: String,
       numFiles: Int = 64): Unit = {
     val n = 256
@@ -369,28 +367,22 @@ object Layout {
   /** Driver-gate form of the real-reader proof: the z-layout must
     * deliver the SAME matching rows while reading STRICTLY fewer from
     * disk than the single-column sort — SF-checked on every verify
-    * run like the ANN recall gates, not only in LayoutSpec. The two
-    * layout writes are session-cached (Scratch) — first toucher pays
-    * the filing cost, repeat probes pay two pruned scans. File count
-    * scales with volume (~400 events per file, the compaction knob a
-    * lake would set from target file size): a fixed 64 at sf1+ makes
-    * files so large the day dimension's per-file span saturates —
-    * the recorded 64-file sf0.1 sensitivity. */
+    * run like the ANN recall gates, not only in LayoutSpec. Every
+    * call files both layouts into a fresh scratch directory and then
+    * pays two pruned scans. File count scales with volume (~400
+    * events per file, the compaction knob a lake would set from
+    * target file size): a fixed 64 at sf1+ makes files so large the
+    * day dimension's per-file span saturates — the recorded 64-file
+    * sf0.1 sensitivity. */
   def zorderScanGate(spark: SparkSession, dir: String): DataFrame = {
-    val md5 = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    val base = Scratch.cached(spark, s"zorderscan:$md5",
-      "graft-zorder-scan") { path =>
-      // file count derives from volume INSIDE the one-time write (no
-      // per-probe corpus action): ~400 events per simulated file —
-      // the grain where sf0.1 lands at the proven 256-file regime
-      // (0.39x rows read); 64 files at sf0.1 is the RECORDED
-      // too-shallow-day sensitivity and would flip the gate
-      val nEvents = Tables.events(spark, dir).count()
-      val numFiles = math.max(64L, math.min(4096L, nEvents / 400L)).toInt
-      zorderScanWrite(spark, dir, path, numFiles)
-    }
+    val base = Scratch.dir("graft-zorder-scan")
+    // ~400 events per simulated file — the grain where sf0.1 lands at
+    // the proven 256-file regime (0.39x rows read); 64 files at sf0.1
+    // is the RECORDED too-shallow-day sensitivity and would flip the
+    // gate
+    val nEvents = Tables.events(spark, dir).count()
+    val numFiles = math.max(64L, math.min(4096L, nEvents / 400L)).toInt
+    zorderScanWrite(spark, dir, base, numFiles)
     val r = zorderScanProbe(spark, dir, base)
       .map(t => t._1 -> (t._2, t._3)).toMap
     val (zRead, zMatch) = (r("zorder")._1, r("zorder")._2)

@@ -537,11 +537,8 @@ object Quantize {
   def ivfPqTopKQuery(spark: SparkSession, dir: String,
       numQueries: Int = 10, k: Int = 10, nprobe: Int = 0,
       rerank: Int = 20): DataFrame = {
-    // one scratch build per (session, SF): q_ann_ivfpq and its recall
-    // twin probe the SAME index — the build cost stays in the bench
-    // exactly once, and /tmp holds one copy, removed at JVM exit
-    val idx = Scratch.cached(spark, s"ivfpq-gate:$dir", "graft-ivfpq-gate") {
-      p => buildIvfPqIndex(spark, dir, p) }
+    val idx = Scratch.dir("graft-ivfpq-gate")
+    buildIvfPqIndex(spark, dir, idx)
     ivfPqTopK(spark, idx, gateQueries(spark, dir, numQueries),
       k, nprobe, rerank)
   }
@@ -557,12 +554,10 @@ object Quantize {
   def ivfPqIncrTopKQuery(spark: SparkSession, dir: String,
       numQueries: Int = 10, k: Int = 10, nprobe: Int = 0,
       rerank: Int = 20): DataFrame = {
-    val idx = Scratch.cached(spark, s"ivfpq-incr:$dir", "graft-ivfpq-incr") {
-      p =>
-        val vecs = Similarity.normalized(spark, dir).select("vec_id", "vec")
-        buildIvfPqIndexFor(vecs.where(col("vec_id") % 2 === 0), p)
-        appendToIvfPqIndex(spark, p, vecs.where(col("vec_id") % 2 === 1))
-    }
+    val idx = Scratch.dir("graft-ivfpq-incr")
+    val vecs = Similarity.normalized(spark, dir).select("vec_id", "vec")
+    buildIvfPqIndexFor(vecs.where(col("vec_id") % 2 === 0), idx)
+    appendToIvfPqIndex(spark, idx, vecs.where(col("vec_id") % 2 === 1))
     ivfPqTopK(spark, idx, gateQueries(spark, dir, numQueries),
       k, nprobe, rerank)
   }
@@ -622,26 +617,11 @@ object Quantize {
   def ivfPqDeletedRecall(spark: SparkSession, dir: String,
       numQueries: Int = 10, k: Int = 10, nprobe: Int = 0,
       rerank: Int = 20): DataFrame = {
-    // The tombstone write is the only difference from the shared gate
-    // index ([[ivfPqTopKQuery]]'s Scratch key), and deletes never touch
-    // data files — so this gate COPIES that index and tombstones the
-    // copy instead of re-running the whole k-means + PQ train + write
-    // (was a second full build, the most expensive row of the sf0.1
-    // bench). The copy keeps isolation: other gates keep probing the
-    // un-tombstoned original.
-    val idx = Scratch.cached(spark, s"ivfpq-del:$dir", "graft-ivfpq-del") {
-      p =>
-        val shared = Scratch.cached(spark, s"ivfpq-gate:$dir",
-          "graft-ivfpq-gate") { sp => buildIvfPqIndex(spark, dir, sp) }
-        val conf = spark.sessionState.newHadoopConf()
-        val src = new org.apache.hadoop.fs.Path(shared)
-        val dst = new org.apache.hadoop.fs.Path(p)
-        val fs = src.getFileSystem(conf)
-        org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst, false, conf)
-        deleteFromIvfPqIndex(spark, p,
-          Similarity.normalized(spark, dir).select("vec_id")
-            .where(col("vec_id") % 3 === 0))
-    }
+    val idx = Scratch.dir("graft-ivfpq-del")
+    buildIvfPqIndex(spark, dir, idx)
+    deleteFromIvfPqIndex(spark, idx,
+      Similarity.normalized(spark, dir).select("vec_id")
+        .where(col("vec_id") % 3 === 0))
     val got = ivfPqTopK(spark, idx, gateQueries(spark, dir, numQueries),
         k, nprobe, rerank)
       .select("query_id", "neighbor_id").localCheckpoint()
@@ -703,7 +683,7 @@ object Quantize {
     * cadence curve. Ground truth is the exact brute-force top-k over
     * the full corpus. */
   def ivfPqDriftCounts(spark: SparkSession, base: DataFrame,
-      scratchTag: String, batches: Int, alpha: Double = 0.15,
+      batches: Int, alpha: Double = 0.15,
       numQueries: Int = 10, k: Int = 10, cells: Int = 16,
       nprobe: Int = 0, rerank: Int = 20): (Long, Long, Long) = {
     val batchFrames = (1 to batches).map(b => driftedBatch(base, b, alpha))
@@ -714,15 +694,17 @@ object Quantize {
     // them (guide §2.6, the Par discipline) so one chain's stragglers
     // back-fill with the other's tasks
     val (stale, fresh) = graft.core.Par.both(
-      Scratch.cached(spark,
-        s"ivfpq-drift-stale:$scratchTag:$batches:$alpha:$cells",
-        "graft-ivfpq-drift") { p =>
+      {
+        val p = Scratch.dir("graft-ivfpq-drift")
         buildIvfPqIndexFor(base, p, cells)
         batchFrames.foreach(bf => appendToIvfPqIndex(spark, p, bf))
+        p
       },
-      Scratch.cached(spark,
-        s"ivfpq-drift-fresh:$scratchTag:$batches:$alpha:$cells",
-        "graft-ivfpq-fresh") { p => buildIvfPqIndexFor(full, p, cells) })
+      {
+        val p = Scratch.dir("graft-ivfpq-fresh")
+        buildIvfPqIndexFor(full, p, cells)
+        p
+      })
     val queries = driftedBatch(base.where(col("vec_id") < numQueries),
         batches, alpha)
       .select(col("vec_id").as("query_id"), col("vec").as("qvec"))
@@ -790,7 +772,7 @@ object Quantize {
     val base = Similarity.normalized(spark, dir).select("vec_id", "vec")
       .localCheckpoint()
     val (staleHits, freshHits, nTrue) = ivfPqDriftCounts(spark, base,
-      dir, batches, alpha, numQueries, k, nprobe = nprobe, rerank = rerank)
+      batches, alpha, numQueries, k, nprobe = nprobe, rerank = rerank)
     spark.range(1).select(
       lit(numQueries.toLong).as("n_queries"),
       lit(if (staleHits * 10L >= nTrue * 7L) 1 else 0)

@@ -263,24 +263,19 @@ object Sketches {
     * ([[appendEpochToCmsStore]] — never re-deriving w), and the
     * merged result must hash-match DuckDB's from-scratch sketch
     * (width over epoch 1, buckets over ALL events): build + append +
-    * merge ≡ one-pass, at every SF the driver runs. Session-cached
-    * build (Scratch), first toucher pays. */
+    * merge ≡ one-pass, at every SF the oracle check runs. Every call
+    * builds its own store in a fresh scratch directory. */
   def cmsStoreMergedQuery(spark: SparkSession, dir: String): DataFrame = {
-    val md5 = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    val store = Scratch.cached(spark, s"cmsstore:$md5",
-        "graft-cms-store") { path =>
-      val raw = Tables.events(spark, dir)
-      def me(df: DataFrame): DataFrame =
-        df.select(date_trunc("month", to_date(col("ts"))).cast("date")
-          .as("month"), col("user_id"))
-      val epoch1 = me(raw.where(dayofmonth(col("ts")) <= 15))
-      val epoch2 = me(raw.where(dayofmonth(col("ts")) > 15))
-      monthlySketchAt(epoch1, cmsWidthFrame(epoch1))
-        .write.mode("overwrite").parquet(path)
-      appendEpochToCmsStore(spark, epoch2, path)
-    }
+    val store = Scratch.dir("graft-cms-store")
+    val raw = Tables.events(spark, dir)
+    def me(df: DataFrame): DataFrame =
+      df.select(date_trunc("month", to_date(col("ts"))).cast("date")
+        .as("month"), col("user_id"))
+    val epoch1 = me(raw.where(dayofmonth(col("ts")) <= 15))
+    val epoch2 = me(raw.where(dayofmonth(col("ts")) > 15))
+    monthlySketchAt(epoch1, cmsWidthFrame(epoch1))
+      .write.mode("overwrite").parquet(store)
+    appendEpochToCmsStore(spark, epoch2, store)
     cmsStoreMerged(spark, store)
   }
 

@@ -580,8 +580,8 @@ object Terms {
     * the identical DuckDB oracle. */
   def bm25IndexedTopKQuery(spark: SparkSession, dir: String,
       k: Int = 10): DataFrame = {
-    val idx = Scratch.cached(spark, s"bm25-gate:$dir", "graft-bm25-gate") {
-      p => buildBm25Index(spark, dir, p) }
+    val idx = Scratch.dir("graft-bm25-gate")
+    buildBm25Index(spark, dir, idx)
     val dfreq = spark.read.parquet(s"$idx/postings")
       .groupBy("term").agg(count(lit(1)).as("df"))
     bm25IndexedTopK(spark, idx, dfRankQueries(dfreq), k)
@@ -597,12 +597,10 @@ object Terms {
     * diverged. */
   def bm25AppendedTopKQuery(spark: SparkSession, dir: String,
       k: Int = 10): DataFrame = {
-    val idx = Scratch.cached(spark, s"bm25-incr:$dir", "graft-bm25-incr") {
-      p =>
-        val docs = Tables.documents(spark, dir).select("doc_id", "text")
-        buildBm25IndexFor(docs.where(col("doc_id") % 2 === 0), p)
-        appendToBm25Index(spark, p, docs.where(col("doc_id") % 2 === 1))
-    }
+    val idx = Scratch.dir("graft-bm25-incr")
+    val docs = Tables.documents(spark, dir).select("doc_id", "text")
+    buildBm25IndexFor(docs.where(col("doc_id") % 2 === 0), idx)
+    appendToBm25Index(spark, idx, docs.where(col("doc_id") % 2 === 1))
     val dfreq = spark.read.parquet(s"$idx/postings")
       .groupBy("term").agg(count(lit(1)).as("df"))
     bm25IndexedTopK(spark, idx, dfRankQueries(dfreq), k)
@@ -620,13 +618,11 @@ object Terms {
     * contribution. */
   def bm25DeletedTopKQuery(spark: SparkSession, dir: String,
       k: Int = 10): DataFrame = {
-    val idx = Scratch.cached(spark, s"bm25-del:$dir", "graft-bm25-del") {
-      p =>
-        buildBm25Index(spark, dir, p)
-        deleteFromBm25Index(spark, p,
-          Tables.documents(spark, dir).select("doc_id")
-            .where(col("doc_id") % 3 === 0))
-    }
+    val idx = Scratch.dir("graft-bm25-del")
+    buildBm25Index(spark, dir, idx)
+    deleteFromBm25Index(spark, idx,
+      Tables.documents(spark, dir).select("doc_id")
+        .where(col("doc_id") % 3 === 0))
     val dfreq = liveBm25Postings(spark, idx)
       .groupBy("term").agg(count(lit(1)).as("df"))
     bm25IndexedTopK(spark, idx, dfRankQueries(dfreq), k)

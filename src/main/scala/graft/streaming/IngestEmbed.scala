@@ -452,23 +452,19 @@ object IngestEmbed {
       Quantize.driftedBatch(normalizedFor(slice(b)), b, alpha)
         .select(col("vec_id"), col("vec")
           .cast("array<float>").as("embedding"))
-    val stale = Scratch.cached(spark,
-      s"ingest-drift-stale:$dir:$batches:$alpha:$tau",
-      "graft-ingest-drift") { p =>
-      applyEmbedBatch(spark, slice(0), 0L, p, tau = tau)
-      (1 to batches).foreach(b =>
-        applyEmbedBatch(spark, driftedSlice(b), b.toLong, p, tau = tau))
-    }
-    val rebuilt = Scratch.cached(spark,
-      s"ingest-drift-rebuilt:$dir:$batches:$alpha:$tau",
-      "graft-ingest-rebuilt") { p =>
-      val conf = spark.sessionState.newHadoopConf()
-      val src = new Path(stale)
-      val dst = new Path(p)
-      val fs = src.getFileSystem(conf)
-      org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst, false, conf)
-      rebuildEmbedIndex(spark, p)
-    }
+    val stale = Scratch.dir("graft-ingest-drift")
+    applyEmbedBatch(spark, slice(0), 0L, stale, tau = tau)
+    (1 to batches).foreach(b =>
+      applyEmbedBatch(spark, driftedSlice(b), b.toLong, stale, tau = tau))
+    // the probe below reads both the stale store and its rebuild, so
+    // the rebuild runs on a copy
+    val rebuilt = Scratch.dir("graft-ingest-rebuilt")
+    val conf = spark.sessionState.newHadoopConf()
+    val src = new Path(stale)
+    val fs = src.getFileSystem(conf)
+    org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, new Path(rebuilt),
+      false, conf)
+    rebuildEmbedIndex(spark, rebuilt)
     val (queries, truth) =
       graft.core.Par.labeled(spark, "drift-gate: queries+truth") {
         val q = Quantize.driftedBatch(
@@ -494,10 +490,6 @@ object IngestEmbed {
     val (staleHits, freshHits) = graft.core.Par.both(
       hitsOf(stale), hitsOf(rebuilt))
     val nTrue = truth.count()
-    if (sys.env.contains("GRAFT_DRIFT_DEBUG"))
-      // scalastyle:off println — calibration instrument, opt-in only
-      println(f"[ingest-drift] stale=${staleHits.toDouble / nTrue}%.3f " +
-        f"rebuilt=${freshHits.toDouble / nTrue}%.3f n_true=$nTrue")
     spark.range(1).select(
       lit(numQueries.toLong).as("n_queries"),
       lit(if (staleHits * 10L >= nTrue * 5L) 1 else 0)

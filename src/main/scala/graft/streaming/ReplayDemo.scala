@@ -1,10 +1,9 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.core.Session
+import graft.ops.Scratch
 
 /** Runnable end-to-end demo of the reference's full loop, CONCURRENT
   * like the original (`upload.py` sleeps 1 s per day against a live
@@ -21,7 +20,7 @@ object ReplayDemo {
     val spark = Session.build(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
 
-    val watched = Files.createTempDirectory("graft-replay-demo").toString
+    val watched = Scratch.dir("graft-replay-demo")
     println(s"[demo] live replay of $sfDir events into $watched")
     val t0 = new java.sql.Timestamp(System.currentTimeMillis())
     val days = IncrementalProducer.eventDays(spark, sfDir)
@@ -32,8 +31,7 @@ object ReplayDemo {
       StreamAggregator.replayStream(spark, s"$watched/day=*"))
     val query = agg.writeStream
       .outputMode("complete").format("memory").queryName("result_df_query")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-demo-ckpt").toString)
+      .option("checkpointLocation", Scratch.dir("graft-demo-ckpt"))
       .trigger(Trigger.ProcessingTime("500 milliseconds"))
       .start()
 

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
@@ -109,11 +107,11 @@ object StreamAggregator {
     * `result_df_query` (`notebooks/stream.ipynb:145-148 (cell 2)`), run
     * to completion with Trigger.AvailableNow for determinism, returning
     * the result table. Checkpoint is explicit (the reference omits it —
-    * SURVEY §2.9 flags that as a rebuild fix). */
+    * SURVEY §2.9 flags that as a rebuild fix) and lives in a per-call
+    * scratch directory, deleted at JVM exit. */
   def runToMemoryTable(spark: SparkSession, agg: DataFrame,
       queryName: String): DataFrame = {
-    val checkpoint = Files.createTempDirectory(s"graft-ckpt-$queryName")
-      .toString
+    val checkpoint = graft.ops.Scratch.dir(s"graft-ckpt-$queryName")
     val q = withStreamShuffle(spark) {
       agg.writeStream
         .outputMode(OutputMode.Complete())

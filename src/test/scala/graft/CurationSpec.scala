@@ -36,16 +36,32 @@ class CurationSpec extends AnyFunSuite with SharedSpark {
       .createTempDirectory("graft-rewritten-docs").toString
     org.apache.commons.io.FileUtils.copyDirectory(
       new java.io.File(sf), new java.io.File(dir))
-    def run(q: String): Array[org.apache.spark.sql.Row] =
-      graft.SparkEntry.queries(q)(spark, dir).collect()
+    def runOn(d: String, q: String): Array[org.apache.spark.sql.Row] =
+      graft.SparkEntry.queries(q)(spark, d).collect()
+    def run(q: String): Array[org.apache.spark.sql.Row] = runOn(dir, q)
     val allIds = spark.read.parquet(s"$sf/documents.parquet")
       .select("doc_id").as[Long].collect().toSet
     assert(run("q_near_dup_components").map(_.getLong(0)).toSet === allIds)
     assert(run("q_curriculum").nonEmpty)
-    // a different document set under the same path: the even ids only
+    // an index build (BM25) and a centroid build (IVF k-means) over
+    // the old tables: neither may serve a later run
+    val indexed = Seq("q_bm25_indexed", "q_cluster_mix")
+    indexed.foreach(q => assert(run(q).nonEmpty))
+    // different documents and embeddings under the same path: the
+    // even ids only
     spark.read.parquet(s"$sf/documents.parquet")
       .where(col("doc_id") % 2 === 0)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    spark.read.parquet(s"$sf/embeddings.parquet")
+      .where(col("vec_id") % 2 === 0)
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val fresh = java.nio.file.Files
+      .createTempDirectory("graft-rewritten-fresh").toString
+    org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(dir), new java.io.File(fresh))
+    for (q <- indexed)
+      assert(run(q).map(_.toString).sorted.toSeq ===
+        runOn(fresh, q).map(_.toString).sorted.toSeq, q)
     val newIds = allIds.filter(_ % 2 == 0)
     assert(run("q_near_dup_components").map(_.getLong(0)).toSet === newIds)
     // curriculum: only graded new documents, steps 1..n with no gap
