@@ -49,4 +49,21 @@ object Session {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Run `body` with `settings` in `spark`'s session conf, then put back
+    * exactly what the caller had: each key's explicit value, or no value
+    * where the caller set none (so `spark.conf.getAll` is unchanged). The
+    * one scoped form of a session-conf change: a bare `conf.set` would
+    * leak into every later plan and write of the caller's session. */
+  def withConf[T](spark: SparkSession, settings: (String, String)*)(
+      body: => T): T = {
+    val explicit = spark.conf.getAll
+    val prev = settings.map { case (k, _) => k -> explicit.get(k) }
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

@@ -245,12 +245,8 @@ object Dedup {
       else {
         val key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
         val dup = graft.streaming.Ingest.bucketedConfLock.synchronized {
-          val prev = spark.conf.getOption(key)
-          spark.conf.set(key, "false")
-          try storeFpsIn(historyFps, fps).localCheckpoint()
-          finally prev match {
-            case Some(v) => spark.conf.set(key, v)
-            case None => spark.conf.unset(key)
+          graft.core.Session.withConf(spark, key -> "false") {
+            storeFpsIn(historyFps, fps).localCheckpoint()
           }
         }
         maybes.join(dup, Seq("fp"), "left_anti")

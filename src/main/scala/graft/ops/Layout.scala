@@ -298,10 +298,8 @@ object Layout {
     // would silently flip every later parquet write's physical
     // timestamp type (masking the very INT96 behavior documented
     // elsewhere)
-    val tsKey = "spark.sql.parquet.outputTimestampType"
-    val tsPrev = spark.conf.getOption(tsKey)
-    spark.conf.set(tsKey, "TIMESTAMP_MICROS")
-    try {
+    graft.core.Session.withConf(spark,
+        "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
       val ev = Tables.events(spark, dir)
         .select(col("event_id"), col("user_id"), col("ts"),
           col("event_type"), col("value"))
@@ -318,9 +316,6 @@ object Layout {
       ev.repartitionByRange(numFiles, col("user_id"))
         .sortWithinPartitions("user_id")
         .write.mode("overwrite").parquet(s"$outBase/xsort")
-    } finally tsPrev match {
-      case Some(v) => spark.conf.set(tsKey, v)
-      case None => spark.conf.unset(tsKey)
     }
   }
 

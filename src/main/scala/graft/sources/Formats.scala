@@ -39,11 +39,12 @@ object Formats {
 
   def writeParquet(df: DataFrame, path: String,
       partitionBy: Seq[String] = Nil): Unit = {
-    df.sparkSession.conf
-      .set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     val w = df.write.mode(SaveMode.Overwrite)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(path)
+    graft.core.Session.withConf(df.sparkSession,
+        "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
+      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
+        .parquet(path)
+    }
   }
 
   def readParquet(spark: SparkSession, schema: StructType,

@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Session, Tables}
 
 /** Scala port of the reference producer's *semantics*
   * (`src/main/python/upload.py:80-106` in
@@ -46,18 +46,21 @@ object IncrementalProducer {
     * frame — the form [[replay]] uses so N days cost one source scan. */
   def dropDayFrom(spark: SparkSession, events: DataFrame,
       targetDir: String, day: String, processedAt: Timestamp): Long = {
-    // INT96 is Spark's legacy timestamp encoding (the reference data was
-    // written with it, upload.py:33); new writes use standard micros so
-    // any reader — including our own file stream — gets INT64.
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     // Row count observed on the write itself (Observation rides the
     // write job's metrics) — a separate count() would scan the day twice.
     val obs = org.apache.spark.sql.Observation()
-    events
-      .where(to_date(col("ts")) === lit(day))
-      .withColumn("processed_date", lit(processedAt))
-      .observe(obs, count(lit(1)).as("rows"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$targetDir/day=$day")
+    // INT96 is Spark's legacy timestamp encoding (the reference data was
+    // written with it, upload.py:33); the drops use standard micros so
+    // any reader — including our own file stream — gets INT64. Scoped to
+    // this write: the caller's session keeps its own encoding.
+    Session.withConf(spark,
+        "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") {
+      events
+        .where(to_date(col("ts")) === lit(day))
+        .withColumn("processed_date", lit(processedAt))
+        .observe(obs, count(lit(1)).as("rows"))
+        .write.mode(SaveMode.Overwrite).parquet(s"$targetDir/day=$day")
+    }
     obs.get("rows").asInstanceOf[Long]
   }
 

@@ -319,18 +319,13 @@ object Ingest {
       // rows it never saw sit in the store — the silent-readmission
       // shape this sidecar exists to kill.
       writeEpochSidecar(spark, storeDir, storeEpoch(spark, storeDir) + 1)
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "false")
-      try {
+      graft.core.Session.withConf(spark, key -> "false") {
         fps.select("fp")
           .repartition(n, col("fp"))
           .write.mode("append")
           .format("parquet")
           .bucketBy(n, "fp").sortBy("fp")
           .saveAsTable(tbl)
-      } finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
       }
     }
   }

@@ -1,11 +1,13 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
-import graft.core.Schemas
+import graft.core.{Schemas, Session}
 
 /** The reference's streaming core, Spark-first.
   *
@@ -125,27 +127,56 @@ object StreamAggregator {
     spark.table(queryName)
   }
 
-  /** State-store width for STATEFUL streaming runs — guide §2.1 sized
-    * to the state. A stateful aggregate's state-partition count is
-    * pinned from `spark.sql.shuffle.partitions` at the query's FIRST
-    * batch; a batch-oriented session runs that at core count (32
-    * here), which for a keys-bounded aggregate (~150 (event_type, day)
-    * groups) is 32 HDFS-backed state stores doing per-batch checkpoint
-    * commits for a handful of groups each — measured 1.9 → 1.2 s on
-    * q_stream_agg at 32→8. The rule is min(8, session width).
+  /** The settings every stateful stream here starts under; wrap only
+    * the query's `start()` in it. Structured Streaming clones the session
+    * conf when a query is constructed and fixes it for the query's
+    * lifetime, so both settings reach the stream while the caller's conf
+    * is put back exactly when `start()` returns (see
+    * [[graft.core.Session.withConf]]). What the settings buy is per-batch
+    * fixed cost: on the replay's day drops (~5 updated (event_type, day)
+    * rows per batch) the trigger, not the aggregation, is the latency.
     *
-    * Wrap only `start()`: the query clones its session when it is
-    * constructed (Structured Streaming fixes a query's configuration
-    * at start), so the width is restored before the stream runs; batch
-    * plans made concurrently in the caller's session can only see it
-    * while `start()` itself runs, not for the stream's lifetime.
-    * Results are width-invariant (exact, order-independent aggregates
-    * — the module's invariant). */
+    *  - ONE state store (`spark.sql.shuffle.partitions` = 1). The
+    *    aggregate's keys are bounded (#types × #days, ~150 groups), and a
+    *    stateful aggregate pins its state-partition count at the query's
+    *    first batch. Every state partition costs a task plus its own
+    *    delta and checksum files per batch, and each stateful task
+    *    generates code for the HLL++ `HashAggregate` projections that
+    *    whole-stage codegen does not cover, however few rows it holds:
+    *    in a Java Flight Recorder profile of a 30-day replay at
+    *    `local[4]`, projection code generation took 134 of 184 task-thread
+    *    samples with four state partitions and 21 of 64 with one. A
+    *    checkpoint written at another width keeps that width on restart.
+    *  - Rename-only checkpoint commits, for LOCAL checkpoints only (the
+    *    session's `fs.defaultFS` has scheme `file`, as in every session
+    *    `Session.build` makes): Spark's `FileSystemBasedCheckpointFileManager`
+    *    instead of the default `FileContext` one. Without libhadoop,
+    *    Hadoop's `RawLocalFileSystem` shells out for file operations and
+    *    the `FileContext.rename` path runs `readlink` for source and
+    *    destination of every committed file and its `.crc`. In the same
+    *    replay (JFR `jdk.ProcessStart`) the offset, commit and source
+    *    logs spawned 30 subprocesses per day with the default manager
+    *    and 6 with this one, and the state files of each state partition
+    *    20 and 4. The no-overwrite guarantee is the same: on a local
+    *    filesystem `AbstractFileSystem.renameInternal` is also an exists
+    *    check followed by a rename, not an atomic operation. Hadoop
+    *    `.crc` files and Spark's checkpoint checksums stay on. Any other
+    *    default filesystem keeps Spark's default manager. The check reads
+    *    the session's default filesystem, not the checkpoint path: callers
+    *    must pass checkpoint locations on that default filesystem (every
+    *    caller here passes a local directory).
+    *
+    * Results do not depend on either setting (exact, order-independent
+    * aggregates — the module's invariant). */
   def withStreamShuffle[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, math.min(8, prev.toInt).toString)
-    try body finally spark.conf.set(key, prev)
+    val local = FileSystem.getDefaultUri(spark.sessionState.newHadoopConf())
+      .getScheme == "file"
+    val manager =
+      if (local) Seq("spark.sql.streaming.checkpointFileManagerClass" ->
+        classOf[FileSystemBasedCheckpointFileManager].getName)
+      else Nil
+    Session.withConf(spark,
+      ("spark.sql.shuffle.partitions" -> "1") +: manager: _*)(body)
   }
 
   /** Production-path sink: foreachBatch → overwrite parquet. The memory

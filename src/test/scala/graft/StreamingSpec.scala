@@ -2,10 +2,15 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.Tables
+import graft.core.{Session, Tables}
 import graft.streaming.{IncrementalProducer, StreamAggregator}
 
 class StreamingSpec extends AnyFunSuite with SharedSpark {
@@ -97,7 +102,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     } finally q.stop()
   }
 
-  test("stream state width is fixed at start(): 8 state partitions " +
+  test("stream state width is fixed at start(): 1 state partition " +
     "while the caller session keeps its own width") {
     val s = spark.newSession()
     s.conf.set("spark.sql.shuffle.partitions", "16")
@@ -105,27 +110,31 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     val t0 = new java.sql.Timestamp(0L)
     val days = IncrementalProducer.eventDays(s, sf)
     IncrementalProducer.dropDay(s, sf, target, days.head, t0)
+    val before = s.conf.getAll
     val q = StreamAggregator.withStreamShuffle(s) {
-      StreamAggregator.dailyAgg(
-        StreamAggregator.replayStream(s, s"$target/day=*"))
-        .writeStream.outputMode("complete").format("memory")
-        .queryName("width_agg")
-        .option("checkpointLocation",
-          Files.createTempDirectory("graft-width-ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger
-          .ProcessingTime("200 milliseconds"))
-        .start()
+      replayAggQuery(s, target, "width_agg",
+        Files.createTempDirectory("graft-width-ckpt").toString,
+        StreamAggregator.dailyAgg)
     }
     try {
+      assert(s.conf.getAll === before)
       IncrementalProducer.dropDay(s, sf, target, days(1), t0)
       q.processAllAvailable()
       assert(q.isActive)
-      assert(q.lastProgress.stateOperators(0).numShufflePartitions === 8)
+      assert(q.lastProgress.stateOperators(0).numShufflePartitions === 1)
       assert(s.conf.get("spark.sql.shuffle.partitions") === "16")
+      // the manager the stream's own (cloned) session builds for its
+      // local checkpoint, exactly as its offset and commit logs do
+      val exec = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+      val manager = CheckpointFileManager.create(
+        new Path(exec.resolvedCheckpointRoot),
+        exec.lastExecution.sparkSession.sessionState.newHadoopConf())
+      assert(manager.isInstanceOf[FileSystemBasedCheckpointFileManager],
+        manager.getClass.getName)
     } finally q.stop()
   }
 
-  test("runToMemoryTable runs q_stream_agg's state at 8 partitions and " +
+  test("runToMemoryTable runs q_stream_agg's state at 1 partition and " +
     "leaves the session conf unchanged") {
     import org.apache.spark.sql.streaming.StreamingQueryListener
     import org.apache.spark.sql.streaming.StreamingQueryListener._
@@ -156,7 +165,96 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
       eventually(timeout(30.seconds)) { assert(terminated) }
     } finally s.streams.removeListener(listener)
     assert(!widths.isEmpty)
-    widths.forEach(w => assert(w === 8L))
+    widths.forEach(w => assert(w === 1L))
+  }
+
+  test("dropDay leaves the caller's session conf unchanged and still " +
+    "writes INT64 micros timestamps") {
+    val s = spark.newSession()
+    val target = Files.createTempDirectory("graft-drop-conf").toString
+    // eventDays loads events first, which sets its own reader conf
+    val day = IncrementalProducer.eventDays(s, sf).head
+    val before = s.conf.getAll
+    IncrementalProducer.dropDay(s, sf, target, day,
+      new java.sql.Timestamp(0L))
+    assert(s.conf.getAll === before)
+    val part = new java.io.File(s"$target/day=$day").listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new Path(part.getPath), s.sessionState.newHadoopConf()))
+    val schema = try reader.getFooter.getFileMetaData.getSchema
+      finally reader.close()
+    val ts = schema.getType(schema.getFieldIndex("ts"))
+    assert(ts.asPrimitiveType.getPrimitiveTypeName.toString === "INT64")
+  }
+
+  test("replay stream restarted from its checkpoint under a new name " +
+    "equals batch dailyAggExact over all days") {
+    val s = spark.newSession()
+    val width = restartedReplay(s) { (target, ckpt) =>
+      StreamAggregator.withStreamShuffle(s) {
+        replayAggQuery(s, target, "restart_a", ckpt)
+      }
+    }
+    assert(width === 1)
+  }
+
+  test("a checkpoint written at width 8 under the default checkpoint " +
+    "manager restarts through withStreamShuffle at width 8, exactly") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", "16")
+    // the settings streams started under before: min(8, session
+    // width) state partitions and Spark's default checkpoint manager
+    val width = restartedReplay(s) { (target, ckpt) =>
+      Session.withConf(s, "spark.sql.shuffle.partitions" -> "8") {
+        replayAggQuery(s, target, "legacy_a", ckpt)
+      }
+    }
+    assert(width === 8)
+  }
+
+  /** `agg` (dailyAggExact unless given) over a replay dir into a live
+    * complete-mode memory sink, triggered every 200 ms. */
+  private def replayAggQuery(s: SparkSession, target: String, name: String,
+      checkpoint: String,
+      agg: DataFrame => DataFrame = StreamAggregator.dailyAggExact)
+      : StreamingQuery =
+    agg(StreamAggregator.replayStream(s, s"$target/day=*"))
+      .writeStream.outputMode("complete").format("memory")
+      .queryName(name)
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.ProcessingTime("200 milliseconds"))
+      .start()
+
+  /** Drop two days, run the stream `first` starts to completion and
+    * stop it; drop the remaining days, restart from the same checkpoint
+    * through `withStreamShuffle` under a new query name, and assert its
+    * complete-mode sink equals batch dailyAggExact over all days.
+    * Returns the restarted query's state width. */
+  private def restartedReplay(s: SparkSession)(
+      first: (String, String) => StreamingQuery): Long = {
+    val (early, late) = IncrementalProducer.eventDays(s, sf).splitAt(2)
+    val target = Files.createTempDirectory("graft-restart").toString
+    val ckpt = Files.createTempDirectory("graft-restart-ckpt").toString
+    val t0 = new java.sql.Timestamp(0L)
+    early.foreach(d => IncrementalProducer.dropDay(s, sf, target, d, t0))
+    val q1 = first(target, ckpt)
+    try q1.processAllAvailable() finally q1.stop()
+    late.foreach(d => IncrementalProducer.dropDay(s, sf, target, d, t0))
+    val name = s"${q1.name}_restarted"
+    val q2 = StreamAggregator.withStreamShuffle(s) {
+      replayAggQuery(s, target, name, ckpt)
+    }
+    try {
+      q2.processAllAvailable()
+      val streamed = s.table(name)
+      val batch = StreamAggregator.dailyAggExact(Tables.events(s, sf))
+      assert(streamed.count() === batch.count())
+      assert(streamed.exceptAll(batch).count() === 0)
+      assert(batch.exceptAll(streamed).count() === 0)
+      q2.lastProgress.stateOperators(0).numShufflePartitions
+    } finally q2.stop()
   }
 
   test("stream-stream range join equals batch join (bounded state)") {
