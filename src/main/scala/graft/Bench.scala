@@ -126,17 +126,8 @@ object Bench {
       val agg = graft.streaming.StreamAggregator.dailyAggExact(
         graft.streaming.StreamAggregator.replayStream(spark,
           chunkDir, maxFilesPerTrigger = Some(2)))
-      // one state store and rename-only local checkpoint commits, fixed
-      // at start (StreamAggregator.withStreamShuffle): per-batch state
-      // and log commits, not aggregation, dominate a bounded-key stream
-      val q = graft.streaming.StreamAggregator.withStreamShuffle(spark) {
-        agg.writeStream
-          .outputMode("complete").format("memory").queryName(name)
-          .option("checkpointLocation",
-            graft.ops.Scratch.dir("graft-bench-ckpt"))
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
+      val q = graft.streaming.StreamAggregator.startMemorySink(spark, agg,
+        name, org.apache.spark.sql.streaming.Trigger.AvailableNow())
       q.awaitTermination()
       val sec = (System.nanoTime() - t0) / 1e9
       (sec, nEvents / sec, q.recentProgress.toSeq

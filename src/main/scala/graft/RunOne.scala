@@ -98,10 +98,10 @@ object RunOne {
           // "A always pays the colder JIT/page-cache" bias that a
           // fixed AB AB order bakes in (observed ~0.3 s phantom wins)
           val (ra, rb) = (1 to math.max(2, n)).map { i =>
-            def run(v: String): Double = {
-              spark.conf.set(k, v)
-              val t = once(); spark.catalog.clearCache(); t
-            }
+            def run(v: String): Double =
+              graft.core.Session.withConf(spark, k -> v) {
+                val t = once(); spark.catalog.clearCache(); t
+              }
             if (i % 2 == 1) { val ta = run(a); (ta, run(b)) }
             else { val tb = run(b); (run(a), tb) }
           }.unzip

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew-handling utilities for joins whose key distribution is heavy-
@@ -50,15 +50,5 @@ object Skew {
       .groupBy(col(key))
       .agg(sum(col("__n")).as("n_rows"),
         sum(col("__s")).cast("double").as("sum_value"))
-  }
-
-  /** Diagnostic: per-key row counts with their share of the total —
-    * run before choosing a skew strategy. */
-  def keyHistogram(df: DataFrame, key: Column): DataFrame = {
-    val counts = df.groupBy(key.as("key")).agg(count(lit(1)).as("n"))
-    val total = sum(col("n")).over()
-    counts.select(col("key"), col("n"),
-      (col("n") / total).as("share"))
-      .orderBy(col("n").desc)
   }
 }

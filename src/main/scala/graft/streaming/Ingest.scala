@@ -5,7 +5,6 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.ops.TextStats
@@ -638,23 +637,17 @@ object Ingest {
         graft.ops.Dedup.rebuildBloomStore(spark, storeDir, path)
       path
     } else null
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        applyIngestBatch(batch.sparkSession, batch, id, corpusDir,
-          storeDir, storeBuckets, admit, bloomStorePath)
-        if (compactEvery > 0 && id % compactEvery == (compactEvery - 1)) {
-          compactStore(batch.sparkSession, storeDir)
-          if (bloomStorePath != null)
-            graft.ops.Dedup.rebuildBloomStore(batch.sparkSession,
-              storeDir, bloomStorePath)
-        }
-        ()
+    StreamAggregator.drainBatches(
+        StreamAggregator.filePerBatch(spark, srcDir, schema),
+        checkpointDir) { (batch, id) =>
+      applyIngestBatch(batch.sparkSession, batch, id, corpusDir,
+        storeDir, storeBuckets, admit, bloomStorePath)
+      if (compactEvery > 0 && id % compactEvery == (compactEvery - 1)) {
+        compactStore(batch.sparkSession, storeDir)
+        if (bloomStorePath != null)
+          graft.ops.Dedup.rebuildBloomStore(batch.sparkSession,
+            storeDir, bloomStorePath)
       }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 }

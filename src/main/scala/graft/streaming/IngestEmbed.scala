@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 import graft.functions.VectorFunctions.{dot, normalize, toDoubleVec}
@@ -293,19 +292,13 @@ object IngestEmbed {
     * file so cross-batch dedup is exercised. */
   def runIngestEmbeddings(spark: SparkSession, srcDir: String,
       schema: StructType, workDir: String, tau: Double = 0.4,
-      nprobe: Int = 4, withinBatch: String = "pairs"): Unit = {
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val q = stream.writeStream
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        applyEmbedBatch(batch.sparkSession, batch, id, workDir,
-          tau = tau, nprobe = nprobe, withinBatch = withinBatch)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      nprobe: Int = 4, withinBatch: String = "pairs"): Unit =
+    StreamAggregator.drainBatches(
+        StreamAggregator.filePerBatch(spark, srcDir, schema),
+        s"$workDir/ckpt") { (batch, id) =>
+      applyEmbedBatch(batch.sparkSession, batch, id, workDir,
+        tau = tau, nprobe = nprobe, withinBatch = withinBatch)
+    }
 
   /** The kept (semantically deduped) embedding corpus. */
   def keptEmbeddings(spark: SparkSession, workDir: String): DataFrame =

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 import graft.ops.Monitor
@@ -23,15 +22,6 @@ import graft.ops.Monitor
   */
 object MonitorStream {
 
-  // absent marker = fresh store; anything ELSE (corrupt footer,
-  // permissions) rethrows — a swallowed read error would silently
-  // report -1 and disable the exactly-once no-op guard
-  private def lastApplied(spark: SparkSession, workDir: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"$workDir/applied")
-    if (!p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)) -1L
-    else spark.read.parquet(p.toString).head().getLong(0)
-  }
-
   /** Apply one micro-batch of raw events: collapse to day-grain
     * deltas, land them under the batch-id partition (idempotent
     * overwrite), advance the marker. A batch id at or below the
@@ -39,7 +29,7 @@ object MonitorStream {
     * identical store. */
   def applyMonitorBatch(spark: SparkSession, workDir: String,
       batch: DataFrame, batchId: Long): Unit = {
-    if (batchId <= lastApplied(spark, workDir)) return
+    if (batchId <= StreamAggregator.lastApplied(spark, workDir)) return
     // encoding-tolerant day derivation: a NANOS-vintage events source
     // arrives with ts as LongType raw nanos (the Tables.events dual-
     // encoding contract the batch twin supports) — without this branch
@@ -53,8 +43,7 @@ object MonitorStream {
       .agg(count(lit(1)).as("n"))
       .write.mode("overwrite")
       .parquet(s"$workDir/daily/batch=$batchId")
-    spark.range(1).select(lit(batchId).as("last_batch"))
-      .write.mode("overwrite").parquet(s"$workDir/applied")
+    StreamAggregator.markApplied(spark, workDir, batchId)
   }
 
   /** Current day-grain counts: sum of the delta partitions. */
@@ -79,16 +68,10 @@ object MonitorStream {
     * `Schemas.eventsOnDiskMicros` otherwise); [[applyMonitorBatch]]
     * handles either ts type. */
   def runMonitor(spark: SparkSession, srcDir: String,
-      schema: StructType, workDir: String): Unit = {
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val q = stream.writeStream
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        applyMonitorBatch(batch.sparkSession, workDir, batch, id)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      schema: StructType, workDir: String): Unit =
+    StreamAggregator.drainBatches(
+        StreamAggregator.filePerBatch(spark, srcDir, schema),
+        s"$workDir/ckpt") { (batch, id) =>
+      applyMonitorBatch(batch.sparkSession, workDir, batch, id)
+    }
 }

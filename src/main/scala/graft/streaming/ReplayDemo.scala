@@ -29,13 +29,8 @@ object ReplayDemo {
     IncrementalProducer.dropDay(spark, sfDir, watched, days.head, t0)
     val agg = StreamAggregator.dailyAgg(
       StreamAggregator.replayStream(spark, s"$watched/day=*"))
-    val query = StreamAggregator.withStreamShuffle(spark) {
-      agg.writeStream
-        .outputMode("complete").format("memory").queryName("result_df_query")
-        .option("checkpointLocation", Scratch.dir("graft-demo-ckpt"))
-        .trigger(Trigger.ProcessingTime("500 milliseconds"))
-        .start()
-    }
+    val query = StreamAggregator.startMemorySink(spark, agg,
+      "result_df_query", Trigger.ProcessingTime("500 milliseconds"))
 
     val cell3 =
       """SELECT event_type, day, distinct_users FROM (

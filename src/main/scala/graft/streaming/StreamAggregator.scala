@@ -2,12 +2,14 @@ package graft.streaming
 
 import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.Aggregate
 import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{DecimalType, DoubleType, StructType}
 
 import graft.core.{Schemas, Session}
+import graft.ops.Scratch
 
 /** The reference's streaming core, Spark-first.
   *
@@ -105,27 +107,85 @@ object StreamAggregator {
         min(col("value")).as("min_value"),
         count(lit(1)).as("n_events"))
 
-  /** K1: complete-mode memory sink named like the reference's
-    * `result_df_query` (`notebooks/stream.ipynb:145-148 (cell 2)`), run
-    * to completion with Trigger.AvailableNow for determinism, returning
-    * the result table. Checkpoint is explicit (the reference omits it —
+  /** K1, the one place a complete-mode memory sink starts: the sink is
+    * named like the reference's `result_df_query`
+    * (`notebooks/stream.ipynb:145-148 (cell 2)`) and registers a table
+    * of that name. The checkpoint is explicit (the reference omits it —
     * SURVEY §2.9 flags that as a rebuild fix) and lives in a per-call
-    * scratch directory, deleted at JVM exit. */
-  def runToMemoryTable(spark: SparkSession, agg: DataFrame,
-      queryName: String): DataFrame = {
-    val checkpoint = graft.ops.Scratch.dir(s"graft-ckpt-$queryName")
-    val q = withStreamShuffle(spark) {
+    * scratch directory, deleted at JVM exit. Starts under
+    * [[withStreamShuffle]]: a complete-mode sink is always stateful. */
+  def startMemorySink(spark: SparkSession, agg: DataFrame, name: String,
+      trigger: Trigger): StreamingQuery =
+    withStreamShuffle(spark) {
       agg.writeStream
         .outputMode(OutputMode.Complete())
         .format("memory")
-        .queryName(queryName)
-        .option("checkpointLocation", checkpoint)
-        .trigger(Trigger.AvailableNow())
+        .queryName(name)
+        .option("checkpointLocation", Scratch.dir(s"graft-ckpt-$name"))
+        .trigger(trigger)
         .start()
     }
-    q.awaitTermination()
+
+  /** [[startMemorySink]] run to completion with Trigger.AvailableNow for
+    * determinism, returning the result table. */
+  def runToMemoryTable(spark: SparkSession, agg: DataFrame,
+      queryName: String): DataFrame = {
+    startMemorySink(spark, agg, queryName, Trigger.AvailableNow())
+      .awaitTermination()
     spark.table(queryName)
   }
+
+  /** The one foreachBatch runner: runs `stream` to the end of its
+    * current input (Trigger.AvailableNow, resuming from `checkpoint`),
+    * handing each micro-batch and its id to `body`, and returns when it
+    * has drained. The plan picks only the output mode: a streaming
+    * aggregate emits its whole state each batch (complete mode), any
+    * other stream appends. Every stream starts at the session's own
+    * width with Spark's default checkpoint manager, never under
+    * [[withStreamShuffle]]: `body` runs in the stream's cloned session,
+    * so one shuffle partition there would serialize every batch's own
+    * shuffles, and the one aggregate here ([[runToParquet]]) has no
+    * measured workload that would justify fixing its state at width 1. */
+  def drainBatches(stream: DataFrame, checkpoint: String)(
+      body: (DataFrame, Long) => Unit): Unit = {
+    val aggregate = stream.queryExecution.analyzed.exists {
+      case a: Aggregate => a.isStreaming
+      case _ => false
+    }
+    stream.writeStream
+      .outputMode(if (aggregate) OutputMode.Complete() else OutputMode.Append())
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch(body)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+  }
+
+  /** A file stream over `srcDir` that takes one file per micro-batch,
+    * the source of every per-file [[drainBatches]] caller. */
+  private[streaming] def filePerBatch(spark: SparkSession, srcDir: String,
+      schema: StructType): DataFrame =
+    spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1").parquet(srcDir)
+
+  /** The exactly-once marker of a foreachBatch store at `dir`: the last
+    * applied batch id, -1 when none was applied. A batch id at or below
+    * it no-ops, so a re-delivered batch re-runs to the identical store.
+    * Absent marker = fresh store; anything ELSE (corrupt footer,
+    * permissions) rethrows — a swallowed read error would silently
+    * report -1 and disable the exactly-once no-op guard. */
+  private[streaming] def lastApplied(spark: SparkSession,
+      dir: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(s"$dir/applied")
+    if (!p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)) -1L
+    else spark.read.parquet(p.toString).head().getLong(0)
+  }
+
+  /** Advance the marker [[lastApplied]] reads; write it last. */
+  private[streaming] def markApplied(spark: SparkSession, dir: String,
+      batchId: Long): Unit =
+    spark.range(1).select(lit(batchId).as("last_batch"))
+      .write.mode("overwrite").parquet(s"$dir/applied")
 
   /** The settings every stateful stream here starts under; wrap only
     * the query's `start()` in it. Structured Streaming clones the session
@@ -183,17 +243,10 @@ object StreamAggregator {
     * sink caps at driver RAM; this scales to any aggregate size and is
     * the documented 100 TB alternative (SURVEY §7 hard-point c). */
   def runToParquet(spark: SparkSession, agg: DataFrame, outPath: String,
-      checkpointDir: String): Unit = {
-    val q = agg.writeStream
-      .outputMode(OutputMode.Complete())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("overwrite").parquet(outPath)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      checkpointDir: String): Unit =
+    drainBatches(agg, checkpointDir) { (batch, _) =>
+      batch.write.mode("overwrite").parquet(outPath)
+    }
 
   /** Production sink #2: foreachBatch → DYNAMIC partition overwrite,
     * for sources whose delivery unit IS a partition (the producer drops
@@ -208,25 +261,18 @@ object StreamAggregator {
     * whole partitions (here: one file = one day); a partial-day batch
     * would drop the rest of that day's partition. */
   def runToPartitionedParquet(spark: SparkSession, rows: DataFrame,
-      outPath: String, checkpointDir: String, partitionCol: String): Unit = {
-    val q = rows.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // per-WRITE option, never the session conf: a session-level
-        // dynamic default would silently change every later static-
-        // overwrite partitioned write in the session (e.g. an index
-        // rebuild that depends on replacing ALL partitions)
-        batch.write
-          .mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy(partitionCol)
-          .parquet(outPath)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      outPath: String, checkpointDir: String, partitionCol: String): Unit =
+    drainBatches(rows, checkpointDir) { (batch, _) =>
+      // per-WRITE option, never the session conf: a session-level
+      // dynamic default would silently change every later static-
+      // overwrite partitioned write in the session (e.g. an index
+      // rebuild that depends on replacing ALL partitions)
+      batch.write
+        .mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partitionCol)
+        .parquet(outPath)
+    }
 
   /** Event-time windowed aggregate with watermark — the
     * production-hardening extension the reference lacks (SURVEY §2.9:

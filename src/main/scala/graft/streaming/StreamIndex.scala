@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 import graft.ops.Terms
@@ -32,14 +31,7 @@ import graft.ops.Terms
   * the marker, so a batch that compaction folded can never re-apply. */
 object StreamIndex {
 
-  // absent marker = fresh store; anything ELSE (corrupt footer,
-  // permissions) rethrows — a swallowed read error would silently
-  // report -1 and disable the exactly-once no-op guard
-  private def lastApplied(spark: SparkSession, indexPath: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexPath/applied")
-    if (!p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)) -1L
-    else spark.read.parquet(p.toString).head().getLong(0)
-  }
+  import StreamAggregator.{lastApplied, markApplied}
 
   /** Apply one micro-batch of (doc_id, text) documents to the index
     * at `indexPath`: the first batch builds (overwrite — naturally
@@ -58,8 +50,7 @@ object StreamIndex {
       .getFileSystem(spark.sessionState.newHadoopConf()).exists(stats)
     if (!hasIndex) Terms.buildBm25IndexFor(batch, indexPath, nBuckets)
     else Terms.appendToBm25Index(spark, indexPath, batch, batchId)
-    spark.range(1).select(lit(batchId).as("last_batch"))
-      .write.mode("overwrite").parquet(s"$indexPath/applied")
+    markApplied(spark, indexPath, batchId)
   }
 
   /** Apply one CDC micro-batch — (doc_id, text, op) rows where `op`
@@ -90,8 +81,7 @@ object StreamIndex {
     // recomputes the same emptiness, so the skip is exactly-once too)
     if (!dels.isEmpty)
       Terms.deleteFromBm25Index(spark, indexPath, dels, 2L * batchId + 1L)
-    spark.range(1).select(lit(batchId).as("last_batch"))
-      .write.mode("overwrite").parquet(s"$indexPath/applied")
+    markApplied(spark, indexPath, batchId)
   }
 
   /** Drive CDC indexing over every file currently in `srcDir` — the
@@ -102,20 +92,15 @@ object StreamIndex {
       schema: StructType, workDir: String, nBuckets: Int = 64,
       compactEvery: Int = 0): Unit = {
     val indexPath = s"$workDir/bm25index"
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val s = batch.sparkSession
-        applyBm25Cdc(s, indexPath,
-          batch.select("doc_id", "text", "op"), id, nBuckets)
-        if (compactEvery > 0 && id % compactEvery == (compactEvery - 1))
-          Terms.compactBm25Index(s, indexPath)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    StreamAggregator.drainBatches(
+        StreamAggregator.filePerBatch(spark, srcDir, schema),
+        s"$workDir/ckpt") { (batch, id) =>
+      val s = batch.sparkSession
+      applyBm25Cdc(s, indexPath,
+        batch.select("doc_id", "text", "op"), id, nBuckets)
+      if (compactEvery > 0 && id % compactEvery == (compactEvery - 1))
+        Terms.compactBm25Index(s, indexPath)
+    }
   }
 
   /** Drive indexing over every file currently in `srcDir` (resuming
@@ -131,19 +116,14 @@ object StreamIndex {
       schema: StructType, workDir: String, nBuckets: Int = 64,
       compactEvery: Int = 0): Unit = {
     val indexPath = s"$workDir/bm25index"
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val s = batch.sparkSession
-        applyBm25Batch(s, indexPath, batch.select("doc_id", "text"),
-          id, nBuckets)
-        if (compactEvery > 0 && id % compactEvery == (compactEvery - 1))
-          Terms.compactBm25Index(s, indexPath)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    StreamAggregator.drainBatches(
+        StreamAggregator.filePerBatch(spark, srcDir, schema),
+        s"$workDir/ckpt") { (batch, id) =>
+      val s = batch.sparkSession
+      applyBm25Batch(s, indexPath, batch.select("doc_id", "text"),
+        id, nBuckets)
+      if (compactEvery > 0 && id % compactEvery == (compactEvery - 1))
+        Terms.compactBm25Index(s, indexPath)
+    }
   }
 }

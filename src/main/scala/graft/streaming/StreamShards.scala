@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 import graft.ops.Corpus
@@ -62,38 +61,32 @@ object StreamShards {
       s"manifestEvery must be >= 1, got $manifestEvery")
     val corpusDir = s"$workDir/documents.parquet"
     val storeDir = s"$workDir/fp_store"
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
     var sawBatch = false
     def refreshManifest(s: SparkSession): Unit =
       (if (chunked) Corpus.trainingShardsChunked(s, workDir, seed, budget)
        else Corpus.trainingShards(s, workDir, seed, budget))
         .write.mode("overwrite").parquet(s"$workDir/shards.parquet")
-    val q = stream.writeStream
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val s = batch.sparkSession
-        sawBatch = true
-        // exactly-once corpus + store update (stage → fp append →
-        // atomic commit rename; see Ingest.applyIngestBatch) — a
-        // re-delivered batch can no longer double-append survivors
-        // into the corpus the manifest packs
-        Ingest.applyIngestBatch(s, batch, id, corpusDir, storeDir,
-          storeBuckets)
-        // derived state, always recomputable — safe to refresh last
-        // (a crash before this write just leaves the previous
-        // manifest, which the next refresh supersedes). manifestEvery
-        // is the backlog-catchup knob: the recompute is a full-corpus
-        // pass, so refreshing after EVERY batch of an N-file backlog
-        // does N passes of which only the last survives — refresh on
-        // the cadence, plus unconditionally after the stream drains
-        if (manifestEvery == 1 || id % manifestEvery == manifestEvery - 1)
-          refreshManifest(s)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    StreamAggregator.drainBatches(
+        StreamAggregator.filePerBatch(spark, srcDir, schema),
+        s"$workDir/ckpt") { (batch, id) =>
+      val s = batch.sparkSession
+      sawBatch = true
+      // exactly-once corpus + store update (stage → fp append →
+      // atomic commit rename; see Ingest.applyIngestBatch) — a
+      // re-delivered batch can no longer double-append survivors
+      // into the corpus the manifest packs
+      Ingest.applyIngestBatch(s, batch, id, corpusDir, storeDir,
+        storeBuckets)
+      // derived state, always recomputable — safe to refresh last
+      // (a crash before this write just leaves the previous
+      // manifest, which the next refresh supersedes). manifestEvery
+      // is the backlog-catchup knob: the recompute is a full-corpus
+      // pass, so refreshing after EVERY batch of an N-file backlog
+      // does N passes of which only the last survives — refresh on
+      // the cadence, plus unconditionally after the stream drains
+      if (manifestEvery == 1 || id % manifestEvery == manifestEvery - 1)
+        refreshManifest(s)
+    }
     // the drain-time refresh makes the final manifest current no
     // matter where the cadence landed (and covers an all-no-op resume
     // only when batches actually ran — an empty resume leaves the

@@ -65,6 +65,54 @@ class GoldenParitySpec extends AnyFunSuite with SharedSpark {
     assert(paris.sameElements(paris.sorted))
   }
 
+  test("golden pipeline, batch and streaming, on synthetic partitioned " +
+    "data with ties: identical total-order top-10, session conf unchanged") {
+    import spark.implicits._
+    // 20 cities over three year=/month=/day= partitions; each city's
+    // best day (the 2nd) has best(i) hotels: 9, 8 8 (a tie, as in the
+    // golden output), 7, then 16 cities tied at 5, so the LIMIT keeps 6
+    // of those 16 and only a total order says which
+    val cities = (0 until 20).map(i => f"City$i%02d")
+      .sortBy(c => (c.hashCode * 31) % 7) // count rank ≠ name order
+    def best(i: Int): Long = Seq(9L, 8L, 8L, 7L).lift(i).getOrElse(5L)
+    val rows = for {
+      (city, i) <- cities.zipWithIndex
+      day <- 1 to 3
+      h <- 0L until (if (day == 2) best(i) else best(i) - 1)
+    } yield ("addr", 20.0 + day, 68.0 + day, city, "US", "9q8y", s"$city-h$h",
+      37.7, -122.4, s"hotel $h", f"2017-08-$day%02d", 2017, 8, day)
+    val base = java.nio.file.Files.createTempDirectory("graft-hw")
+    val dir = base.resolve("hotel-weather").toString
+    rows.toDF("address", "avg_tmpr_c", "avg_tmpr_f", "city", "country",
+        "geoHash", "id", "latitude", "longitude", "name", "wthr_date",
+        "year", "month", "day")
+      .write.partitionBy("year", "month", "day").parquet(dir)
+    val before = spark.conf.getAll
+    def top(df: org.apache.spark.sql.DataFrame): Seq[(String, String, Long)] =
+      df.select("city", "wthr_date", "distinct_hotels").collect()
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
+    // the top-10's window shuffles by city and sorts each partition by
+    // city, whatever order the source or the sink delivered the rows in.
+    // On data this small AQE coalesces that shuffle to ONE partition, so
+    // ties would come out by name with or without the `city` sort key.
+    // Keeping all 8 partitions (as at scale) makes the LIMIT merge tied
+    // cities from several partitions in task-completion order, so only
+    // the sort key picks and orders them by name.
+    def uncoalesced[T](body: => T): T = graft.core.Session.withConf(spark,
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")(body)
+    try {
+      val batch = uncoalesced(top(HotelWeather.goldenPipeline(spark, dir)))
+      val streamed = uncoalesced(top(HotelWeather.goldenPipelineStreaming(
+        spark, dir, maxFilesPerTrigger = Some(1))))
+      val expected = cities.zipWithIndex
+        .map { case (c, i) => (c, "2017-08-02", best(i)) }
+        .sortBy { case (c, _, n) => (-n, c) }.take(10)
+      assert(batch === expected)
+      assert(streamed === batch)
+      assert(spark.conf.getAll === before)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
+  }
+
   test("geohash-prefix join reconstructs hotel-weather shape") {
     // synthetic hotels + weather with overlapping 4-char geohash cells
     import spark.implicits._

@@ -65,6 +65,20 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
     assert(unFiles > 0 && unHit > 0)
   }
 
+  test("q_zorder_prune_effect plans the single-pass profile: no Union, " +
+    "no cached relation") {
+    val plan = SparkEntry.queries("q_zorder_prune_effect")(spark, sf)
+      .queryExecution.optimizedPlan
+    val unions = plan.collect {
+      case u: org.apache.spark.sql.catalyst.plans.logical.Union => u
+    }
+    val cached = plan.collect {
+      case c: org.apache.spark.sql.execution.columnar.InMemoryRelation => c
+    }
+    assert(unions.isEmpty && cached.isEmpty,
+      s"${unions.size} Union, ${cached.size} InMemoryRelation:\n$plan")
+  }
+
   test("zorderPruneEffect on an empty events table: one row per layout, " +
     "as the oracle SQL gives") {
     val dir = java.nio.file.Files

@@ -965,6 +965,31 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
     assert(p("str").getDouble(4) === 4.0)   // max length
   }
 
+  test("q_profile_orders executes with no Expand (one partial distinct " +
+    "per column)") {
+    val df = SparkEntry.queries("q_profile_orders")(spark, sf)
+    df.collect()
+    // the final adaptive plan nests materialized stages — expand
+    // QueryStageExec/AdaptiveSparkPlanExec to see inside them
+    def expand(p: org.apache.spark.sql.execution.SparkPlan):
+        Seq[org.apache.spark.sql.execution.SparkPlan] = {
+      val kids = p match {
+        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+          Seq(q.plan)
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+          Seq(a.executedPlan)
+        case other => other.children
+      }
+      p +: kids.flatMap(expand)
+    }
+    val nodes = expand(df.queryExecution.executedPlan)
+    assert(nodes.exists(_.isInstanceOf[
+      org.apache.spark.sql.execution.aggregate.HashAggregateExec]))
+    assert(!nodes.exists(_.isInstanceOf[
+        org.apache.spark.sql.execution.ExpandExec]),
+      s"Expand in the exact profile:\n${nodes.head}")
+  }
+
   test("screen salts are semantics-invariant: identical survivors at " +
     "salts 1/4/8 on the same batch (the knob only widens parallelism)") {
     val docs = graft.core.Tables.documents(spark, sf)

@@ -63,6 +63,43 @@ class StatefulSpec extends AnyFunSuite with SharedSpark {
     assert(written.exceptAll(batch).count() === 0)
   }
 
+  test("drainBatches runs stateless and aggregate streams at the " +
+    "session's own width and leaves the caller's conf unchanged") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", "16")
+    val before = s.conf.getAll
+    val base = Files.createTempDirectory("graft-drain")
+    val src = base.resolve("src").toString
+    try {
+      s.range(300).selectExpr("id", "id % 7 AS k").repartition(3)
+        .write.mode("overwrite").parquet(src)
+      val schema = s.read.parquet(src).schema
+      def files = s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(src)
+      // a stateless per-file stream, as every per-file driver starts it:
+      // its body sees the width its own batch shuffles run at
+      val widths = new java.util.concurrent.ConcurrentLinkedQueue[String]
+      val rows = new java.util.concurrent.atomic.AtomicLong
+      StreamAggregator.drainBatches(files,
+          base.resolve("ckpt").toString) { (b, _) =>
+        widths.add(b.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        rows.addAndGet(b.groupBy("k").count().collect().map(_.getLong(1)).sum)
+      }
+      assert(widths.size === 3)
+      assert(widths.toArray.toSet === Set("16"))
+      assert(rows.get === 300)
+      // the aggregate (runToParquet) keeps its state at the session width
+      val out = base.resolve("agg").toString
+      val ckpt = base.resolve("agg-ckpt").toString
+      StreamAggregator.runToParquet(s, files.groupBy("k").count(), out, ckpt)
+      assert(s.read.parquet(out).count() === 7)
+      val stateParts = new java.io.File(s"$ckpt/state/0").list()
+        .count(_.forall(_.isDigit))
+      assert(stateParts === 16)
+      assert(s.conf.getAll === before)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
+  }
+
   test("file re-delivery: FileStreamSource processes new files only") {
     val watched = Files.createTempDirectory("graft-redeliver").toString
     val e = Tables.events(spark, sf).limit(100).cache()
