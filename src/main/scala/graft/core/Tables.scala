@@ -237,10 +237,9 @@ object Tables {
     * filter, pruning is untouched). */
   def packedScan(df: DataFrame, path: String): DataFrame = {
     val spark = df.sparkSession
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
     val bytes =
-      try fs.getContentSummary(hp).getLength
+      try Dirs.fs(spark, path)
+        .getContentSummary(new org.apache.hadoop.fs.Path(path)).getLength
       catch { case _: java.io.FileNotFoundException => return df }
     val maxSplit = org.apache.spark.network.util.JavaUtils
       .byteStringAsBytes(
@@ -280,19 +279,25 @@ object Tables {
     * Not cached: the same path can legitimately change encoding across
     * test-data regenerations within one JVM.
     *
-    * The nanosAsLong flag is DELIBERATELY left set for the session: a
-    * naive save/restore here would be wrong — the returned events
-    * frame is lazy, and the parquet reader consults the conf again at
-    * physical planning (per-file footer conversion), so restoring
-    * after this eager schema probe could flip the encoding out from
-    * under a not-yet-executed scan. Scope of the leak: OTHER
-    * TIMESTAMP(NANOS) parquet columns read later in the session
-    * arrive as LongType raw nanos instead of erroring — within this
-    * library the only NANOS producer is the events vintage itself,
-    * which is exactly what the flag serves. */
+    * The probe itself runs under a scoped nanosAsLong
+    * ([[Session.withConf]]), so a MICROS file leaves the caller's conf
+    * exactly as it was. A NANOS file sets the flag for the session and
+    * leaves it set, the one session-wide conf write outside `Session`:
+    * the returned events frame is lazy, and the parquet reader consults
+    * the conf again at physical planning (per-file footer conversion),
+    * so restoring it after the probe would flip the encoding out from
+    * under a not-yet-executed scan. Scope of that leak: OTHER
+    * TIMESTAMP(NANOS) parquet columns read later in the session arrive
+    * as LongType raw nanos instead of erroring — within this library
+    * the only NANOS producer is the events vintage itself, which is
+    * exactly what the flag serves. */
   def eventsTsIsNanos(spark: SparkSession, eventsPath: String): Boolean = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(eventsPath).schema("ts").dataType == LongType
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val nanos = Session.withConf(spark, key -> "true") {
+      spark.read.parquet(eventsPath).schema("ts").dataType == LongType
+    }
+    if (nanos) spark.conf.set(key, "true")
+    nanos
   }
 
   /** Events with `ts` as a usable TimestampType (micros) plus the
@@ -301,8 +306,8 @@ object Tables {
     * read as a long and truncated to micros; a native micros TIMESTAMP
     * is used as-is with `ts_ns` derived (exact — micros*1000 never
     * overflows a long for any realistic epoch). The nanosAsLong conf
-    * flip is runtime-settable and done here so it works in ANY session
-    * the caller provides. */
+    * the NANOS path needs is runtime-settable and set by the probe, so
+    * it works in ANY session the caller provides. */
   def events(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     val p = path(dir, "events")

@@ -20,9 +20,8 @@ object Compaction {
     * Returns the file count written. */
   def compact(spark: SparkSession, inDir: String, outDir: String,
       targetBytes: Long = 128L << 20): Int = {
-    val path = new Path(inDir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    val bytes = fs.getContentSummary(path).getLength
+    val bytes = graft.core.Dirs.fs(spark, inDir)
+      .getContentSummary(new Path(inDir)).getLength
     val n = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
     spark.read.parquet(inDir)
       .coalesce(n)

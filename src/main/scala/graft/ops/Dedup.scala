@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Dirs, Session, Tables}
 
 /** Deduplication operators for a training-data pipeline: exact,
   * n-gram-Jaccard (exact set similarity), MinHash+LSH (the 100 TB scale
@@ -562,33 +562,21 @@ object Dedup {
     *    the appended fps around the exact confirm as bloom-NEGATIVE
     *    ("definitely new") and silently readmit their duplicates. */
   private[graft] case class BloomMeta(shards: Int, itemsPerShard: Long,
-      fpp: Double, coversEpoch: Long)
+      fpp: Double, coversEpoch: Long) {
+    def text: String =
+      s"shards=$shards\nitems_per_shard=$itemsPerShard\n" +
+        s"fpp=$fpp\ncovers_epoch=$coversEpoch\n"
+  }
 
   private val BloomMetaSidecar = "_graft_bloom_meta"
-
-  private def bloomFs(spark: SparkSession, storePath: String) =
-    new org.apache.hadoop.fs.Path(storePath)
-      .getFileSystem(spark.sessionState.newHadoopConf())
 
   /** The persisted [[BloomMeta]], if this directory holds a
     * post-coherence store. A sidecar that exists but does not parse
     * is CORRUPT, not absent — silently treating it as a legacy store
     * would skip the staleness guard — so it fails loudly instead. */
   def bloomStoreMeta(spark: SparkSession,
-      storePath: String): Option[BloomMeta] = {
-    val fs = bloomFs(spark, storePath)
-    val p = new org.apache.hadoop.fs.Path(storePath, BloomMetaSidecar)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val text = try {
-        val out = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](256)
-        var n = in.read(buf)
-        while (n > 0) { out.write(buf, 0, n); n = in.read(buf) }
-        new String(out.toByteArray,
-          java.nio.charset.StandardCharsets.UTF_8)
-      } finally in.close()
+      storePath: String): Option[BloomMeta] =
+    Dirs.readSidecar(spark, storePath, BloomMetaSidecar).map { text =>
       val kv = text.split('\n').map(_.trim).filter(_.contains("="))
         .map { l => val i = l.indexOf('='); l.take(i) -> l.drop(i + 1) }
         .toMap
@@ -598,21 +586,8 @@ object Dedup {
       require(parsed.isDefined,
         s"corrupt $BloomMetaSidecar sidecar at $storePath (content: " +
           s"'${text.take(120)}'): rebuild the store via buildBloomStore")
-      parsed
+      parsed.get
     }
-  }
-
-  private def writeBloomMeta(spark: SparkSession, storePath: String,
-      meta: BloomMeta): Unit = {
-    val fs = bloomFs(spark, storePath)
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(storePath, BloomMetaSidecar), true)
-    try out.write(
-      (s"shards=${meta.shards}\nitems_per_shard=${meta.itemsPerShard}\n" +
-        s"fpp=${meta.fpp}\ncovers_epoch=${meta.coversEpoch}\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
 
   /** Build and persist the prefix-sharded epoch filter store — the
     * once-per-epoch artifact the steady-state ingest loop screens
@@ -633,8 +608,8 @@ object Dedup {
     bloomShardFrame(historyFps, shards, itemsPerShard, fpp)
       .repartition(shards, col("shard"))
       .write.mode("overwrite").parquet(storePath)
-    writeBloomMeta(spark, storePath,
-      BloomMeta(shards, itemsPerShard, fpp, coversEpoch))
+    Dirs.writeSidecar(spark, storePath, BloomMetaSidecar,
+      BloomMeta(shards, itemsPerShard, fpp, coversEpoch).text)
   }
 
   /** Create an EMPTY filter store if none exists (the fresh-pipeline
@@ -657,11 +632,7 @@ object Dedup {
         // never against this argument.
         m
       case None =>
-        val fs = bloomFs(spark, storePath)
-        val path = new org.apache.hadoop.fs.Path(storePath)
-        val legacy = fs.exists(path) && fs.listStatus(path)
-          .exists(_.getPath.getName.endsWith(".parquet"))
-        if (legacy)
+        if (Dirs.holdsData(spark, storePath))
           throw new IllegalStateException(
             s"$storePath holds filter data but no $BloomMetaSidecar " +
               "sidecar (pre-coherence layout) — overwriting it with " +
@@ -672,7 +643,7 @@ object Dedup {
             BloomStoreSchema)
           .write.mode("overwrite").parquet(storePath)
         val m = BloomMeta(shards, itemsPerShard, fpp, coversEpoch = 0L)
-        writeBloomMeta(spark, storePath, m)
+        Dirs.writeSidecar(spark, storePath, BloomMetaSidecar, m.text)
         m
     }
 
@@ -718,7 +689,8 @@ object Dedup {
         .repartition(meta.shards, col("shard"))
         .write.mode("append").parquet(storePath)
     }
-    writeBloomMeta(spark, storePath, meta.copy(coversEpoch = coversEpoch))
+    Dirs.writeSidecar(spark, storePath, BloomMetaSidecar,
+      meta.copy(coversEpoch = coversEpoch).text)
   }
 
   /** Rebuild the filter store from the fp store's CURRENT contents —
@@ -774,7 +746,7 @@ object Dedup {
         "layout, probing at another count silently misses")
     val fpEpoch = graft.streaming.Ingest.storeEpoch(spark, fpStoreDir)
     if (fpEpoch == 0 &&
-        graft.streaming.Ingest.storeHasData(spark, fpStoreDir))
+        Dirs.holdsData(spark, fpStoreDir))
       throw new IllegalStateException(
         s"fp store at $fpStoreDir holds data but no append-epoch " +
           "sidecar (pre-epoch layout) — filter coverage is " +
@@ -848,8 +820,10 @@ object Dedup {
     * reports the written order only under it, and only when each
     * bucket holds one file — guaranteed after [[graft.streaming
     * .Ingest.compactStore]], and checked per-file by Spark before the
-    * order is claimed, so enabling it session-wide is always safe).
-    * This function enables it as part of its contract. */
+    * order is claimed). This function sets it only while the screened
+    * dedup runs: that body checkpoints the confirm, so the join is
+    * planned and executed inside the scope and the caller's conf is
+    * left as it was. */
   def dedupAgainstIngestStore(spark: SparkSession, newDocs: DataFrame,
       fpStoreDir: String, bloomStorePath: String, shards: Int): DataFrame = {
     // the loud stale-filter gate: a bloom store that missed an fp
@@ -860,11 +834,12 @@ object Dedup {
     // validation on a contract-conformant 0)
     val meta = requireCoherentStores(spark, fpStoreDir, bloomStorePath,
       shards)
-    spark.conf.set(
-      "spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-    dedupeScreened(
-      screenAgainstBloomStore(spark, newDocs, bloomStorePath, meta.shards),
-      graft.streaming.Ingest.readStore(spark, fpStoreDir))
+    Session.withConf(spark,
+        "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true") {
+      dedupeScreened(
+        screenAgainstBloomStore(spark, newDocs, bloomStorePath, meta.shards),
+        graft.streaming.Ingest.readStore(spark, fpStoreDir))
+    }
   }
 
   /** Registered bloom-screened twin of [[dedupIncremental]]: same

@@ -358,13 +358,11 @@ object Quantize {
 
   /** The tombstone table of a persisted IVF-PQ index — vec_id rows
     * under `deletes/` — or None when nothing was ever deleted (probes
-    * skip the anti-join entirely). Hadoop FileSystem API so remote
-    * index paths behave (the StreamIndex lesson). */
+    * skip the anti-join entirely). */
   private def ivfPqDeletes(spark: SparkSession,
       indexPath: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexPath/deletes")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
+    val p = s"$indexPath/deletes"
+    Option.when(graft.core.Dirs.holdsData(spark, p))(spark.read.parquet(p))
   }
 
   /** Delete vectors from a persisted IVF-PQ index WITHOUT rewriting
@@ -390,41 +388,24 @@ object Quantize {
     * cell per batch — the probe prunes the same either way, but file
     * COUNT is task/open/footer overhead) and fold tombstones into the
     * physical layout ([[deleteFromIvfPqIndex]] rows are dropped from
-    * their cells, then the tombstone table is cleared). Durable
-    * two-rename swap with loud interrupted-swap detection (the
-    * [[graft.ops.Terms.compactBm25Index]] discipline). Crash ordering
+    * their cells, then the tombstone table is cleared). The data
+    * table is replaced by [[graft.core.Dirs.swap]]. Crash ordering
     * is safe: the tombstone clear runs LAST, so a crash after the
     * data swap leaves redundant tombstones that probes anti-join
     * against rows that no longer exist — a no-op. Centroids and
     * codebooks are untouched: compaction never retrains. */
   def compactIvfPqIndex(spark: SparkSession, indexPath: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val data = new org.apache.hadoop.fs.Path(s"$indexPath/data")
-    val fs = data.getFileSystem(conf)
-    val qual = fs.makeQualified(data)
-    val tmp = new org.apache.hadoop.fs.Path(
-      qual.getParent, qual.getName + ".compact.tmp")
-    val old = new org.apache.hadoop.fs.Path(
-      qual.getParent, qual.getName + ".old")
-    require(!fs.exists(old),
-      s"compactIvfPqIndex: $old exists — a previous compaction swap was " +
-        "interrupted; recover (restore or delete the .old copy) by hand")
-    fs.delete(tmp, true)
-    val folded = ivfPqDeletes(spark, indexPath) match {
-      case Some(t) => spark.read.parquet(qual.toString)
-        .join(t.select("vec_id").distinct(), Seq("vec_id"), "left_anti")
-      case None => spark.read.parquet(qual.toString)
+    val data = s"$indexPath/data"
+    graft.core.Dirs.swap(spark, data) { tmp =>
+      val df = spark.read.parquet(data)
+      ivfPqDeletes(spark, indexPath)
+        .fold(df)(t => df.join(t.select("vec_id").distinct(), Seq("vec_id"),
+          "left_anti"))
+        .repartition(col("cell"))
+        .select(col("vec_id"), col("codes"), col("vec"), col("cell"))
+        .write.partitionBy("cell").parquet(tmp)
     }
-    folded.repartition(col("cell"))
-      .select(col("vec_id"), col("codes"), col("vec"), col("cell"))
-      .write.partitionBy("cell").parquet(tmp.toString)
-    require(fs.rename(qual, old),
-      s"compactIvfPqIndex: failed to move $qual aside")
-    require(fs.rename(tmp, qual),
-      s"compactIvfPqIndex: failed to move compacted data into place")
-    fs.delete(old, true)
-    val del = new org.apache.hadoop.fs.Path(s"$indexPath/deletes")
-    fs.delete(del, true)
+    graft.core.Dirs.delete(spark, s"$indexPath/deletes")
   }
 
   /** Query a persisted IVF-PQ index: probe each query's `nprobe` best

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Dirs, Tables}
 
 /** Corpus term statistics and per-document distinctive terms (TF-IDF
   * family) — the vocabulary/feature layer of a text pipeline.
@@ -262,9 +262,7 @@ object Terms {
     // while the rebuilt stats still count them. Cleared up front — the
     // three static overwrites below make a mid-build crash a torn
     // index regardless of ordering, so first is the simple choice.
-    val del = new org.apache.hadoop.fs.Path(s"$indexPath/deletes")
-    del.getFileSystem(
-      docs.sparkSession.sessionState.newHadoopConf()).delete(del, true)
+    Dirs.delete(docs.sparkSession, s"$indexPath/deletes")
     // empty-safe writes: a first stream batch can legally carry zero
     // adds (a delete-only CDC batch), and a zero-row PARTITIONED build
     // would create schema-less postings/doclen dirs that crash every
@@ -321,19 +319,11 @@ object Terms {
   /** The tombstone table of a persisted index — (doc_id, batch) rows
     * under `deletes/batch=M/` — or None when nothing was ever deleted
     * (probes skip the anti-join entirely, so a delete-free index pays
-    * zero for the feature). Hadoop FileSystem API, not java.nio: the
-    * index may live on a remote filesystem (the StreamIndex lesson). */
+    * zero for the feature). */
   private def bm25Deletes(spark: SparkSession,
       indexPath: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$indexPath/deletes")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    // data presence = a batch= partition dir, not bare existence: a
-    // zero-row partitioned write leaves a schema-less directory that
-    // would fail schema inference on read (delete no-ops skip their
-    // writes, but a crashed/hand-made empty dir must not brick probes)
-    val hasData = fs.exists(p) && fs.listStatus(p).exists(st =>
-      st.isDirectory && st.getPath.getName.startsWith("batch="))
-    if (hasData) Some(spark.read.parquet(p.toString)) else None
+    val p = s"$indexPath/deletes"
+    Option.when(Dirs.holdsData(spark, p))(spark.read.parquet(p))
   }
 
   /** Live postings of a persisted index: the postings scan minus
@@ -463,36 +453,11 @@ object Terms {
     * `streaming.StreamIndex`) add one file per bucket per batch;
     * pruning is unaffected but probe cost grows with file COUNT
     * (task, open and footer overhead), so a long-running index
-    * compacts on a cadence — the
-    * [[graft.streaming.Ingest.compactStore]] discipline: the
-    * compacted copy is durably written to a sibling tmp dir BEFORE
-    * the two-rename swap, an interrupted previous swap is detected
-    * loudly instead of papered over, and the rewrite is
-    * content-invariant (postings are just re-filed, so probes are
-    * bit-identical before and after — spec-asserted). Sidecars are
-    * untouched. */
+    * compacts on a cadence. Each rewritten sub-table is replaced by
+    * [[graft.core.Dirs.swap]], and the rewrite is content-invariant
+    * (postings are just re-filed, so probes are bit-identical before
+    * and after — spec-asserted). Sidecars are untouched. */
   def compactBm25Index(spark: SparkSession, indexPath: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    // one durable two-rename swap of a single sub-table
-    def swap(name: String)(rewrite: (DataFrame, String) => Unit): Unit = {
-      val src = new org.apache.hadoop.fs.Path(s"$indexPath/$name")
-      val fs = src.getFileSystem(conf)
-      val qual = fs.makeQualified(src)
-      val tmp = new org.apache.hadoop.fs.Path(
-        qual.getParent, qual.getName + ".compact.tmp")
-      val old = new org.apache.hadoop.fs.Path(
-        qual.getParent, qual.getName + ".old")
-      require(!fs.exists(old),
-        s"compactBm25Index: $old exists — a previous compaction swap was " +
-          "interrupted; recover (restore or delete the .old copy) by hand")
-      fs.delete(tmp, true)
-      rewrite(spark.read.parquet(qual.toString), tmp.toString)
-      require(fs.rename(qual, old),
-        s"compactBm25Index: failed to move $qual aside")
-      require(fs.rename(tmp, qual),
-        s"compactBm25Index: failed to move compacted $name into place")
-      fs.delete(old, true)
-    }
     // fold every batch into the CURRENT max batch id: keeping the max
     // (never a fresh id) means a later append still allocates above
     // it, and a stream's re-delivery of an already-folded batch is
@@ -510,23 +475,20 @@ object Terms {
     // negative deltas, so totals were net-of-deletes from the start.
     val tomb = bm25Deletes(spark, indexPath)
       .map(_.select("doc_id").distinct().localCheckpoint())
-    def minusTomb(df: DataFrame): DataFrame = tomb match {
-      case Some(t) => df.join(t, Seq("doc_id"), "left_anti")
-      case None => df
-    }
-    swap("postings") { (df, out) =>
-      writePartitionedSafe(
-        minusTomb(df).drop("batch").withColumn("batch", lit(maxBatch)),
-        out, Seq("bucket", "batch"), align = Some("bucket"))
-    }
-    if (tomb.isDefined) {
-      swap("doclen") { (df, out) =>
+    def rewrite(name: String, parts: Seq[String], align: Option[String]): Unit = {
+      val dir = s"$indexPath/$name"
+      Dirs.swap(spark, dir) { tmp =>
+        val df = spark.read.parquet(dir)
         writePartitionedSafe(
-          minusTomb(df).drop("batch").withColumn("batch", lit(maxBatch)),
-          out, Seq("batch"), align = None)
+          tomb.fold(df)(t => df.join(t, Seq("doc_id"), "left_anti"))
+            .drop("batch").withColumn("batch", lit(maxBatch)),
+          tmp, parts, align)
       }
-      val del = new org.apache.hadoop.fs.Path(s"$indexPath/deletes")
-      del.getFileSystem(conf).delete(del, true)
+    }
+    rewrite("postings", Seq("bucket", "batch"), align = Some("bucket"))
+    if (tomb.isDefined) {
+      rewrite("doclen", Seq("batch"), align = None)
+      Dirs.delete(spark, s"$indexPath/deletes")
     }
   }
 

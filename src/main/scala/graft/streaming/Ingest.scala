@@ -2,11 +2,12 @@ package graft.streaming
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
+import graft.core.Dirs
 import graft.ops.TextStats
 
 /** Continuous corpus ingest — the steady-state shape of a 100 TB
@@ -98,34 +99,14 @@ object Ingest {
     * landed (0 for a store that predates epoch tracking or doesn't
     * exist yet — such a store can only be screened by a filter store
     * built AFTER this counter existed, which is the safe direction). */
-  def storeEpoch(spark: SparkSession, storeDir: String): Long = {
-    val p = new Path(storeDir, EpochSidecar)
-    val fs = fileSystem(spark, storeDir)
-    if (!fs.exists(p)) 0L
-    else {
-      val in = fs.open(p)
-      val text = try {
-        val out = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](64)
-        var n = in.read(buf)
-        while (n > 0) { out.write(buf, 0, n); n = in.read(buf) }
-        new String(out.toByteArray, StandardCharsets.UTF_8).trim
-      } finally in.close()
-      val parsed = scala.util.Try(text.toLong).toOption.filter(_ >= 0)
+  def storeEpoch(spark: SparkSession, storeDir: String): Long =
+    Dirs.readSidecar(spark, storeDir, EpochSidecar).fold(0L) { text =>
+      val parsed = text.trim.toLongOption.filter(_ >= 0)
       require(parsed.isDefined,
         s"corrupt $EpochSidecar sidecar at $storeDir (content: " +
           s"'${text.take(64)}'): expected a non-negative epoch counter")
       parsed.get
     }
-  }
-
-  private[streaming] def writeEpochSidecar(spark: SparkSession,
-      storeDir: String, epoch: Long): Unit = {
-    val fs = fileSystem(spark, storeDir)
-    val out = fs.create(new Path(storeDir, EpochSidecar), true)
-    try out.write(epoch.toString.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-  }
 
   /** One catalog table per store directory (the catalog needs a name).
     * The name is an md5 of the NORMALIZED absolute URI: a 31-bit
@@ -136,61 +117,11 @@ object Ingest {
     * holds the bucketing metadata that makes the store side of the
     * anti-join shuffle-free. */
   def storeTableName(spark: SparkSession, storeDir: String): String = {
-    val norm = qualified(spark, storeDir).toUri.toString
+    val norm = Dirs.qualified(spark, storeDir).toUri.toString
     val md5 = java.security.MessageDigest.getInstance("MD5")
       .digest(norm.getBytes(StandardCharsets.UTF_8))
       .map("%02x".format(_)).mkString
     s"graft_fp_store_$md5"
-  }
-
-  private[streaming] def fileSystem(spark: SparkSession, dir: String): FileSystem =
-    new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-
-  /** Scheme-qualified absolute form of `dir` — the canonical identity
-    * of the store (relative paths and scheme-less spellings collapse
-    * to the same table name). */
-  private[streaming] def qualified(spark: SparkSession, dir: String): Path =
-    fileSystem(spark, dir).makeQualified(new Path(dir))
-
-  private[streaming] def pathExists(spark: SparkSession, dir: String): Boolean =
-    fileSystem(spark, dir).exists(new Path(dir))
-
-  /** Whether the store directory holds any data files — the check the
-    * coherence gate needs for PRE-EPOCH stores: content at epoch 0
-    * means appends happened before epoch tracking existed, so no
-    * filter store can prove it covers them. One directory listing;
-    * only consulted when the epoch reads 0 (never in steady state). */
-  private[graft] def storeHasData(spark: SparkSession,
-      storeDir: String): Boolean =
-    pathExists(spark, storeDir) && fileSystem(spark, storeDir)
-      .listStatus(new Path(storeDir))
-      .exists(_.getPath.getName.endsWith(".parquet"))
-
-  private def swapSiblings(spark: SparkSession, storeDir: String): (Path, Path) = {
-    val p = qualified(spark, storeDir)
-    (new Path(p.getParent, p.getName + ".old"),
-      new Path(p.getParent, p.getName + ".compact.tmp"))
-  }
-
-  /** Fail loudly when a crashed [[compactStore]] swap left the history
-    * in `<storeDir>.old` / `.compact.tmp` while the store itself is
-    * missing or sidecar-less — otherwise readStore would return an
-    * EMPTY store and the next append would silently orphan the dedup
-    * history the leftover dirs still hold. */
-  private def checkNoInterruptedSwap(spark: SparkSession,
-      storeDir: String): Unit = {
-    val fs = fileSystem(spark, storeDir)
-    val (oldPath, tmpPath) = swapSiblings(spark, storeDir)
-    val leftovers = Seq(oldPath, tmpPath).filter(fs.exists)
-    if (leftovers.nonEmpty &&
-        !fs.exists(new Path(storeDir, BucketsSidecar)))
-      throw new IllegalStateException(
-        s"fp store at $storeDir looks like an interrupted compactStore " +
-          s"swap: leftover ${leftovers.mkString(", ")} but no healthy " +
-          "store directory. Complete the swap manually (move the " +
-          ".compact.tmp dir into place, or restore .old) before " +
-          "reading or appending — proceeding would silently orphan " +
-          "the dedup history those directories hold.")
   }
 
   /** The persisted bucket count, if this directory holds a bucketed
@@ -199,37 +130,16 @@ object Ingest {
     * garbage) is CORRUPT, not absent: returning None would silently
     * re-register the store at the default count and break the layout,
     * so it fails with a descriptive error instead. */
-  def persistedBuckets(spark: SparkSession, storeDir: String): Option[Int] = {
-    val p = new Path(storeDir, BucketsSidecar)
-    val fs = fileSystem(spark, storeDir)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      // read fully: a single read() may return a partial buffer
-      val text = try {
-        val out = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](64)
-        var n = in.read(buf)
-        while (n > 0) { out.write(buf, 0, n); n = in.read(buf) }
-        new String(out.toByteArray, StandardCharsets.UTF_8).trim
-      } finally in.close()
-      val parsed = scala.util.Try(text.toInt).toOption.filter(_ > 0)
+  def persistedBuckets(spark: SparkSession, storeDir: String): Option[Int] =
+    Dirs.readSidecar(spark, storeDir, BucketsSidecar).map { text =>
+      val parsed = text.trim.toIntOption.filter(_ > 0)
       require(parsed.isDefined,
         s"corrupt $BucketsSidecar sidecar at $storeDir (content: " +
           s"'${text.take(64)}'): expected a positive bucket count. " +
           "Restore the sidecar or rewrite the store via compactStore " +
           "with an explicit bucket count.")
-      parsed
+      parsed.get
     }
-  }
-
-  private def writeBucketsSidecar(spark: SparkSession, storeDir: String,
-      buckets: Int): Unit = {
-    val fs = fileSystem(spark, storeDir)
-    val out = fs.create(new Path(storeDir, BucketsSidecar), true)
-    try out.write(buckets.toString.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-  }
 
   /** Register the bucketed external store table (idempotent) and
     * return (table name, effective bucket count).
@@ -251,7 +161,7 @@ object Ingest {
   def ensureStore(spark: SparkSession, storeDir: String,
       buckets: Int = 0): (String, Int) = {
     val tbl = storeTableName(spark, storeDir)
-    checkNoInterruptedSwap(spark, storeDir)
+    Dirs.requireNoInterruptedSwap(spark, storeDir)
     val persisted = persistedBuckets(spark, storeDir)
     persisted.foreach { n =>
       require(buckets <= 0 || buckets == n,
@@ -262,22 +172,20 @@ object Ingest {
     val n = persisted.getOrElse(if (buckets > 0) buckets
       else DefaultStoreBuckets)
     if (!spark.catalog.tableExists(tbl)) {
-      val legacy = persisted.isEmpty && pathExists(spark, storeDir) &&
-        fileSystem(spark, storeDir).listStatus(new Path(storeDir))
-          .exists(_.getPath.getName.endsWith(".parquet"))
-      require(!legacy,
+      require(persisted.isDefined || !Dirs.holdsData(spark, storeDir),
         s"$storeDir holds a pre-bucketing store layout (data files, no " +
           s"$BucketsSidecar sidecar); run compactStore to migrate it " +
           "before bucketed appends")
       // backslash-escape quotes: the URI is caller data interpolated
       // into a SQL string literal; an unescaped quote breaks the DDL
-      val loc = qualified(spark, storeDir).toUri.toString
+      val loc = Dirs.qualified(spark, storeDir).toUri.toString
         .replace("\\", "\\\\").replace("'", "\\'")
       spark.sql(
         s"""CREATE TABLE $tbl (fp STRING) USING parquet
            |CLUSTERED BY (fp) SORTED BY (fp) INTO $n BUCKETS
            |LOCATION '$loc'""".stripMargin)
-      if (persisted.isEmpty) writeBucketsSidecar(spark, storeDir, n)
+      if (persisted.isEmpty)
+        Dirs.writeSidecar(spark, storeDir, BucketsSidecar, n.toString)
     }
     (tbl, n)
   }
@@ -317,7 +225,8 @@ object Ingest {
       // epoch after a crash: a filter claiming full coverage while
       // rows it never saw sit in the store — the silent-readmission
       // shape this sidecar exists to kill.
-      writeEpochSidecar(spark, storeDir, storeEpoch(spark, storeDir) + 1)
+      Dirs.writeSidecar(spark, storeDir, EpochSidecar,
+        (storeEpoch(spark, storeDir) + 1).toString)
       graft.core.Session.withConf(spark, key -> "false") {
         fps.select("fp")
           .repartition(n, col("fp"))
@@ -336,30 +245,25 @@ object Ingest {
     * (read plain, rewritten bucketed at `buckets` /
     * [[DefaultStoreBuckets]]).
     *
-    * Crash safety: the compacted copy is fully written and durable in
-    * a sibling `<storeDir>.compact.tmp` directory BEFORE anything is
-    * deleted, then swapped in by two directory renames — the history
-    * is never held only in executor memory. The windows that remain:
-    * between the two renames the store path is briefly absent
-    * (compaction is a maintenance op, not concurrent with ingest), and
-    * a crash mid-swap leaves `<storeDir>.old` / `.compact.tmp` for
-    * manual recovery rather than losing data. */
+    * Crash safety: the compacted copy replaces the store through
+    * [[graft.core.Dirs.swap]], so a crashed previous swap is refused
+    * loudly and the history is never held only in executor memory. */
   def compactStore(spark: SparkSession, storeDir: String,
       buckets: Int = 0): Unit = {
     val tbl = storeTableName(spark, storeDir)
     // a crashed previous swap must be recovered by hand, not papered
     // over: the snapshot read below would otherwise see a missing (or
     // half-swapped) store and compact an empty history
-    checkNoInterruptedSwap(spark, storeDir)
+    Dirs.requireNoInterruptedSwap(spark, storeDir)
     // a store that was never created is a no-op, not a raw
     // path-does-not-exist AnalysisException from inside the read —
     // the same missing-dir handling readStore applies
-    if (!pathExists(spark, storeDir)) return
+    if (!Dirs.exists(spark, storeDir)) return
     // An explicit positive count WINS over the sidecar: compactStore is
     // the documented re-bucketing path (ensureStore's mismatch error
-    // points here), and the durable tmp-write + two-rename swap below
-    // makes changing the layout safe. Only with buckets <= 0 does the
-    // store keep its persisted count.
+    // points here), and the durable swap below makes changing the
+    // layout safe. Only with buckets <= 0 does the store keep its
+    // persisted count.
     val n = if (buckets > 0) buckets
       else persistedBuckets(spark, storeDir).getOrElse(DefaultStoreBuckets)
     // Read the CURRENT layout as plain parquet files, whatever it is —
@@ -374,47 +278,29 @@ object Ingest {
     // content-invariant (a distinct over a set), so every filter
     // store that covered this epoch before still covers it after —
     // letting the tmp store's own epoch (1) through would instead
-    // make the next append under-count and pass a stale filter
+    // make the next append under-count and pass a stale filter.
+    // A pre-epoch legacy store WITH content stamps at 1: compaction is
+    // the documented migration path, and the stamp gives its history a
+    // checkable epoch (a filter store rebuilt from the compacted
+    // content covers it).
     val epoch = storeEpoch(spark, storeDir)
-
-    // 1. Write the compacted buckets to a sibling temp dir, durable
-    //    before any delete. The temp table exists only to carry the
-    //    bucket spec through the write.
-    val fs = fileSystem(spark, storeDir)
-    val storePath = qualified(spark, storeDir)
-    val tmpPath = new Path(storePath.getParent, storePath.getName + ".compact.tmp")
-    val oldPath = new Path(storePath.getParent, storePath.getName + ".old")
-    fs.delete(tmpPath, true)
-    val tmpTbl = storeTableName(spark, tmpPath.toString)
-    spark.sql(s"DROP TABLE IF EXISTS $tmpTbl")
-    appendToStore(spark, tmpPath.toString, snapshot, n)
-    spark.sql(s"DROP TABLE IF EXISTS $tmpTbl")
-    // the preserved epoch is written INTO the tmp dir so it rides the
-    // swap rename atomically — restoring it after the swap left a
-    // crash window that reset the store to the tmp dir's own count
-    // (1), deflating it below existing filter coverage and silently
-    // disarming the staleness guard. A pre-epoch legacy store WITH
-    // content stamps at 1: compaction is the documented migration
-    // path, and the stamp gives its history a checkable epoch (a
-    // filter store rebuilt from the compacted content covers it).
-    val hadData = fs.exists(storePath) && fs.listStatus(storePath)
-      .exists(_.getPath.getName.endsWith(".parquet"))
-    writeEpochSidecar(spark, tmpPath.toString,
-      if (hadData) math.max(epoch, 1L) else epoch)
-
-    // 2. Swap: old store aside, compacted copy in, old store dropped.
-    //    The catalog entry (location unchanged) survives the swap; the
-    //    bucket-id file naming travels with the files.
-    spark.sql(s"DROP TABLE IF EXISTS $tbl") // re-registered below at count n
-    fs.delete(oldPath, true)
-    if (fs.exists(storePath)) {
-      require(fs.rename(storePath, oldPath),
-        s"compactStore: failed to move $storePath aside")
+    val stamp = if (Dirs.holdsData(spark, storeDir)) math.max(epoch, 1L)
+      else epoch
+    Dirs.swap(spark, storeDir) { tmp =>
+      // the temp table exists only to carry the bucket spec through
+      // the write
+      val tmpTbl = storeTableName(spark, tmp)
+      spark.sql(s"DROP TABLE IF EXISTS $tmpTbl")
+      appendToStore(spark, tmp, snapshot, n)
+      spark.sql(s"DROP TABLE IF EXISTS $tmpTbl")
+      // the preserved epoch is written INTO the tmp dir so it rides the
+      // swap rename atomically — restoring it after the swap left a
+      // crash window that reset the store to the tmp dir's own count
+      // (1), deflating it below existing filter coverage and silently
+      // disarming the staleness guard
+      Dirs.writeSidecar(spark, tmp, EpochSidecar, stamp.toString)
+      spark.sql(s"DROP TABLE IF EXISTS $tbl") // re-registered below at count n
     }
-    require(fs.rename(tmpPath, storePath),
-      s"compactStore: failed to move compacted store into place " +
-        s"(previous store preserved at $oldPath)")
-    fs.delete(oldPath, true)
     ensureStore(spark, storeDir, n)
     ()
   }
@@ -446,13 +332,9 @@ object Ingest {
       storeBuckets: Int = 0,
       admit: DataFrame => DataFrame = identity,
       bloomStorePath: String = null): Unit = {
-    val fs = fileSystem(spark, corpusDir)
-    val corpusQ = qualified(spark, corpusDir)
-    val commitDir = new Path(corpusQ, s"ingest_batch=$batchId")
+    val fs = Dirs.fs(spark, corpusDir)
+    val (stageDir, commitDir) = Dirs.stagedBatch(spark, corpusDir, batchId)
     if (fs.exists(commitDir)) return // fully applied earlier
-    val stageDir = new Path(
-      new Path(corpusQ.getParent, corpusQ.getName + ".staging"),
-      batchId.toString)
     // a COMPLETE stage (_SUCCESS) is authoritative: survivors must
     // not be recomputed once any fp of this batch may have reached
     // the store, or the anti-join would drop those docs and the
@@ -489,16 +371,9 @@ object Ingest {
       graft.ops.Dedup.appendToBloomStore(spark, fps, bloomStorePath,
         coversEpoch = storeEpoch(spark, storeDir),
         expectedItems = fps.count())
-    fs.mkdirs(corpusQ)
-    require(fs.rename(stageDir, commitDir),
-      s"ingest commit failed: could not rename $stageDir to $commitDir")
-    // the rename is a RAW FileSystem mutation — unlike a Spark write it
-    // bypasses the session's metadata/cache invalidation, so without
-    // this refresh a same-session reader of the corpus (the per-batch
-    // manifest recompute in StreamShards, or anything that cached a
-    // scan of it) keeps serving the pre-commit file listing
-    spark.catalog.refreshByPath(corpusDir)
-    ()
+    // the refresh matters to same-session readers of the corpus: the
+    // per-batch manifest recompute in StreamShards
+    Dirs.commitStaged(spark, stageDir, commitDir, corpusDir)
   }
 
   /** One micro-batch: survivors (new content, min doc_id per fp) and
@@ -541,9 +416,6 @@ object Ingest {
       storeDir: String, bloomStorePath: String): DataFrame = {
     val meta = graft.ops.Dedup.requireCoherentStores(spark, storeDir,
       bloomStorePath, shards = 0)
-    // sort-free bucketed confirm, same contract as dedupAgainstIngestStore
-    spark.conf.set(
-      "spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
     val verdicts = graft.ops.Dedup.screenVerdictsAgainstBloomStore(
       spark, batch, bloomStorePath, meta.shards)
     // localCheckpoint for the same reason as ingestBatch: the frame
@@ -552,12 +424,17 @@ object Ingest {
     // itself is Dedup.confirmScreened: a small positive slice probes
     // the store as a bucket-PRUNED IN-set scan (per-batch store IO
     // proportional to the duplicate count), a large one takes the
-    // exchange-free merge join off the bucket layout.
-    val fresh = graft.ops.Dedup.confirmScreened(
-        verdicts.where(col("__maybe")), readStore(spark, storeDir))
-      .unionByName(verdicts.where(!col("__maybe")))
-      .select("doc_id", "fp")
-      .localCheckpoint()
+    // exchange-free merge join off the bucket layout — sort-free under
+    // the scoped conf, which reaches the join because the checkpoint
+    // plans and runs it inside (same contract as dedupAgainstIngestStore)
+    val fresh = graft.core.Session.withConf(spark,
+        "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true") {
+      graft.ops.Dedup.confirmScreened(
+          verdicts.where(col("__maybe")), readStore(spark, storeDir))
+        .unionByName(verdicts.where(!col("__maybe")))
+        .select("doc_id", "fp")
+        .localCheckpoint()
+    }
     val keep = fresh.groupBy("fp").agg(min(col("doc_id")).as("doc_id"))
     val survivors = fresh.join(keep.select("doc_id"), Seq("doc_id"),
       "left_semi")
@@ -582,11 +459,11 @@ object Ingest {
     * for a pre-bucketing layout (correct, just not shuffle-free);
     * empty otherwise. */
   def readStore(spark: SparkSession, storeDir: String): DataFrame = {
-    checkNoInterruptedSwap(spark, storeDir)
+    Dirs.requireNoInterruptedSwap(spark, storeDir)
     val registered = spark.catalog.tableExists(storeTableName(spark, storeDir))
     if (registered || persistedBuckets(spark, storeDir).isDefined)
       spark.table(ensureStore(spark, storeDir)._1)
-    else if (pathExists(spark, storeDir))
+    else if (Dirs.exists(spark, storeDir))
       spark.read.schema(storeSchema).parquet(storeDir)
     else
       spark.createDataFrame(
@@ -620,7 +497,7 @@ object Ingest {
       admit: DataFrame => DataFrame = identity,
       bloomShards: Int = 0): Unit = {
     val bloomStorePath = if (bloomShards > 0) {
-      val p = qualified(spark, storeDir)
+      val p = Dirs.qualified(spark, storeDir)
       val path = new Path(p.getParent, p.getName + ".bloom").toString
       val meta = graft.ops.Dedup.ensureBloomStore(spark, path, bloomShards)
       // a PRE-EPOCH fp store (content, counter 0) gets stamped at 1
@@ -631,8 +508,8 @@ object Ingest {
       // PASSES the 0 >= 0 epoch compare and silently readmits every
       // legacy duplicate
       if (storeEpoch(spark, storeDir) == 0 &&
-          storeHasData(spark, storeDir))
-        writeEpochSidecar(spark, storeDir, 1)
+          Dirs.holdsData(spark, storeDir))
+        Dirs.writeSidecar(spark, storeDir, EpochSidecar, "1")
       if (meta.coversEpoch < storeEpoch(spark, storeDir))
         graft.ops.Dedup.rebuildBloomStore(spark, storeDir, path)
       path

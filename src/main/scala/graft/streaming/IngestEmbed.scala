@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.core.Dirs
 import graft.functions.VectorFunctions.{dot, normalize, toDoubleVec}
 import graft.ops.{Components, Similarity}
 
@@ -54,9 +55,7 @@ import graft.ops.{Components, Similarity}
   * vectors, or the history probe would drop them and the commit
   * would lose the batch), append the index under batch=N (dynamic
   * overwrite ⇒ re-delivery replaces, never double-counts), then
-  * commit by one atomic rename into `ingest_batch=N`, followed by a
-  * metadata-cache refresh (the rename bypasses Spark's own write
-  * invalidation). */
+  * commit into `ingest_batch=N` ([[graft.core.Dirs.commitStaged]]). */
 object IngestEmbed {
 
   private def corpusPath(workDir: String) = s"$workDir/embeddings.parquet"
@@ -117,13 +116,10 @@ object IngestEmbed {
       batchId: Long, workDir: String, tau: Double = 0.4,
       nprobe: Int = 4, withinBatch: String = "pairs",
       eps: Double = 5e-4): Unit = {
-    val corpusQ = Ingest.qualified(spark, corpusPath(workDir))
-    val fs = Ingest.fileSystem(spark, workDir)
-    val commitDir = new Path(corpusQ, s"ingest_batch=$batchId")
+    val fs = Dirs.fs(spark, workDir)
+    val (stageDir, commitDir) =
+      Dirs.stagedBatch(spark, corpusPath(workDir), batchId)
     if (fs.exists(commitDir)) return // fully applied earlier
-    val stageDir = new Path(
-      new Path(corpusQ.getParent, corpusQ.getName + ".staging"),
-      batchId.toString)
 
     if (!fs.exists(new Path(stageDir, "_SUCCESS")))
       graft.core.Par.labeled(spark, s"ingest-embed b$batchId: stage") {
@@ -141,7 +137,7 @@ object IngestEmbed {
       // frozen centroids: trained on the first NON-EMPTY batch
       // (overwrite ⇒ a re-delivered first batch retrains identically —
       // the build is deterministic), read back for every later one
-      if (!Ingest.pathExists(spark, centsPath(workDir))) {
+      if (!Dirs.exists(spark, centsPath(workDir))) {
         // cell granularity follows the within-batch discipline the
         // work dir runs (frozen thereafter): the pair join wants
         // nprobe·√n cells (occupancy² pruning), the screen wants the
@@ -164,7 +160,7 @@ object IngestEmbed {
       //    driver list (≤ cell count) → directory-level pruning, the
       //    ivfTopKIndexed pattern.
       val fresh =
-        if (Ingest.pathExists(spark, dataPath(workDir))) {
+        if (Dirs.exists(spark, dataPath(workDir))) {
           val probeCells = assigned.select("cell").distinct()
             .collect().map(_.getInt(0)).toSeq
           // packedScan: the per-(cell,batch) layout is one tiny file
@@ -280,11 +276,7 @@ object IngestEmbed {
         .parquet(dataPath(workDir))
     }
 
-    fs.mkdirs(corpusQ)
-    require(fs.rename(stageDir, commitDir),
-      s"embed ingest commit failed: could not rename $stageDir to $commitDir")
-    spark.catalog.refreshByPath(corpusPath(workDir))
-    ()
+    Dirs.commitStaged(spark, stageDir, commitDir, corpusPath(workDir))
   }
 
   /** Drive the embedding ingest over every file currently in
@@ -356,11 +348,9 @@ object IngestEmbed {
     * same as [[graft.ops.Quantize.appendToIvfPqIndex]]'s): retrain
     * centroids on everything kept so far (same granularity formula
     * as the first-batch training, now at full-history n), re-assign
-    * every kept vector to its new nearest cell, and atomically swap
-    * `vindex/` via the two-rename discipline of
-    * [[graft.ops.Quantize.compactIvfPqIndex]] (loud interrupted-swap
-    * detection; a crash between the renames leaves `.old` for hand
-    * recovery, never a half-written live index). Rows keep their
+    * every kept vector to its new nearest cell, and replace `vindex/`
+    * through [[graft.core.Dirs.swap]] (never a half-written live
+    * index). Rows keep their
     * `batch` column, so the per-batch dynamic-overwrite idempotence
     * of re-delivered micro-batches survives the rebuild. Cost: one
     * centroid train + one full-history assignment write — O(history),
@@ -373,35 +363,21 @@ object IngestEmbed {
     val cents = Similarity
       .ivfCentroidsDf(hist.select("vec_id", "vec"), nCells, iters = 2)
       .localCheckpoint()
-    val fs = Ingest.fileSystem(spark, workDir)
-    val vindex = fs.makeQualified(
-      new Path(s"$workDir/vindex"))
-    val tmp = new Path(vindex.getParent, vindex.getName + ".rebuild.tmp")
-    val old = new Path(vindex.getParent, vindex.getName + ".old")
-    require(!fs.exists(old),
-      s"rebuildEmbedIndex: $old exists — a previous rebuild swap was " +
-        "interrupted; recover (restore or delete the .old copy) by hand")
-    fs.delete(tmp, true)
-    cents.write.parquet(s"$tmp/centroids")
-    // explicit count, same reason as the append write: AQE coalesces a
-    // keyless repartition to 1 partition and that task creates every
-    // (cell, batch) file serially (measured 9.8 s for the 353-file
-    // rebuild at sf0.1)
-    Similarity.assignCells(hist.select("vec_id", "vec"), cents, nprobe = 1)
-      .join(hist, "vec_id")
-      .repartition(
-        math.max(1, math.min(nCells,
-          spark.sparkContext.defaultParallelism)), col("cell"))
-      .select(col("vec_id"), col("vec"), col("cell"), col("batch"))
-      .write.partitionBy("cell", "batch")
-      .parquet(s"$tmp/data")
-    require(fs.rename(vindex, old),
-      s"rebuildEmbedIndex: failed to move $vindex aside")
-    require(fs.rename(tmp, vindex),
-      s"rebuildEmbedIndex: failed to move rebuilt index into place")
-    fs.delete(old, true)
-    spark.catalog.refreshByPath(dataPath(workDir))
-    spark.catalog.refreshByPath(centsPath(workDir))
+    Dirs.swap(spark, s"$workDir/vindex") { tmp =>
+      cents.write.parquet(s"$tmp/centroids")
+      // explicit count, same reason as the append write: AQE coalesces
+      // a keyless repartition to 1 partition and that task creates
+      // every (cell, batch) file serially (measured 9.8 s for the
+      // 353-file rebuild at sf0.1)
+      Similarity.assignCells(hist.select("vec_id", "vec"), cents, nprobe = 1)
+        .join(hist, "vec_id")
+        .repartition(
+          math.max(1, math.min(nCells,
+            spark.sparkContext.defaultParallelism)), col("cell"))
+        .select(col("vec_id"), col("vec"), col("cell"), col("batch"))
+        .write.partitionBy("cell", "batch")
+        .parquet(s"$tmp/data")
+    }
   }
 
   /** Driver-gate row for STREAMING-index drift (`q_ingest_embed_drift`)
@@ -452,11 +428,9 @@ object IngestEmbed {
     // the probe below reads both the stale store and its rebuild, so
     // the rebuild runs on a copy
     val rebuilt = Scratch.dir("graft-ingest-rebuilt")
-    val conf = spark.sessionState.newHadoopConf()
-    val src = new Path(stale)
-    val fs = src.getFileSystem(conf)
-    org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, new Path(rebuilt),
-      false, conf)
+    val fs = Dirs.fs(spark, stale)
+    org.apache.hadoop.fs.FileUtil.copy(fs, new Path(stale), fs,
+      new Path(rebuilt), false, spark.sessionState.newHadoopConf())
     rebuildEmbedIndex(spark, rebuilt)
     val (queries, truth) =
       graft.core.Par.labeled(spark, "drift-gate: queries+truth") {

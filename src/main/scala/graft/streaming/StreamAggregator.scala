@@ -176,9 +176,9 @@ object StreamAggregator {
     * report -1 and disable the exactly-once no-op guard. */
   private[streaming] def lastApplied(spark: SparkSession,
       dir: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/applied")
-    if (!p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)) -1L
-    else spark.read.parquet(p.toString).head().getLong(0)
+    val p = s"$dir/applied"
+    if (!graft.core.Dirs.exists(spark, p)) -1L
+    else spark.read.parquet(p).head().getLong(0)
   }
 
   /** Advance the marker [[lastApplied]] reads; write it last. */

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.core.Dirs
 import graft.ops.Terms
 
 /** Continuous BM25 indexing — the incremental form of
@@ -40,15 +41,11 @@ object StreamIndex {
   def applyBm25Batch(spark: SparkSession, indexPath: String,
       batch: DataFrame, batchId: Long, nBuckets: Int = 64): Unit = {
     if (batchId <= lastApplied(spark, indexPath)) return
-    // Hadoop FS, not java.nio: the index may live on any Hadoop-
-    // compatible filesystem (hdfs://, s3a://) where a local-path
-    // existence check is always false — which would silently rebuild
-    // in overwrite mode every batch, replacing the accumulated index
-    // with just the current batch
-    val stats = new org.apache.hadoop.fs.Path(s"$indexPath/stats")
-    val hasIndex = stats
-      .getFileSystem(spark.sessionState.newHadoopConf()).exists(stats)
-    if (!hasIndex) Terms.buildBm25IndexFor(batch, indexPath, nBuckets)
+    // Hadoop FS (Dirs), not java.nio: on hdfs:// or s3a:// a local
+    // existence check is always false, which would rebuild in overwrite
+    // mode every batch, replacing the index with just the current batch
+    if (!Dirs.exists(spark, s"$indexPath/stats"))
+      Terms.buildBm25IndexFor(batch, indexPath, nBuckets)
     else Terms.appendToBm25Index(spark, indexPath, batch, batchId)
     markApplied(spark, indexPath, batchId)
   }
@@ -71,10 +68,8 @@ object StreamIndex {
     if (batchId <= lastApplied(spark, indexPath)) return
     val adds = batch.where(col("op") === "add").select("doc_id", "text")
     val dels = batch.where(col("op") === "delete").select("doc_id")
-    val stats = new org.apache.hadoop.fs.Path(s"$indexPath/stats")
-    val hasIndex = stats
-      .getFileSystem(spark.sessionState.newHadoopConf()).exists(stats)
-    if (!hasIndex) Terms.buildBm25IndexFor(adds, indexPath, nBuckets)
+    if (!Dirs.exists(spark, s"$indexPath/stats"))
+      Terms.buildBm25IndexFor(adds, indexPath, nBuckets)
     else Terms.appendToBm25Index(spark, indexPath, adds, 2L * batchId)
     // content-deterministic skip: a delete-free batch writes no
     // tombstone partition and no empty stats delta (re-delivery

@@ -32,8 +32,7 @@ class CurationSpec extends AnyFunSuite with SharedSpark {
 
   test("q_near_dup_components and q_curriculum see a documents table " +
     "rewritten between two runs in one session") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-rewritten-docs").toString
+    val dir = tempDir("graft-rewritten-docs")
     org.apache.commons.io.FileUtils.copyDirectory(
       new java.io.File(sf), new java.io.File(dir))
     def runOn(d: String, q: String): Array[org.apache.spark.sql.Row] =
@@ -55,8 +54,7 @@ class CurationSpec extends AnyFunSuite with SharedSpark {
     spark.read.parquet(s"$sf/embeddings.parquet")
       .where(col("vec_id") % 2 === 0)
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val fresh = java.nio.file.Files
-      .createTempDirectory("graft-rewritten-fresh").toString
+    val fresh = tempDir("graft-rewritten-fresh")
     org.apache.commons.io.FileUtils.copyDirectory(
       new java.io.File(dir), new java.io.File(fresh))
     for (q <- indexed)

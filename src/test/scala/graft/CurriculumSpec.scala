@@ -81,8 +81,7 @@ class CurriculumSpec extends AnyFunSuite with SharedSpark {
 
   test("13+-digit doc_ids round-trip through the composite sort keys " +
     "(ppl buckets and curriculum schedule)") {
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-bigid-curr").toString
+    val tmp = tempDir("graft-bigid-curr")
     import spark.implicits._
     // ids ≥ 10^12 sharing a 12-char prefix: a too-narrow pad truncates
     // both to the same key — corrupted output ids, colliding order

@@ -81,7 +81,7 @@ class GoldenParitySpec extends AnyFunSuite with SharedSpark {
       h <- 0L until (if (day == 2) best(i) else best(i) - 1)
     } yield ("addr", 20.0 + day, 68.0 + day, city, "US", "9q8y", s"$city-h$h",
       37.7, -122.4, s"hotel $h", f"2017-08-$day%02d", 2017, 8, day)
-    val base = java.nio.file.Files.createTempDirectory("graft-hw")
+    val base = java.nio.file.Paths.get(tempDir("graft-hw"))
     val dir = base.resolve("hotel-weather").toString
     rows.toDF("address", "avg_tmpr_c", "avg_tmpr_f", "city", "country",
         "geoHash", "id", "latitude", "longitude", "name", "wthr_date",

@@ -28,7 +28,7 @@ class IngestSpec extends AnyFunSuite with SharedSpark {
 
   test("streamed ingest == batch first-arrival dedup over the union; " +
     "re-delivery and re-runs are no-ops") {
-    val base = Files.createTempDirectory("graft-ingest").toString
+    val base = tempDir("graft-ingest")
     val (src, corpus, store, ckpt) =
       (s"$base/src", s"$base/corpus", s"$base/store", s"$base/ckpt")
     Files.createDirectories(java.nio.file.Paths.get(src))
@@ -97,7 +97,7 @@ class IngestSpec extends AnyFunSuite with SharedSpark {
 
   test("quality-screened ingest: only positively-scored docs admitted, " +
     "rejects never fingerprint, stream == screened sequential batches") {
-    val base = Files.createTempDirectory("graft-ingest-screen").toString
+    val base = tempDir("graft-ingest-screen")
     val (src, corpus, store, ckpt) =
       (s"$base/src", s"$base/corpus", s"$base/store", s"$base/ckpt")
     Files.createDirectories(java.nio.file.Paths.get(src))
@@ -149,7 +149,7 @@ class IngestSpec extends AnyFunSuite with SharedSpark {
 
   test("runIngest with an in-stream compaction cadence: results are " +
     "identical to the uncompacted run and the store ends compact") {
-    val base = Files.createTempDirectory("graft-ingest-compact").toString
+    val base = tempDir("graft-ingest-compact")
     val (src, ckpt) = (s"$base/src", s"$base/ckpt")
     Files.createDirectories(java.nio.file.Paths.get(src))
     val docs = Tables.documents(spark, sf).cache()
@@ -186,7 +186,7 @@ class IngestSpec extends AnyFunSuite with SharedSpark {
   test("applyIngestBatch is exactly-once: re-delivery no-ops, and a " +
     "crash between fp append and commit neither loses nor duplicates " +
     "the batch") {
-    val base = Files.createTempDirectory("graft-ingest-once").toString
+    val base = tempDir("graft-ingest-once")
     val (corpus, store) = (s"$base/corpus", s"$base/store")
     val docs = Tables.documents(spark, sf)
       .select("doc_id", "text", "lang", "source", "n_chars").cache()
@@ -233,7 +233,7 @@ class IngestSpec extends AnyFunSuite with SharedSpark {
 
   test("bucketed fp store: anti-join shuffles only the batch side; " +
     "compaction keeps content and bucketing") {
-    val base = Files.createTempDirectory("graft-store").toString
+    val base = tempDir("graft-store")
     val store = s"$base/store"
     val docs = Tables.documents(spark, sf)
       .withColumn("fp", TextStats.fingerprint(col("text")))
@@ -280,7 +280,7 @@ class IngestSpec extends AnyFunSuite with SharedSpark {
 
   test("dedupAgainstIngestStore: result == unscreened dedup; confirm " +
     "join reads the store with NO exchange and NO sort per batch") {
-    val base = Files.createTempDirectory("graft-fullstore").toString
+    val base = tempDir("graft-fullstore")
     val docs = Tables.documents(spark, sf)
     // spike the batch with re-crawled copies of history docs: without
     // guaranteed bloom-positives the confirm anti-join is EMPTY at
@@ -365,8 +365,11 @@ class IngestSpec extends AnyFunSuite with SharedSpark {
 
     // regime 2 (cap disabled → the at-scale merge-join shape): the
     // store side of the anti-join crosses NO exchange and NO sort;
-    // only the batch side moves
+    // only the batch side moves. The confirm frame is planned here, so
+    // the sorted-scan conf the screened paths scope around their own
+    // confirm is set for this block too.
     spark.conf.set("spark.graft.dedup.confirmInFilterCap", "0")
+    spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
     try noBroadcast {
       val df = graft.ops.Dedup.confirmScreened(maybes, store)
       df.collect()
@@ -391,13 +394,36 @@ class IngestSpec extends AnyFunSuite with SharedSpark {
       assert(historySorts.isEmpty,
         s"history side re-sorted ${historySorts.size}x (written bucket " +
           s"order should carry):\n${nodes.head}")
-    } finally spark.conf.unset("spark.graft.dedup.confirmInFilterCap")
+    } finally {
+      spark.conf.unset("spark.graft.dedup.confirmInFilterCap")
+      spark.conf.unset("spark.sql.legacy.bucketedTableScan.outputOrdering")
+    }
+  }
+
+  test("dedupAgainstIngestStore and ingestBatchScreened leave the " +
+    "caller's session conf unchanged") {
+    val s = spark.newSession()
+    val base = tempDir("graft-store-conf")
+    val docs = Tables.documents(s, sf)
+    val batch = docs.where(col("source").isin("src0", "src1"))
+    val history = docs.where(!col("source").isin("src0", "src1"))
+      .select(TextStats.fingerprint(col("text")).as("fp")).distinct()
+    Ingest.appendToStore(s, s"$base/fps", history)
+    graft.ops.Dedup.buildBloomStore(history, s"$base/bloom", shards = 4,
+      itemsPerShard = 64, coversEpoch = Ingest.storeEpoch(s, s"$base/fps"))
+    val before = s.conf.getAll
+    graft.ops.Dedup.dedupAgainstIngestStore(s, batch, s"$base/fps",
+      s"$base/bloom", shards = 4).collect()
+    assert(s.conf.getAll === before)
+    Ingest.ingestBatchScreened(s, batch, s"$base/fps", s"$base/bloom")
+      .collect()
+    assert(s.conf.getAll === before)
   }
 
   test("IN-probe bucket pruning holds at the production-wide layout " +
     "(4096 buckets): selected buckets track the positive fps, not the " +
     "store width") {
-    val base = Files.createTempDirectory("graft-wide-probe").toString
+    val base = tempDir("graft-wide-probe")
     val docs = Tables.documents(spark, sf)
     val history = docs.where(col("doc_id") >= 100)
       .select(TextStats.fingerprint(col("text")).as("fp")).distinct()
@@ -427,7 +453,7 @@ class IngestSpec extends AnyFunSuite with SharedSpark {
 
   test("store survives catalog loss (fresh-JVM reopen): appends keep " +
     "working via DDL re-registration, never CTAS over the data") {
-    val base = Files.createTempDirectory("graft-reopen").toString
+    val base = tempDir("graft-reopen")
     val store = s"$base/store"
     val docs = Tables.documents(spark, sf)
       .withColumn("fp", TextStats.fingerprint(col("text")))
@@ -455,7 +481,7 @@ class IngestSpec extends AnyFunSuite with SharedSpark {
 
   test("bucket count is fixed at creation: persisted in the sidecar, " +
     "validated on reopen, mismatched appends fail loudly") {
-    val base = Files.createTempDirectory("graft-buckets").toString
+    val base = tempDir("graft-buckets")
     val store = s"$base/store"
     val docs = Tables.documents(spark, sf)
       .withColumn("fp", TextStats.fingerprint(col("text")))
@@ -482,7 +508,7 @@ class IngestSpec extends AnyFunSuite with SharedSpark {
 
   test("compactStore honors an explicit bucket count over the sidecar: " +
     "the documented re-bucketing path actually re-buckets") {
-    val base = Files.createTempDirectory("graft-rebucket").toString
+    val base = tempDir("graft-rebucket")
     val store = s"$base/store"
     val docs = Tables.documents(spark, sf)
       .withColumn("fp", TextStats.fingerprint(col("text")))
@@ -507,7 +533,7 @@ class IngestSpec extends AnyFunSuite with SharedSpark {
 
   test("corrupt (zero-byte) sidecar fails with a descriptive error, " +
     "and explicit-bucket compactStore recovers the store") {
-    val base = Files.createTempDirectory("graft-corrupt").toString
+    val base = tempDir("graft-corrupt")
     val store = s"$base/store"
     val docs = Tables.documents(spark, sf)
       .withColumn("fp", TextStats.fingerprint(col("text")))
@@ -535,7 +561,7 @@ class IngestSpec extends AnyFunSuite with SharedSpark {
 
   test("interrupted compaction swap is detected: leftover dirs with a " +
     "missing store fail loudly instead of returning an empty store") {
-    val base = Files.createTempDirectory("graft-swapcrash").toString
+    val base = tempDir("graft-swapcrash")
     val store = s"$base/store"
     val docs = Tables.documents(spark, sf)
       .withColumn("fp", TextStats.fingerprint(col("text")))
@@ -559,9 +585,27 @@ class IngestSpec extends AnyFunSuite with SharedSpark {
       Ingest.readStore(spark, store).count())
   }
 
+  test("a leftover .old beside a healthy fp store is refused, not " +
+    "deleted: readStore and compactStore fail loudly until it is removed") {
+    val store = s"${tempDir("graft-oldleft")}/store"
+    val fps = Tables.documents(spark, sf).where(col("doc_id") < 100)
+      .select(TextStats.fingerprint(col("text")).as("fp"))
+    Ingest.appendToStore(spark, store, fps, buckets = 4)
+    val old = java.nio.file.Paths.get(s"$store.old")
+    Files.createDirectory(old)
+    val e = intercept[IllegalStateException] { Ingest.readStore(spark, store) }
+    assert(e.getMessage.contains("interrupted"))
+    val c = intercept[IllegalStateException] { Ingest.compactStore(spark, store) }
+    assert(c.getMessage.contains("interrupted"))
+    assert(Files.exists(old), "the leftover .old was deleted")
+    Files.delete(old)
+    Ingest.compactStore(spark, store)
+    assert(Ingest.readStore(spark, store).count() === fps.distinct().count())
+  }
+
   test("pre-bucketing legacy layout: bucketed append refuses; " +
     "compactStore migrates it in place") {
-    val base = Files.createTempDirectory("graft-legacy").toString
+    val base = tempDir("graft-legacy")
     val store = s"$base/store"
     val docs = Tables.documents(spark, sf)
       .withColumn("fp", TextStats.fingerprint(col("text")))
@@ -594,7 +638,7 @@ class IngestSpec extends AnyFunSuite with SharedSpark {
   test("bloom/fp store coherence: fps appended after the filter build " +
     "fail LOUDLY at screen time; appendToBloomStore restores the " +
     "guarantee (duplicates caught, never silently readmitted)") {
-    val base = Files.createTempDirectory("graft-coherence").toString
+    val base = tempDir("graft-coherence")
     val docs = Tables.documents(spark, sf)
     val h1 = docs.where(!col("source").isin("src0", "src1"))
       .select(TextStats.fingerprint(col("text")).as("fp")).distinct()
@@ -640,7 +684,7 @@ class IngestSpec extends AnyFunSuite with SharedSpark {
 
   test("ingestBatchScreened == ingestBatch row-for-row; compaction " +
     "preserves the append epoch so filter coverage survives it") {
-    val base = Files.createTempDirectory("graft-screened-batch").toString
+    val base = tempDir("graft-screened-batch")
     val docs = Tables.documents(spark, sf)
       .select("doc_id", "text", "lang", "source", "n_chars")
     val hist = docs.where(col("doc_id") >= 300).localCheckpoint()
@@ -692,7 +736,7 @@ class IngestSpec extends AnyFunSuite with SharedSpark {
   test("screened runIngest (bloomShards > 0): corpus == first-arrival " +
     "dedup across batches; filter store appends per batch, rebuilds " +
     "on the compaction cadence, and ends coherent") {
-    val base = Files.createTempDirectory("graft-ingest-bloom").toString
+    val base = tempDir("graft-ingest-bloom")
     val (src, corpus, store, ckpt) =
       (s"$base/src", s"$base/corpus", s"$base/store", s"$base/ckpt")
     Files.createDirectories(java.nio.file.Paths.get(src))
@@ -746,7 +790,7 @@ class IngestSpec extends AnyFunSuite with SharedSpark {
   test("crash between the fp append and the bloom append: the stale " +
     "guard trips for any new screen; restart heals (startup rebuild + " +
     "staged re-delivery) with no lost doc and no readmitted duplicate") {
-    val base = Files.createTempDirectory("graft-ingest-crashwin").toString
+    val base = tempDir("graft-ingest-crashwin")
     val (src, corpus, store, ckpt) =
       (s"$base/src", s"$base/corpus", s"$base/store", s"$base/ckpt")
     Files.createDirectories(java.nio.file.Paths.get(src))

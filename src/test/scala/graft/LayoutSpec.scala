@@ -81,8 +81,7 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
 
   test("zorderPruneEffect on an empty events table: one row per layout, " +
     "as the oracle SQL gives") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-zorder-empty").toString
+    val dir = tempDir("graft-zorder-empty")
     spark.read.parquet(s"$sf/events.parquet").where(lit(false))
       .write.parquet(s"$dir/events.parquet")
     val rows = Layout.zorderPruneEffect(spark, dir).collect()
@@ -127,12 +126,10 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
           col("y_hi") >= 96 && col("y_lo") <= 127).count())
     }
 
-    val zDir = java.nio.file.Files
-      .createTempDirectory("graft-zorder").toString
+    val zDir = tempDir("graft-zorder")
     Layout.zorderWrite(bucketed, col("xb"), col("yb"), zDir,
       numFiles = 64)
-    val xDir = java.nio.file.Files
-      .createTempDirectory("graft-xsort").toString
+    val xDir = tempDir("graft-xsort")
     bucketed.repartitionByRange(64, col("xb"))
       .sortWithinPartitions("xb")
       .write.mode("overwrite").parquet(xDir)
@@ -154,8 +151,7 @@ class LayoutSpec extends AnyFunSuite with SharedSpark {
     // predicates, micros timestamps so stats exist) and asserts on
     // FileSourceScanExec's numOutputRows — rows the reader delivered
     // after row-group min/max pruning.
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-zscan-spec").toString
+    val base = tempDir("graft-zscan-spec")
     val rows = Layout.zorderScanMeasure(spark, "/root/testdata/sf0.01",
       base, numFiles = 64)
     val (zRead, zMatch) = rows.find(_._1 == "zorder")

@@ -235,7 +235,7 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("compaction coalesces a many-file directory to the target count") {
-    val src = java.nio.file.Files.createTempDirectory("graft-compact-in").toString
+    val src = tempDir("graft-compact-in")
     // 8 separate appends → at least 8 part files in one directory
     (0 until 8).foreach { i =>
       graft.core.Tables.orders(spark, sf).limit(500)
@@ -243,7 +243,7 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
         .coalesce(1)
         .write.mode("append").parquet(src)
     }
-    val out = java.nio.file.Files.createTempDirectory("graft-compact-out").toString + "/data"
+    val out = tempDir("graft-compact-out") + "/data"
     val n = graft.ops.Compaction.compact(spark, src, out, targetBytes = 1L << 40)
     assert(n === 1)
     val files = new java.io.File(out).listFiles()
@@ -299,8 +299,7 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
     }
     // the point of mergeable sketches is PERSISTENCE: binary buffers
     // round-trip through parquet and still union identically
-    val store = java.nio.file.Files
-      .createTempDirectory("graft-sketch-store").toString + "/daily"
+    val store = tempDir("graft-sketch-store") + "/daily"
     daily.write.mode("overwrite").parquet(store)
     val reloaded = graft.ops.Sketches
       .monthlyDistinctFromDaily(spark.read.parquet(store))
@@ -458,8 +457,7 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
   test("persisted CMS store: HLL-fed width, FROZEN across epoch " +
     "appends; merged estimates == from-scratch at the frozen width") {
     import graft.ops.Sketches
-    val store = java.nio.file.Files
-      .createTempDirectory("graft-cms-store").toString + "/cms"
+    val store = tempDir("graft-cms-store") + "/cms"
     // epoch 1: the sf events table, width sized from its HLL rollup
     val w1 = Sketches.buildCmsStore(spark, sf, store)
     // HLL sizing lands within one pow2 step of the exact-count width
@@ -573,8 +571,7 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
 
     // persisted store: build once, screen from the store's own rows
     // (sizing stats ride in the store — zero corpus actions)
-    val store = java.nio.file.Files
-      .createTempDirectory("graft-bloom-store").toString + "/epoch0"
+    val store = tempDir("graft-bloom-store") + "/epoch0"
     Dedup.buildBloomStore(hist, store, shards = 4, itemsPerShard = 4)
     val fromStore = Dedup.dedupAgainstBloomStore(spark, batch, hist,
       store, shards = 4)
@@ -591,8 +588,7 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
       .select(TextStats.fingerprint(col("text")).as("fp"))
     val histB = Seq("fresh one").toDF("text")
       .select(TextStats.fingerprint(col("text")).as("fp"))
-    val base2 = java.nio.file.Files
-      .createTempDirectory("graft-bloom-torn").toString
+    val base2 = tempDir("graft-bloom-torn")
     Dedup.buildBloomStore(histA, s"$base2/a", shards = 1, itemsPerShard = 4)
     Dedup.buildBloomStore(histB, s"$base2/b", shards = 1, itemsPerShard = 4)
     spark.read.parquet(s"$base2/a")
@@ -640,8 +636,7 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
       (2L, "same exact text", "en", "srcA", 15L),
       (3L, "different text here", "en", "srcA", 19L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-mix").toString
+    val dir = tempDir("graft-mix")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val counts = graft.ops.Mix
       .corpusMix(spark, dir, Map("srcA" -> 150), defaultPct = 100)
@@ -824,8 +819,7 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
 
   test("incremental LSH store: new batch finds near-dups in history " +
     "without rescanning it") {
-    val store = java.nio.file.Files
-      .createTempDirectory("graft-lsh-store").toString + "/store"
+    val store = tempDir("graft-lsh-store") + "/store"
     val history = graft.core.Tables.documents(spark, sf)
       .select("doc_id", "text").limit(50).cache()
     graft.ops.Dedup.buildLshStore(spark, history, store)
@@ -846,8 +840,7 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("persisted IVF index: partition-pruned probe, same results") {
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft-ivf-idx").toString + "/index"
+    val idx = tempDir("graft-ivf-idx") + "/index"
     val cents = graft.ops.Similarity.buildIvfIndex(spark, sf, idx)
     // nprobe pinned to 4 and 4 queries: the pruning assertion needs the
     // probe-cell union to stay under all 16 dirs (de-biased centroids
@@ -1185,8 +1178,7 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
 
   test("persisted BM25 index: postings scans are partition-pruned to " +
     "the query terms' buckets") {
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft-bm25-idx").toString + "/index"
+    val idx = tempDir("graft-bm25-idx") + "/index"
     graft.ops.Terms.buildBm25Index(spark, sf, idx, nBuckets = 64)
     import spark.implicits._
     val queries = Seq((0, "filter"), (0, "merge"), (1, "table"))
@@ -1223,8 +1215,7 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
 
   test("BM25 index append: half-build + append equals the full build " +
     "bit-for-bit") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-bm25-append").toString
+    val base = tempDir("graft-bm25-append")
     val docs = graft.core.Tables.documents(spark, sf)
     graft.ops.Terms.buildBm25IndexFor(docs, s"$base/full")
     graft.ops.Terms.buildBm25IndexFor(
@@ -1259,8 +1250,7 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
   test("BM25 index append is exactly-once per batch id: re-applying " +
     "a batch (crash-retry, stream re-delivery) replaces, never " +
     "double-counts") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-bm25-redeliver").toString
+    val base = tempDir("graft-bm25-redeliver")
     val idx = s"$base/index"
     val docs = graft.core.Tables.documents(spark, sf)
     graft.ops.Terms.buildBm25IndexFor(
@@ -1298,8 +1288,7 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
 
   test("BM25 index compaction: one file per bucket, bit-identical " +
     "probes, interrupted swaps detected") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-bm25-compact").toString
+    val base = tempDir("graft-bm25-compact")
     val idx = s"$base/index"
     val docs = graft.core.Tables.documents(spark, sf)
     graft.ops.Terms.buildBm25IndexFor(
@@ -1333,7 +1322,7 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
     // interrupted swap: a leftover .old copy must fail loudly
     java.nio.file.Files.createDirectory(
       java.nio.file.Paths.get(s"$idx/postings.old"))
-    val e = intercept[IllegalArgumentException] {
+    val e = intercept[IllegalStateException] {
       graft.ops.Terms.compactBm25Index(spark, idx)
     }
     assert(e.getMessage.contains("interrupted"))
@@ -1342,8 +1331,7 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
   test("BM25 index delete: tombstone + probe equals a rebuild on the " +
     "surviving corpus bit-for-bit; double-deletes and unknown ids " +
     "are no-ops") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-bm25-delete").toString
+    val base = tempDir("graft-bm25-delete")
     val docs = graft.core.Tables.documents(spark, sf)
     val gone = docs.where(col("doc_id") % 3 === 0).select("doc_id")
     // reference: an index that never contained the deleted docs
@@ -1382,8 +1370,7 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
 
   test("BM25 delete then compact: tombstones fold physically, probes " +
     "stay bit-identical, stats untouched") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-bm25-delcompact").toString
+    val base = tempDir("graft-bm25-delcompact")
     val idx = s"$base/index"
     val docs = graft.core.Tables.documents(spark, sf)
     graft.ops.Terms.buildBm25IndexFor(docs, idx)
@@ -1835,8 +1822,7 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
   test("BM25 delete lifecycle edges: a no-op delete on a delete-free " +
     "index writes nothing; a rebuild clears the previous generation's " +
     "tombstones") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-bm25-edge").toString
+    val base = tempDir("graft-bm25-edge")
     val idx = s"$base/index"
     val docs = graft.core.Tables.documents(spark, sf)
     graft.ops.Terms.buildBm25IndexFor(docs, idx)
@@ -1872,8 +1858,7 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
 
   test("BM25 complete takedown: compacting an all-tombstoned index " +
     "keeps it readable and appendable") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-bm25-takedown").toString
+    val base = tempDir("graft-bm25-takedown")
     val idx = s"$base/index"
     val docs = graft.core.Tables.documents(spark, sf)
     val early = docs.where(col("doc_id") < 30)
@@ -2003,8 +1988,7 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
 
   test("length-bucket batches: 13+-digit doc_ids round-trip exactly " +
     "(the sort-key pad fits every Long)") {
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-bigid").toString
+    val tmp = tempDir("graft-bigid")
     import spark.implicits._
     // ids ≥ 10^12 sharing a long prefix: a 12-char pad TRUNCATES both
     // to the same key (corrupted output ids, colliding sort keys)

@@ -337,8 +337,7 @@ class PipelineOpsSpec extends AnyFunSuite with SharedSpark {
     // input the collapse exists for
     val base = Similarity.semanticDedupClusters(spark, sf)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-semdup").toString
+    val dir = tempDir("graft-semdup")
     graft.core.Tables.embeddings(spark, sf)
       .crossJoin(spark.range(3).toDF("rep"))
       .withColumn("vec_id", col("vec_id") + col("rep") * 1000000000L)

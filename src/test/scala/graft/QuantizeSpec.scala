@@ -65,8 +65,7 @@ class QuantizeSpec extends AnyFunSuite with SharedSpark {
 
   test("IVF-PQ index: partition-pruned + column-pruned ADC scan, " +
     "no unpruned index read anywhere, recall >= 0.9 vs brute force") {
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft-ivfpq-idx").toString + "/index"
+    val idx = tempDir("graft-ivfpq-idx") + "/index"
     Quantize.buildIvfPqIndex(spark, sf, idx)
     val queries = Similarity.normalized(spark, sf)
       .where(col("vec_id") < 10)
@@ -172,8 +171,7 @@ class QuantizeSpec extends AnyFunSuite with SharedSpark {
 
   test("incremental IVF-PQ append: frozen-structure appends keep the " +
     "index complete, correctly encoded, and above the recall band") {
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft-ivfpq-append").toString + "/index"
+    val idx = tempDir("graft-ivfpq-append") + "/index"
     val history = corpus.where(col("vec_id") < 250)
     // index structure (centroids + codebooks) trains on history only
     Quantize.buildIvfPqIndexFor(history, idx)
@@ -228,8 +226,7 @@ class QuantizeSpec extends AnyFunSuite with SharedSpark {
   test("IVF-PQ delete: tombstoned vectors never surface, the delete " +
     "is idempotent, and compaction folds tombstones physically with " +
     "bit-identical probes") {
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft-ivfpq-delete").toString + "/index"
+    val idx = tempDir("graft-ivfpq-delete") + "/index"
     Quantize.buildIvfPqIndexFor(corpus, idx)
     val queries = corpus.where(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("vec").as("qvec"))
@@ -272,7 +269,7 @@ class QuantizeSpec extends AnyFunSuite with SharedSpark {
     // interrupted swap detected loudly
     java.nio.file.Files.createDirectory(
       java.nio.file.Paths.get(s"$idx/data.old"))
-    val e = intercept[IllegalArgumentException] {
+    val e = intercept[IllegalStateException] {
       Quantize.compactIvfPqIndex(spark, idx)
     }
     assert(e.getMessage.contains("interrupted"))

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,7 +13,7 @@ class ScaleSpec extends AnyFunSuite with SharedSpark {
 
   test("Hive partition pruning reaches the scan (year/month/day layout)") {
     // build a small partitioned copy: events by day
-    val root = Files.createTempDirectory("graft-part").toString
+    val root = tempDir("graft-part")
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     Tables.events(spark, sf)
       .withColumn("day", to_date(col("ts")).cast("string"))

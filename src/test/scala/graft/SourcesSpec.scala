@@ -14,7 +14,7 @@ class SourcesSpec extends AnyFunSuite with SharedSpark {
   import spark.implicits._
 
   test("CSV and JSONL round-trip the customer table losslessly") {
-    val base = Files.createTempDirectory("graft-fmt").toString
+    val base = tempDir("graft-fmt")
     val src = Tables.customer(spark, sf)
     Formats.writeCsv(src, s"$base/csv")
     val csvBack = Formats.readCsv(spark, Schemas.customer, s"$base/csv")
@@ -43,7 +43,7 @@ class SourcesSpec extends AnyFunSuite with SharedSpark {
     // a 100 TB table accretes columns over years; readers must handle
     // mixed-vintage files. Old files: (doc_id, text); new files add
     // quality_score. mergeSchema unifies; old rows surface null.
-    val base = Files.createTempDirectory("graft-evolve").toString
+    val base = tempDir("graft-evolve")
     Seq((1L, "old doc")).toDF("doc_id", "text")
       .write.parquet(s"$base/batch1")
     Seq((2L, "new doc", 0.9)).toDF("doc_id", "text", "quality_score")
@@ -61,7 +61,7 @@ class SourcesSpec extends AnyFunSuite with SharedSpark {
     // ingestion from the wild: PERMISSIVE mode parses what it can and
     // routes garbage to _corrupt_record instead of failing the job
     // (or silently dropping rows)
-    val base = Files.createTempDirectory("graft-corrupt").toString
+    val base = tempDir("graft-corrupt")
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$base/data.jsonl"),
       java.util.Arrays.asList(
@@ -118,7 +118,7 @@ class SourcesSpec extends AnyFunSuite with SharedSpark {
     // flipped the encoding silently collapsed every event date to one
     // day before the loaders learned to detect it — this pins both
     // paths to identical logical output.
-    val base = Files.createTempDirectory("graft-tsenc").toString
+    val base = tempDir("graft-tsenc")
     val rows = Seq(
       (0L, Timestamp.valueOf("2024-01-01 00:00:07.179575"), 8L, "error", 6.55, "{}"),
       (1L, Timestamp.valueOf("2024-02-03 13:03:52.824425"), 46L, "click", 12.31, "{}"),
@@ -148,6 +148,23 @@ class SourcesSpec extends AnyFunSuite with SharedSpark {
       Tables.events(spark, s"$base/micros"))
     assert(agg.exceptAll(batch).count() === 0)
     assert(batch.exceptAll(agg).count() === 0)
+  }
+
+  test("loading micros events leaves the session conf unchanged; " +
+    "nanos events set nanosAsLong for the session") {
+    val base = tempDir("graft-tsenc-conf")
+    val rows = Seq(
+      (0L, Timestamp.valueOf("2024-01-01 00:00:07.179575"), 8L, "error", 6.55, "{}"))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+    rows.write.parquet(s"$base/micros/events.parquet")
+    rows.withColumn("ts", unix_micros(col("ts")) * lit(1000L))
+      .write.parquet(s"$base/nanos/events.parquet")
+    val s = spark.newSession()
+    val before = s.conf.getAll
+    assert(Tables.events(s, s"$base/micros").count() === 1)
+    assert(s.conf.getAll === before)
+    assert(Tables.events(s, s"$base/nanos").count() === 1)
+    assert(s.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
   }
 
   test("as-of join shuffles once on the key (no join explosion)") {

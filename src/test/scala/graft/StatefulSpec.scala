@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -24,7 +22,7 @@ class StatefulSpec extends AnyFunSuite with SharedSpark {
       .format("memory")
       .queryName(name)
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-ckpt-sess").toString)
+        tempDir("graft-ckpt-sess"))
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -52,8 +50,8 @@ class StatefulSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("foreachBatch parquet sink writes the complete aggregate") {
-    val out = Files.createTempDirectory("graft-fb-out").toString + "/agg"
-    val ckpt = Files.createTempDirectory("graft-fb-ckpt").toString
+    val out = tempDir("graft-fb-out") + "/agg"
+    val ckpt = tempDir("graft-fb-ckpt")
     val agg = StreamAggregator.dailyAggExact(
       StreamAggregator.eventsStream(spark, s"$sf/{events.parquet}"))
     StreamAggregator.runToParquet(spark, agg, out, ckpt)
@@ -68,7 +66,7 @@ class StatefulSpec extends AnyFunSuite with SharedSpark {
     val s = spark.newSession()
     s.conf.set("spark.sql.shuffle.partitions", "16")
     val before = s.conf.getAll
-    val base = Files.createTempDirectory("graft-drain")
+    val base = java.nio.file.Paths.get(tempDir("graft-drain"))
     val src = base.resolve("src").toString
     try {
       s.range(300).selectExpr("id", "id % 7 AS k").repartition(3)
@@ -101,7 +99,7 @@ class StatefulSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("file re-delivery: FileStreamSource processes new files only") {
-    val watched = Files.createTempDirectory("graft-redeliver").toString
+    val watched = tempDir("graft-redeliver")
     val e = Tables.events(spark, sf).limit(100).cache()
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     e.write.mode("overwrite").parquet(s"$watched/chunk1")
@@ -113,7 +111,7 @@ class StatefulSpec extends AnyFunSuite with SharedSpark {
       val q = s.writeStream.outputMode("append").format("memory")
         .queryName(name)
         .option("checkpointLocation",
-          Files.createTempDirectory(s"graft-$name-ckpt").toString)
+          tempDir(s"graft-$name-ckpt"))
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
       spark.table(name).count()
@@ -130,7 +128,7 @@ class StatefulSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("streaming dedup drops re-delivered event ids, bounded state") {
-    val watched = Files.createTempDirectory("graft-dedup-stream").toString
+    val watched = tempDir("graft-dedup-stream")
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     val e = Tables.events(spark, sf).limit(200).cache()
     e.write.mode("overwrite").parquet(s"$watched/chunk1")
@@ -144,7 +142,7 @@ class StatefulSpec extends AnyFunSuite with SharedSpark {
     val q = deduped.writeStream.outputMode("append").format("memory")
       .queryName("dedup_stream_test")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-dedup-ckpt").toString)
+        tempDir("graft-dedup-ckpt"))
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
     val out = spark.table("dedup_stream_test")
@@ -162,7 +160,7 @@ class StatefulSpec extends AnyFunSuite with SharedSpark {
     val q = stream.writeStream
       .outputMode("complete").format("memory").queryName("sketch_stream")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-sketch-stream-ckpt").toString)
+        tempDir("graft-sketch-stream-ckpt"))
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
     val streamed = spark.table("sketch_stream")
@@ -202,9 +200,9 @@ class StatefulSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("dynamic partition overwrite sink: day redelivery is idempotent") {
-    val src = Files.createTempDirectory("graft-dpo-src").toString
-    val out = Files.createTempDirectory("graft-dpo-out").toString + "/table"
-    val ckpt = Files.createTempDirectory("graft-dpo-ckpt").toString
+    val src = tempDir("graft-dpo-src")
+    val out = tempDir("graft-dpo-out") + "/table"
+    val ckpt = tempDir("graft-dpo-ckpt")
     val t0 = new java.sql.Timestamp(0L)
     val days = graft.streaming.IncrementalProducer.eventDays(spark, sf).take(3)
     days.foreach(d =>
@@ -243,7 +241,7 @@ class StatefulSpec extends AnyFunSuite with SharedSpark {
       val q = StreamAggregator.windowedAggStream(stream).writeStream
         .outputMode("append").format("memory").queryName(name)
         .option("checkpointLocation",
-          Files.createTempDirectory(s"graft-$name-ckpt").toString)
+          tempDir(s"graft-$name-ckpt"))
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
       spark.table(name).collect().toSet
@@ -255,7 +253,7 @@ class StatefulSpec extends AnyFunSuite with SharedSpark {
       val q = Sessionize.sessions(stream).writeStream
         .outputMode("append").format("memory").queryName(name)
         .option("checkpointLocation",
-          Files.createTempDirectory(s"graft-$name-ckpt").toString)
+          tempDir(s"graft-$name-ckpt"))
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
       spark.table(name).select(col("user_id"), col("n_events"))
@@ -307,7 +305,7 @@ class StatefulSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("late data beyond the watermark is dropped from windowed agg") {
-    val watched = Files.createTempDirectory("graft-late").toString
+    val watched = tempDir("graft-late")
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     val base = Tables.events(spark, sf)
       .select("event_id", "ts_ns", "ts", "user_id", "event_type", "value", "props")
@@ -325,7 +323,7 @@ class StatefulSpec extends AnyFunSuite with SharedSpark {
     val q = windowed.writeStream.outputMode("append").format("memory")
       .queryName("late_test")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-late-ckpt").toString)
+        tempDir("graft-late-ckpt"))
       .start()
     q.processAllAvailable()
     val cutoff = {
@@ -357,7 +355,7 @@ class StatefulSpec extends AnyFunSuite with SharedSpark {
   test("sessionization folds LATE events by position: in-gap-before " +
     "extends the start, inside-span only aggregates, an earlier chain " +
     "emits as its own session — and no session ever inverts") {
-    val watched = Files.createTempDirectory("graft-sess-late").toString
+    val watched = tempDir("graft-sess-late")
     spark.conf.set("spark.sql.parquet.outputTimestampType",
       "TIMESTAMP_MICROS")
     import spark.implicits._
@@ -386,7 +384,7 @@ class StatefulSpec extends AnyFunSuite with SharedSpark {
     val q = graft.streaming.Sessionize.sessions(stream).writeStream
       .outputMode("append").format("memory").queryName("sess_late")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-sess-late-ckpt").toString)
+        tempDir("graft-sess-late-ckpt"))
       .start()
     q.processAllAvailable()
     // batch 2: LATE but watermark-admitted events (all ≥ 09:30).

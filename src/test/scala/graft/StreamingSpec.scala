@@ -24,7 +24,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("incremental day-by-day replay == batch over union (SURVEY §5.4)") {
-    val target = Files.createTempDirectory("graft-replay").toString
+    val target = tempDir("graft-replay")
     // drop the first 3 days only, then stream what's there
     val days = IncrementalProducer.eventDays(spark, sf).take(3)
     days.foreach { d =>
@@ -44,7 +44,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("producer replay writes every source row exactly once") {
-    val target = Files.createTempDirectory("graft-replay-full").toString
+    val target = tempDir("graft-replay-full")
     val n = IncrementalProducer.replay(spark, sf, target)
     assert(n === Tables.events(spark, sf).count())
     val back = IncrementalProducer.readBack(spark, target)
@@ -59,7 +59,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     // uses AvailableNow. Here: ProcessingTime trigger + a producer
     // dropping days concurrently on this thread + cell-3-shaped SQL
     // executed against the live memory table mid-stream.
-    val target = Files.createTempDirectory("graft-soak").toString
+    val target = tempDir("graft-soak")
     val t0 = new java.sql.Timestamp(0L)
     val days = IncrementalProducer.eventDays(spark, sf)
     IncrementalProducer.dropDay(spark, sf, target, days.head, t0)
@@ -68,7 +68,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     val q = agg.writeStream
       .outputMode("complete").format("memory").queryName("soak_agg")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-soak-ckpt").toString)
+        tempDir("graft-soak-ckpt"))
       .trigger(org.apache.spark.sql.streaming.Trigger
         .ProcessingTime("200 milliseconds"))
       .start()
@@ -106,14 +106,14 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     "while the caller session keeps its own width") {
     val s = spark.newSession()
     s.conf.set("spark.sql.shuffle.partitions", "16")
-    val target = Files.createTempDirectory("graft-width").toString
+    val target = tempDir("graft-width")
     val t0 = new java.sql.Timestamp(0L)
     val days = IncrementalProducer.eventDays(s, sf)
     IncrementalProducer.dropDay(s, sf, target, days.head, t0)
     val before = s.conf.getAll
     val q = StreamAggregator.withStreamShuffle(s) {
       replayAggQuery(s, target, "width_agg",
-        Files.createTempDirectory("graft-width-ckpt").toString,
+        tempDir("graft-width-ckpt"),
         StreamAggregator.dailyAgg)
     }
     try {
@@ -155,7 +155,8 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     s.streams.addListener(listener)
     try {
       // q_stream_agg's composition (streamAggQuery); the snapshot comes
-      // after the source is built, which sets its own reader conf
+      // after the source is built, which sets its reader conf on a
+      // NANOS events vintage
       val agg = StreamAggregator.dailyAggExact(
         StreamAggregator.eventsStream(s, s"$sf/{events.parquet}"))
       val before = s.conf.getAll
@@ -171,8 +172,9 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
   test("dropDay leaves the caller's session conf unchanged and still " +
     "writes INT64 micros timestamps") {
     val s = spark.newSession()
-    val target = Files.createTempDirectory("graft-drop-conf").toString
-    // eventDays loads events first, which sets its own reader conf
+    val target = tempDir("graft-drop-conf")
+    // eventDays loads events first, which sets its reader conf on a
+    // NANOS events vintage (Tables.eventsTsIsNanos)
     val day = IncrementalProducer.eventDays(s, sf).head
     val before = s.conf.getAll
     IncrementalProducer.dropDay(s, sf, target, day,
@@ -235,8 +237,8 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
   private def restartedReplay(s: SparkSession)(
       first: (String, String) => StreamingQuery): Long = {
     val (early, late) = IncrementalProducer.eventDays(s, sf).splitAt(2)
-    val target = Files.createTempDirectory("graft-restart").toString
-    val ckpt = Files.createTempDirectory("graft-restart-ckpt").toString
+    val target = tempDir("graft-restart")
+    val ckpt = tempDir("graft-restart-ckpt")
     val t0 = new java.sql.Timestamp(0L)
     early.foreach(d => IncrementalProducer.dropDay(s, sf, target, d, t0))
     val q1 = first(target, ckpt)
@@ -264,7 +266,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
     val q = joined.writeStream
       .outputMode("append").format("memory").queryName("ss_join")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-ssjoin-ckpt").toString)
+        tempDir("graft-ssjoin-ckpt"))
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -286,7 +288,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
       .format("memory")
       .queryName(name)
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-ckpt-win").toString)
+        tempDir("graft-ckpt-win"))
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -308,7 +310,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
   test("streaming training-shards: replaying id-ordered document " +
     "batches yields the same shard manifest as the one-shot batch run; " +
     "re-runs are no-ops") {
-    val base = Files.createTempDirectory("graft-stream-shards").toString
+    val base = tempDir("graft-stream-shards")
     val (src, work) = (s"$base/src", s"$base/work")
     Files.createDirectories(java.nio.file.Paths.get(src))
     val docs = Tables.documents(spark, sf).cache()
@@ -361,7 +363,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
 
   test("streamed BM25 indexing probes bit-identically to the batch " +
     "build; re-runs and re-delivered batches are no-ops") {
-    val base = Files.createTempDirectory("graft-stream-bm25").toString
+    val base = tempDir("graft-stream-bm25")
     val (src, work) = (s"$base/src", s"$base/work")
     Files.createDirectories(java.nio.file.Paths.get(src))
     val docs = Tables.documents(spark, sf).select("doc_id", "text").cache()
@@ -416,7 +418,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
 
   test("streamed BM25 indexing with IN-STREAM compaction: probes stay " +
     "bit-identical to the batch build across a mid-stream fold") {
-    val base = Files.createTempDirectory("graft-stream-bm25c").toString
+    val base = tempDir("graft-stream-bm25c")
     val (src, work) = (s"$base/src", s"$base/work")
     Files.createDirectories(java.nio.file.Paths.get(src))
     val docs = Tables.documents(spark, sf).select("doc_id", "text").cache()
@@ -467,7 +469,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
   test("CDC BM25 stream (adds + takedowns): converges to the net " +
     "corpus bit-for-bit, with tombstones folded by an in-stream " +
     "compaction and re-delivered batches no-ops") {
-    val base = Files.createTempDirectory("graft-stream-bm25cdc").toString
+    val base = tempDir("graft-stream-bm25cdc")
     val (src, work) = (s"$base/src", s"$base/work")
     Files.createDirectories(java.nio.file.Paths.get(src))
     val docs = Tables.documents(spark, sf).select("doc_id", "text").cache()
@@ -538,7 +540,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
 
   test("streaming training-shards with chunk-grain dedup: the chunked " +
     "manifest matches the one-shot batch run") {
-    val base = Files.createTempDirectory("graft-stream-chunked").toString
+    val base = tempDir("graft-stream-chunked")
     val (src, work) = (s"$base/src", s"$base/work")
     Files.createDirectories(java.nio.file.Paths.get(src))
     val docs = Tables.documents(spark, sf).cache()
@@ -572,7 +574,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
   test("streaming embedding ingest: stream ≡ sequential batch " +
     "application, re-delivered content keeps nothing, re-runs and " +
     "re-applied ids are no-ops") {
-    val base = Files.createTempDirectory("graft-embed-ingest").toString
+    val base = tempDir("graft-embed-ingest")
     val (src, work) = (s"$base/src", s"$base/work")
     Files.createDirectories(java.nio.file.Paths.get(src))
     val em = Tables.embeddings(spark, sf).cache()
@@ -642,7 +644,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
   test("rebuildEmbedIndex: retrains and reassigns the full kept " +
     "history, swaps atomically with a loud interrupted-swap guard, " +
     "and the rebuilt probe still finds true neighbors") {
-    val base = Files.createTempDirectory("graft-embed-rebuild").toString
+    val base = tempDir("graft-embed-rebuild")
     val work = s"$base/work"
     val em = Tables.embeddings(spark, sf).cache()
     val n = em.count()
@@ -671,9 +673,10 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
       fs.makeQualified(new org.apache.hadoop.fs.Path(s"$work/vindex"))
         .getParent, "vindex.old")
     fs.mkdirs(oldPath)
-    intercept[IllegalArgumentException] {
+    val e = intercept[IllegalStateException] {
       graft.streaming.IngestEmbed.rebuildEmbedIndex(spark, work)
     }
+    assert(e.getMessage.contains("interrupted"))
     fs.delete(oldPath, true)
 
     graft.streaming.IngestEmbed.rebuildEmbedIndex(spark, work)
@@ -711,7 +714,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
   test("streaming embedding ingest, screen discipline: stream ≡ " +
     "sequential batches, duplicate-heavy batches collapse, and every " +
     "drop reaches a survivor through exact ≥ tau edges") {
-    val base = Files.createTempDirectory("graft-embed-screen").toString
+    val base = tempDir("graft-embed-screen")
     val (src, work) = (s"$base/src", s"$base/work")
     Files.createDirectories(java.nio.file.Paths.get(src))
     val em = Tables.embeddings(spark, sf).cache()
@@ -812,7 +815,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
   test("streaming volume monitor: incremental day-grain counts ≡ the " +
     "batch screen over the union; re-delivery and re-runs are no-ops") {
     import graft.streaming.MonitorStream
-    val base = Files.createTempDirectory("graft-monitor").toString
+    val base = tempDir("graft-monitor")
     val (src, work) = (s"$base/src", s"$base/work")
     Files.createDirectories(java.nio.file.Paths.get(src))
 
@@ -868,7 +871,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
 
   test("embedding ingest survives an EMPTY first batch: training " +
     "defers to the first non-empty batch, dedup stays alive") {
-    val base = Files.createTempDirectory("graft-embed-empty").toString
+    val base = tempDir("graft-embed-empty")
     val work = s"$base/work"
     val em = Tables.embeddings(spark, sf)
     // the poison shape this guards: centroids trained on zero vectors
@@ -898,7 +901,7 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
 
   test("CDC indexing survives a delete-only FIRST batch: the empty " +
     "build stays readable, later adds index normally") {
-    val base = Files.createTempDirectory("graft-cdc-delfirst").toString
+    val base = tempDir("graft-cdc-delfirst")
     val idx = s"$base/index"
     val docs = Tables.documents(spark, sf).select("doc_id", "text")
     def adds(df: org.apache.spark.sql.DataFrame) =
