@@ -202,20 +202,15 @@ object Multimodal {
   def mediaAnn(media: Dataset[MediaRow],
       numQueries: Int, k: Int): DataFrame = {
     import graft.functions.VectorFunctions._
-    import org.apache.spark.sql.expressions.Window
     val feats = extractFeatures(media).toDF()
       .select(col("media_id"),
         normalize(toDoubleVec(col("features"))).as("vec"))
     val queries = feats.where(col("media_id") < numQueries)
       .select(col("media_id").as("query_id"), col("vec").as("qvec"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    feats.join(broadcast(queries), col("media_id") =!= col("query_id"))
-      .select(col("query_id"), col("media_id").as("neighbor_id"),
-        dot(col("vec"), col("qvec")).as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank")
+    Similarity.rankNeighbors(
+      feats.join(broadcast(queries), col("media_id") =!= col("query_id"))
+        .select(col("query_id"), col("media_id").as("neighbor_id"),
+          dot(col("vec"), col("qvec")).as("sim")), k)
   }
 
   /** Frame-sampling summary per media row: how many 64-byte frames the

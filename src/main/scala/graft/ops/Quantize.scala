@@ -207,28 +207,22 @@ object Quantize {
     // ONLY (query_id, neighbor_id, adc) — the dim-wide qvec would
     // otherwise ride every candidate row through the exchange (the
     // module's own discipline; ivfPqTopK already does it this way)
+    // (ranked by ADC score as `sim`: the candidate cut is the same
+    // neighbour ranking as the final one)
     val adc = codes.join(broadcast(queries.select("query_id", "lut")),
         col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        adcScore(col("codes"), col("lut")).as("adc"))
-    val wAdc = Window.partitionBy("query_id")
-      .orderBy(col("adc").desc, col("neighbor_id"))
-    val cand = adc.withColumn("rn", row_number().over(wAdc))
-      .where(col("rn") <= k * rerank)
+        adcScore(col("codes"), col("lut")).as("sim"))
+    val cand = Similarity.rankNeighbors(adc, k * rerank)
       .select("query_id", "neighbor_id")
     // exact rerank of the candidate set only; the query vectors
     // re-attach HERE (broadcast, k·rerank·numQueries rows)
-    val exact = cand.join(
+    Similarity.rankNeighbors(cand.join(
       corpus.select(col("vec_id").as("neighbor_id"), col("vec")),
       "neighbor_id")
       .join(broadcast(queries.select("query_id", "qvec")), "query_id")
       .select(col("query_id"), col("neighbor_id"),
-        dot(col("vec"), col("qvec")).as("sim"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    exact.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank")
+        dot(col("vec"), col("qvec")).as("sim")), k)
   }
 
   /** Per-query hit counts of [[pqTopK]] vs the TRUE top-k (the
@@ -248,9 +242,9 @@ object Quantize {
     * assertion). Deterministic given a fixed partitioning: seeds and
     * argmins are seeded/tie-broken, but the Lloyd step's distributed
     * avg() over doubles is not bit-stable across partition layouts
-    * (the ivfCentroids caveat) — in principle a near-boundary ADC
-    * ordering could differ between cluster sizes; the ≥0.9 band has
-    * ample margin over that last-ulp noise. */
+    * (the [[Similarity.ivfCentroidsDf]] caveat) — in principle a
+    * near-boundary ADC ordering could differ between cluster sizes;
+    * the ≥0.9 band has ample margin over that last-ulp noise. */
   def pqRecall(spark: SparkSession, dir: String, numQueries: Int = 10,
       k: Int = 10, m: Int = 16, ksub: Int = 32, rerank: Int = 20)
       : DataFrame =
@@ -299,7 +293,7 @@ object Quantize {
     // threshold — measured 5.8× at k=1788/200k vectors, see SCALE.md)
     val assign = if (cells >= twoLevelFrom)
       Similarity.assignCellsTwoLevel(corpus, cents)
-    else Similarity.assignCells(corpus, cents)
+    else Similarity.probeCells(corpus, cents, 1).select("vec_id", "cell")
     corpus
       .join(assign, "vec_id")
       .join(pqEncode(corpus, packBooks(books)), "vec_id")
@@ -327,8 +321,8 @@ object Quantize {
     * would re-encode the whole index — O(n) per arrival).
     *
     * Scale shape: assignment and encode are broadcast-only map-side
-    * projections over the batch (centroids as ONE array row, the
-    * [[ivfPqTopK]] probe pattern; codebooks via [[pqEncode]]) — the
+    * projections over the batch (centroids as ONE array row through
+    * [[Similarity.probeCells]]; codebooks via [[pqEncode]]) — the
     * history is never read, and the only exchange is the
     * cell-aligning repartition of the BATCH so each append adds at
     * most one file per cell, not tasks × cells (the
@@ -339,16 +333,9 @@ object Quantize {
       newVectors: DataFrame): Unit = {
     val packed = packBooks(spark.read.parquet(s"$indexPath/codebooks"))
       .localCheckpoint()
-    val centArr = spark.read.parquet(s"$indexPath/centroids")
-      .agg(collect_list(struct(col("cid"), col("cvec"))).as("cc"))
     val batch = newVectors.select("vec_id", "vec")
-    val assigned = batch.crossJoin(broadcast(centArr))
-      .select(col("vec_id"), col("vec"),
-        (-array_max(transform(col("cc"),
-          c => struct(dot(col("vec"), c.getField("cvec")).as("sim"),
-            (-c.getField("cid")).cast("double").as("nc"))))
-          .getField("nc")).cast("int").as("cell"))
-    assigned
+    Similarity.probeCells(batch,
+        spark.read.parquet(s"$indexPath/centroids"), 1)
       .join(pqEncode(batch, packed), "vec_id")
       .repartition(col("cell"))
       .select(col("vec_id"), col("codes"), col("vec"), col("cell"))
@@ -409,61 +396,37 @@ object Quantize {
   }
 
   /** Query a persisted IVF-PQ index: probe each query's `nprobe` best
-    * cells (centroids ride in as ONE broadcast array row — map-side
-    * probe, no plan literals), ADC-score ONLY the probed cells' `codes`
-    * column via per-query lookup tables, keep the top k·`rerank`
-    * candidates, then exactly rerank those against their true vectors
-    * (read from the same probed partitions). Scan cost per query is
-    * nprobe/cells of the CODES bytes plus candidates·dim of vector
-    * bytes — at 10⁹ vectors with cells = √n that is megabytes, not
-    * terabytes.
+    * cells ([[Similarity.probeIndex]] — map-side probe over the
+    * centroid sidecar, then a scan pruned to the probed cell
+    * directories), ADC-score ONLY the probed cells' `codes` column via
+    * per-query lookup tables, keep the top k·`rerank` candidates, then
+    * exactly rerank those against their true vectors (read from the
+    * same probed partitions). Scan cost per query is nprobe/cells of
+    * the CODES bytes plus candidates·dim of vector bytes — at 10⁹
+    * vectors with cells = √n that is megabytes, not terabytes.
+    * nprobe = 0 auto-tunes against THIS index's cell count
+    * ([[Similarity.nprobeAuto]]).
     *
     * `queriesIn` is a SIDE INPUT — (query_id, qvec) with qvec unit-
-    * normalized like the indexed vectors. Fetching queries from the
-    * index itself (`data.where(vec_id < n)`) would defeat the probe's
-    * partition pruning for the fetch step: the predicate is on a
-    * DATA column, so finding 10 query rows reads every cell directory
-    * — a full-index scan at 10⁹ vectors. Callers take queries from
-    * the embeddings table (or any external frame) instead; the index
-    * is only ever read cell-pruned (asserted in QuantizeSpec). */
+    * normalized like the indexed vectors; the index is only ever read
+    * cell-pruned (asserted in QuantizeSpec). */
   def ivfPqTopK(spark: SparkSession, indexPath: String,
       queriesIn: DataFrame, k: Int = 10, nprobe: Int = 0,
       rerank: Int = 20): DataFrame = {
-    val data = spark.read.parquet(s"$indexPath/data")
     val packed = packBooks(spark.read.parquet(s"$indexPath/codebooks"))
       .localCheckpoint()
-    val centArr = spark.read.parquet(s"$indexPath/centroids")
-      .agg(collect_list(struct(col("cid"), col("cvec"))).as("cc"))
-      .localCheckpoint()
-    // nprobe = 0 → auto-tune against THIS index's cell count (the
-    // sidecar is one tiny row, already checkpointed above) — see
-    // [[Similarity.nprobeAuto]]: a fixed budget quietly loses recall
-    // as indexes are provisioned with more cells
-    val np = if (nprobe > 0) nprobe
-      else Similarity.nprobeAuto(
-        centArr.select(size(col("cc"))).head().getInt(0))
+    val (probes, prunedRaw) =
+      Similarity.probeIndex(spark, indexPath, queriesIn, nprobe)
     val dsub = expr("size(qvec) DIV size(books)")
-    // per-query probe cells + ADC lookup table, one row per
-    // (query, probed cell); bounded numQueries × nprobe
-    val queries = queriesIn
-      .select(col("query_id"), col("qvec"))
-      .crossJoin(broadcast(centArr)).crossJoin(broadcast(packed))
-      .select(col("query_id"), col("qvec"),
+    // ADC lookup table per (query, probed cell) row; bounded
+    // numQueries × nprobe
+    val queries = probes.crossJoin(broadcast(packed))
+      .select(col("query_id"), col("cell"),
         transform(col("books"), (entries, j) =>
           transform(entries, e => dot(
             slice(col("qvec"), j * dsub + 1, dsub), e.getField("cvec"))))
-          .as("lut"),
-        explode(slice(reverse(array_sort(transform(col("cc"),
-          c => struct(dot(col("qvec"), c.getField("cvec")).as("sim"),
-            c.getField("cid").as("cid"))))), 1, np)
-          .getField("cid")).as("cell"))
+          .as("lut"))
       .localCheckpoint()
-    // static IN-list on the partition column → directory-level pruning
-    // (the ivfTopKIndexed pattern); bounded by numQueries × nprobe
-    val probeCells = queries.select("cell").distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val prunedRaw = graft.core.Tables.packedScan(
-      data.where(col("cell").isin(probeCells: _*)), s"$indexPath/data")
     // tombstoned vectors drop out of BOTH the ADC pass and the rerank
     // here: the anti-join touches only the probed cells' rows, so a
     // delete-free index pays nothing (None → no join in the plan) and
@@ -477,26 +440,18 @@ object Quantize {
       .join(broadcast(queries), Seq("cell"))
       .where(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        adcScore(col("codes"), col("lut")).as("adc"))
-    val wAdc = Window.partitionBy("query_id")
-      .orderBy(col("adc").desc, col("neighbor_id"))
-    val cand = adc.withColumn("rn", row_number().over(wAdc))
-      .where(col("rn") <= k * rerank)
+        adcScore(col("codes"), col("lut")).as("sim"))
+    val cand = Similarity.rankNeighbors(adc, k * rerank)
       .select("query_id", "neighbor_id")
     // exact rerank: true vectors re-read from the probed partitions
     // only; query vectors come from the side input, never the index
-    val exact = cand
+    Similarity.rankNeighbors(cand
       .join(pruned.select(col("vec_id").as("neighbor_id"), col("vec")),
         "neighbor_id")
       .join(broadcast(queriesIn.select(col("query_id"), col("qvec"))),
         "query_id")
       .select(col("query_id"), col("neighbor_id"),
-        dot(col("vec"), col("qvec")).as("sim"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    exact.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank")
+        dot(col("vec"), col("qvec")).as("sim")), k)
   }
 
   /** Gate-query side input for the IVF-PQ probe: the first

@@ -11,12 +11,18 @@ import graft.functions.VectorFunctions._
   * `embedding: array<float>`, `label`). Extension beyond the reference
   * surface (SURVEY §7 step 7).
   *
-  * Two paths, as a real pipeline would ship them:
+  * Three paths, as a real pipeline would ship them:
   *  - Brute-force cosine — the exactness baseline. All vector math runs
   *    through the codegen'd [[graft.functions.DotProduct]] expression on
   *    pre-normalized unit vectors (cosine ≡ dot), with the small query
   *    side broadcast: the corpus streams through whole-stage codegen
   *    once, no shuffle of the big side.
+  *  - IVF (inverted file) — seeded k-means cells ([[ivfCentroidsDf]]);
+  *    a query scans only its `nprobe` nearest cells. Every IVF caller
+  *    (this object, [[Quantize]], the embed ingest) goes through
+  *    [[probeCells]] for "which cells does this vector belong to",
+  *    [[probeIndex]] for a persisted cell-partitioned index and
+  *    [[rankNeighbors]] for the per-query top-k.
   *  - Sign-LSH bucketed — the 100 TB path. Random-hyperplane sign bits
   *    bucket the corpus; candidates only form inside buckets, then
   *    exact cosine verifies. Cost scales with bucket occupancy, not
@@ -50,16 +56,24 @@ object Similarity {
     * top-k is computed without it). */
   def bruteForceTopKFor(corpus: DataFrame, queries: DataFrame,
       k: Int): DataFrame = {
-    val scored = corpus.join(broadcast(queries),
+    rankNeighbors(corpus.join(broadcast(queries),
         col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        dot(col("vec"), col("qvec")).as("sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
+        dot(col("vec"), col("qvec")).as("sim")), k)
+  }
+
+  /** The one neighbour ranker: (query_id, neighbor_id, sim, …) →
+    * (query_id, neighbor_id, rank) for rank ≤ k — sim descending,
+    * ties broken by neighbor_id, the `ROW_NUMBER() OVER (PARTITION BY
+    * query_id ORDER BY sim DESC, neighbor_id)` of
+    * [[bruteForceTopKSql]]. The order is total, so ranks are
+    * hash-stable across engines. */
+  def rankNeighbors(scored: DataFrame, k: Int): DataFrame =
+    scored.withColumn("rank", row_number().over(
+        Window.partitionBy("query_id")
+          .orderBy(col("sim").desc, col("neighbor_id"))))
       .where(col("rank") <= k)
       .select("query_id", "neighbor_id", "rank")
-  }
 
   val bruteForceTopKSql: String =
     """WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -98,23 +112,13 @@ object Similarity {
 
   // ----- IVF (inverted-file) ANN: the second scale family -----
 
-  /** Coarse centroids for IVF as driver-side literal arrays — the
-    * small-k convenience form of [[ivfCentroidsDf]] (one trainer, one
-    * set of seeds/iterations/de-bias rules; this just collects the k
-    * tiny rows for callers that inline them as plan literals, which is
-    * only safe at k ≲ 16 — see the codegen-blowup note on
-    * [[ivfCentroidsDf]]). */
-  def ivfCentroids(corpus: DataFrame, k: Int): Array[(Int, Array[Double])] =
-    ivfCentroidsDf(corpus, k).collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
-
   /** IVF top-k: corpus partitioned into k centroid cells; each query
     * probes its `nprobe` nearest cells and scans only those. At 100 TB
     * the cell assignment is a materialized column (cluster-by on
-    * write), so a query touches nprobe/k of the corpus. Recall vs
-    * brute force is gated by [[ivfRecall]] (driver row, ≥ 0.9
-    * aggregate) and floored per-query in OpsSpec.
+    * write, the embed ingest's `vindex` — [[probeIndex]]), so a query
+    * touches nprobe/k of the corpus. Recall vs brute force is gated by
+    * [[ivfRecall]] (driver row, ≥ 0.9 aggregate) and floored per-query
+    * in OpsSpec.
     *
     * nprobe=14 of 16 cells is what meets the 0.9 band at the tiny
     * gate SF. That fraction is an artifact of a 500-vector NEAR-RANDOM
@@ -126,33 +130,24 @@ object Similarity {
     * construction. De-biased seeds measure 0.47-0.63 at nprobe=4-6 —
     * the honest number for random data.) At real scale `cells` grows
     * with √n while nprobe stays O(10), and real corpora cluster, so
-    * the probed FRACTION shrinks toward nprobe/cells ≪ 1. */
+    * the probed FRACTION shrinks toward nprobe/cells ≪ 1.
+    *
+    * The corpus is read three times (training sample, assignment,
+    * queries), so it is materialized here with a local checkpoint —
+    * never a session cache entry, which would outlive the call and
+    * serve later `normalized` readers in the same session. */
   def ivfTopK(spark: SparkSession, dir: String, numQueries: Int = 10,
       k: Int = 10, cells: Int = 16, nprobe: Int = 0): DataFrame = {
-    val np = if (nprobe > 0) nprobe else nprobeAuto(cells)
-    val corpus = normalized(spark, dir).cache()
-    val cents = ivfCentroids(corpus, cells)
-    def bestCells(v: org.apache.spark.sql.Column, n: Int) = {
-      val scored = array(cents.map { case (cid, c) =>
-        struct(dot(v, array(c.map(lit): _*)).as("sim"), lit(cid).as("cid"))
-      }: _*)
-      slice(reverse(array_sort(scored)), 1, n)
-    }
-    val assigned = corpus.withColumn("cell",
-      bestCells(col("vec"), 1).getItem(0).getField("cid"))
-    val queries = corpus.where(col("vec_id") < numQueries)
-      .select(col("vec_id").as("query_id"), col("vec").as("qvec"),
-        explode(transform(bestCells(col("vec"), np),
-          s => s.getField("cid"))).as("cell"))
-    val scored = assigned.join(broadcast(queries), Seq("cell"))
+    val corpus = normalized(spark, dir).localCheckpoint()
+    val cents = ivfCentroidsDf(corpus, cells)
+    val queries = probeCells(corpus.where(col("vec_id") < numQueries)
+        .select(col("vec_id").as("query_id"), col("vec")), cents, nprobe)
+      .select(col("query_id"), col("vec").as("qvec"), col("cell"))
+    rankNeighbors(probeCells(corpus, cents, 1)
+      .join(broadcast(queries), Seq("cell"))
       .where(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        dot(col("vec"), col("qvec")).as("sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank")
+        dot(col("vec"), col("qvec")).as("sim")), k)
   }
 
   /** Probe budget that tracks the cell count — the [[lshAutoBits]]
@@ -220,73 +215,6 @@ object Similarity {
       |       1 AS recall_ge_90
       |FROM embeddings WHERE vec_id < 10""".stripMargin
 
-  /** The materialized form of [[ivfTopK]] — the actual 100 TB layout:
-    * embeddings written ONCE partitioned by their IVF cell, so a query
-    * scans only its nprobe cell directories via partition pruning
-    * (the other cells are never read, not merely filtered). Returns
-    * the centroids for probing; OpsSpec asserts the pruned-scan plan
-    * shape and result parity with the unindexed path. */
-  def buildIvfIndex(spark: SparkSession, dir: String, indexPath: String,
-      cells: Int = 16): Array[(Int, Array[Double])] = {
-    val corpus = normalized(spark, dir).cache()
-    val cents = ivfCentroids(corpus, cells)
-    val scored = array(cents.map { case (cid, c) =>
-      struct(dot(col("vec"), array(c.map(lit): _*)).as("sim"),
-        lit(cid).as("cid"))
-    }: _*)
-    corpus
-      .withColumn("cell",
-        slice(reverse(array_sort(scored)), 1, 1)
-          .getItem(0).getField("cid"))
-      // cell-align BEFORE partitionBy: without it every scan task
-      // writes its own file per cell (tasks × cells small files paid
-      // on every later probe)
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(indexPath)
-    cents
-  }
-
-  /** Query the persisted index: probe the nprobe best cells for each
-    * query vector — the `cell IN (...)` predicate prunes at the
-    * DIRECTORY level, so scan cost is nprobe/cells of the corpus. */
-  def ivfTopKIndexed(spark: SparkSession, indexPath: String,
-      cents: Array[(Int, Array[Double])], numQueries: Int = 10,
-      k: Int = 10, nprobe: Int = 0,
-      queriesFrom: DataFrame = null): DataFrame = {
-    val np = if (nprobe > 0) nprobe else nprobeAuto(cents.length)
-    val indexed = spark.read.parquet(indexPath)
-    def bestCells(v: org.apache.spark.sql.Column, n: Int) = {
-      val scored = array(cents.map { case (cid, c) =>
-        struct(dot(v, array(c.map(lit): _*)).as("sim"), lit(cid).as("cid"))
-      }: _*)
-      slice(reverse(array_sort(scored)), 1, n)
-    }
-    // query vectors from a SIDE INPUT when the caller has one: the
-    // vec_id predicate is a data column, so fetching queries from the
-    // index itself full-scans every cell directory before the pruned
-    // probe — the exact anti-pattern the ivfPqTopK scaladoc documents
-    val querySrc = Option(queriesFrom).getOrElse(indexed)
-    val queries = querySrc.where(col("vec_id") < numQueries)
-      .select(col("vec_id").as("query_id"), col("vec").as("qvec"),
-        explode(transform(bestCells(col("vec"), np),
-          s => s.getField("cid"))).as("cell"))
-    // static IN-list on the partition column → directory-level pruning
-    // (a bare join would need DPP); bounded by numQueries × nprobe
-    val probeCells = queries.select("cell").distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val scored = indexed
-      .where(col("cell").isin(probeCells: _*))
-      .join(broadcast(queries), Seq("cell"))
-      .where(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        dot(col("vec"), col("qvec")).as("sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank")
-  }
-
   /** Deterministic pseudo-random sample of a (vec_id, vec) frame:
     * order by md5 of the SEEDED id, not by vec_id. Centroid/codebook
     * training is statistics, and the lowest-vec_id sample the builds
@@ -303,14 +231,14 @@ object Similarity {
       col("vec_id")).limit(n)
 
   /** Centroids as a DATAFRAME (cid, cvec): k seeded sample vectors
-    * refined by one Lloyd step, with every vec·centroid product
-    * computed through a broadcast join — centroids are DATA, never
-    * plan literals. The literal-array form ([[ivfCentroids]], fine at
-    * k=16 for the ANN probes) embeds k·dim literals into each
-    * projection; at k=128 that is 8k+ expressions, past the codegen
-    * method-size limit, and the whole scoring drops to interpreted
-    * evaluation — measured 113× blowup at the 20× stress scale before
-    * this rewrite. The join form is codegen'd at any k.
+    * refined by up to `iters` Lloyd rounds, with every vec·centroid
+    * product computed against the centroid table as one broadcast row
+    * ([[probeCells]]) — centroids are DATA, never plan literals. A
+    * literal-array form embeds k·dim literals into each projection; at
+    * k=128 that is 8k+ expressions, past the codegen method-size limit,
+    * and the whole scoring drops to interpreted evaluation — measured
+    * 113× blowup at the 20× stress scale. The broadcast form is
+    * codegen'd at any k.
     *
     * Training cost is bounded on both axes (centroids are statistics,
     * not indexes — the pqCodebooks discipline):
@@ -367,7 +295,7 @@ object Similarity {
       val checksNow = prevAssign != null
       val nextChecks = i + 1 <= iters - 2
       val assignPlan = if (k >= 512) assignCellsTwoLevel(sample, cents)
-        else assignCells(sample, cents)
+        else probeCells(sample, cents, 1).select("vec_id", "cell")
       val assign = if (checksNow || nextChecks) assignPlan.localCheckpoint()
         else assignPlan
       converged = checksNow &&
@@ -413,35 +341,73 @@ object Similarity {
     cents
   }
 
-  /** Top-`nprobe` centroid assignment. nprobe=1 is a SHUFFLE-FREE
-    * codegen map pass: the whole centroid table rides in as one
-    * broadcast array row and [[graft.functions.BestCell]] computes
-    * the exact argmax per vector in a primitive loop — same dots,
-    * same lowest-cid tie-break as the join form, so the result is
-    * bit-identical, but the n·k scored exchange is gone entirely
-    * (measured 290 s → map-side at 1M×1k cells). nprobe>1 keeps the
-    * broadcast-join + rank shape: the scored stream carries only
-    * (vec_id, cid, sim), vectors never ride through the shuffle. */
-  def assignCells(vectors: DataFrame, cents: DataFrame,
-      nprobe: Int = 1): DataFrame =
-    if (nprobe == 1) {
-      val arr = cents.agg(collect_list(struct(col("cid"), col("cvec")))
-        .as("cc"))
-      vectors.select(col("vec_id"), col("vec"))
-        .crossJoin(broadcast(arr))
-        .select(col("vec_id"),
-          graft.functions.VectorFunctions.bestCell(col("vec"), col("cc"))
-            .getField("cid").as("cell"))
-    } else
-      pickCells(vectors.select(col("vec_id"), col("vec"))
-        .crossJoin(broadcast(cents))
-        .select(col("vec_id"), col("cid"),
-          dot(col("vec"), col("cvec")).as("sim")), nprobe)
+  /** The one cell prober — "which cells does this vector belong to"
+    * for every IVF caller. Adds `cell` and `sim` (the vector·centroid
+    * dot) to each row of `rows`, which needs a unit-vector `vec`
+    * column; every other column is kept. `cents` is the (cid, cvec)
+    * table, which rides in as ONE broadcast array row: the probe is a
+    * map-side projection, no shuffle, no plan literals.
+    *  - nprobe = 1: one row per input row, the exact argmax through the
+    *    codegen'd [[graft.functions.BestCell]] primitive loop
+    *    (measured 290 s → map-side at 1M × 1k cells against the old
+    *    n·k scored exchange);
+    *  - nprobe > 1: one row per probed cell, nearest first — one
+    *    per-row sort of the k (−sim, cid) pairs, sliced to nprobe;
+    *  - nprobe = 0: [[nprobeAuto]] of the centroid count (one tiny
+    *    job over `cents`).
+    * Ties go to the lowest cid at every nprobe. */
+  def probeCells(rows: DataFrame, cents: DataFrame, nprobe: Int)
+      : DataFrame = {
+    val cc = cents
+      .agg(collect_list(struct(col("cid"), col("cvec"))).as("cc"))
+    val n = if (nprobe > 0) nprobe
+      else nprobeAuto(cc.select(size(col("cc"))).head().getInt(0))
+    val (probe, sim) =
+      if (n == 1) (bestCell(col("vec"), col("cc")), col("p.sim"))
+      else (explode(slice(sort_array(transform(col("cc"), c =>
+          struct((-dot(col("vec"), c.getField("cvec"))).as("nsim"),
+            c.getField("cid").as("cid")))), 1, n)), -col("p.nsim"))
+    val kept = rows.columns.toSeq.map(c => col(s"`$c`"))
+    rows.crossJoin(broadcast(cc))
+      .select(kept :+ probe.as("p"): _*)
+      .select(kept :+ col("p.cid").as("cell") :+ sim.as("sim"): _*)
+  }
 
-  /** Shared tail of the cell assigners: reduce a scored (vec_id, cid,
-    * sim) stream to each vector's top-`nprobe` cells. nprobe=1 is a
-    * map-side-combined max_by; nprobe>1 ranks per vector. The shuffle
-    * carries only ids and one double either way. */
+  /** Probe a persisted cell-partitioned index laid out as
+    * `<index>/centroids` (cid, cvec) and `<index>/data/cell=N/…` — the
+    * embed ingest's `vindex` and the IVF-PQ index. `queries` is a
+    * (query_id, qvec) side input of unit vectors, never fetched from
+    * the index itself: its vec_id predicate is on a DATA column, so the
+    * fetch would read every cell directory. Returns the probes
+    * (query_id, qvec, cell; checkpointed, numQueries × nprobe rows) and
+    * the [[cellScan]] of the probed cells. */
+  def probeIndex(spark: SparkSession, index: String, queries: DataFrame,
+      nprobe: Int): (DataFrame, DataFrame) = {
+    val probes = probeCells(
+        queries.select(col("query_id"), col("qvec").as("vec")),
+        spark.read.parquet(s"$index/centroids"), nprobe)
+      .select(col("query_id"), col("vec").as("qvec"), col("cell"))
+      .localCheckpoint()
+    (probes, cellScan(s"$index/data", probes))
+  }
+
+  /** The scan of a cell-partitioned `data` dir pruned to the cells
+    * `probes` lists: a static IN-list on the partition column prunes
+    * at the directory level (a bare join would need DPP), packed to
+    * data-proportional tasks ([[Tables.packedScan]]). The cell list is
+    * collected to the driver, bounded by the cell count. */
+  def cellScan(data: String, probes: DataFrame): DataFrame = {
+    val cells = probes.select("cell").distinct()
+      .collect().map(_.getInt(0)).toSeq
+    Tables.packedScan(probes.sparkSession.read.parquet(data)
+      .where(col("cell").isin(cells: _*)), data)
+  }
+
+  /** Fine step of [[assignCellsTwoLevel]]: reduce a scored (vec_id,
+    * cid, sim) stream to each vector's top-`nprobe` cells (ties to the
+    * lowest cid, as in [[probeCells]]). nprobe=1 is a map-side-combined
+    * max_by; nprobe>1 ranks per vector. The shuffle carries only ids
+    * and one double either way. */
   private def pickCells(scored: DataFrame, nprobe: Int): DataFrame =
     if (nprobe == 1)
       scored.groupBy("vec_id")
@@ -475,9 +441,9 @@ object Similarity {
     * (kc=√k, wc=coarseProbe) vs k — at k=1800 / wc=4 that is ~6× fewer
     * dot products, and the same factor off the argmax shuffle volume.
     *
-    * Plan shape: the coarse table rides in as ONE broadcast row (an
-    * array of kc structs), so the per-vector top-wc probe is computed
-    * entirely map-side by array expressions — no shuffle, and no
+    * Plan shape: the coarse step is [[probeCells]] at wc — the coarse
+    * table rides in as ONE broadcast row, so the per-vector top-wc
+    * probe is computed entirely map-side — no shuffle, and no
     * plan-literal centroids (the k=128 codegen blowup documented on
     * [[ivfCentroidsDf]]). Fine centroids arrive pre-grouped by coarse
     * cell via a second broadcast; vectors never shuffle. The only
@@ -519,16 +485,12 @@ object Similarity {
     // to packedFine's ccids guarantees every probed cell joins ≥ 1
     // fine, so no vector can drop; orphans contributed nothing to
     // scoring anyway (output unchanged when none exist).
-    val coarseArr = coarse
+    val liveCoarse = coarse
       .join(packedFine.select("ccid"), Seq("ccid"), "left_semi")
-      .agg(collect_list(struct(col("ccid"), col("ccvec"))).as("cc"))
-    val probed = vectors.select(col("vec_id"), col("vec"))
-      .crossJoin(broadcast(coarseArr))
-      .select(col("vec_id"), col("vec"),
-        explode(slice(reverse(array_sort(transform(col("cc"),
-          c => struct(dot(col("vec"), c.getField("ccvec")).as("sim"),
-            c.getField("ccid").as("ccid"))))), 1, wc)
-          .getField("ccid")).as("ccid"))
+      .select(col("ccid").as("cid"), col("ccvec").as("cvec"))
+    val probed = probeCells(vectors.select(col("vec_id"), col("vec")),
+        liveCoarse, wc)
+      .select(col("vec_id"), col("vec"), col("cell").as("ccid"))
     val scored = probed.join(broadcast(packedFine), "ccid")
       .select(col("vec_id"),
         explode(transform(col("fines"),
@@ -604,7 +566,7 @@ object Similarity {
     // registered query's output is untouched by the switch.
     val buckets = (if (k >= twoLevelFrom)
         assignCellsTwoLevel(corpus, cents, nprobe)
-      else assignCells(corpus, cents, nprobe))
+      else probeCells(corpus, cents, nprobe).select("vec_id", "cell"))
       .localCheckpoint()
     // Verify INSIDE the cell join, exactly once per pair — the shape
     // that survives the Θ(n^1.5) candidate volume. Materializing
@@ -859,13 +821,11 @@ object Similarity {
         math.sqrt(corpus.count().toDouble).toLong)).toInt
     val cents = ivfCentroidsDf(corpus, k, iters = 2).localCheckpoint()
     // assignment AND the owning-centroid similarity in one shuffle-free
-    // codegen pass ([[graft.functions.BestCell]]): the n·√n dot count
+    // codegen pass ([[probeCells]] at nprobe 1): the n·√n dot count
     // runs map-side over the broadcast centroid array — no n·k scored
     // exchange, no re-join of the corpus, no two-level machinery
     // (exact argmax at this k is cheaper than the pruned probe's
     // explode/shuffle shape; at 10⁹ rows this stays one map stage)
-    val centsArr = cents
-      .agg(collect_list(struct(col("cid"), col("cvec"))).as("cc"))
     // the best-cell pass is the screen's dominant term (n·k dots) and
     // the ONLY consumer of the full vectors after the centroid build —
     // materialize its slim (vec_id, cell, sim) output eagerly so the
@@ -876,12 +836,8 @@ object Similarity {
     // 3 fixed-width columns per row — ~20 bytes/doc, disk-spillable —
     // and its blocks are released by the ContextCleaner when the
     // returned plan is collected.
-    val scored = corpus.crossJoin(broadcast(centsArr))
-      .select(col("vec_id"),
-        graft.functions.VectorFunctions.bestCell(col("vec"), col("cc"))
-          .as("b"))
-      .select(col("vec_id"), col("b.cid").as("cell"),
-        col("b.sim").as("sim"))
+    val scored = probeCells(corpus, cents, 1)
+      .select("vec_id", "cell", "sim")
       .localCheckpoint()
     val w = Window.partitionBy("cell").orderBy(col("sim").desc, col("vec_id"))
     val grouped = scored
@@ -956,12 +912,6 @@ object Similarity {
 
   // ----- Cluster-balanced sampling (the topic axis of mixing) -----
 
-  /** Per-cell sizes and keep-quotas for [[clusterBalancedSample]]:
-    * quota_c ∝ size_c^alpha (alpha < 1 flattens — mega-topics
-    * downweighted, tail topics kept whole), scaled to a global budget
-    * of budgetPct% of the corpus, floored at 1 so no topic vanishes.
-    * k rows — driver math on a collected frame, like the centroid
-    * cache itself. */
   /** Shared sampler defaults — the GATE recomputes quotas
     * independently, so these live in ONE place: changing a default in
     * the sample call alone would silently leave the gate asserting
@@ -970,6 +920,11 @@ object Similarity {
   private[ops] val SampleAlpha = 0.5
   private[ops] val SampleBudgetPct = 25
 
+  /** Per-cell sizes and keep-quotas for [[clusterBalancedSample]]:
+    * quota_c ∝ size_c^alpha (alpha < 1 flattens — mega-topics
+    * downweighted, tail topics kept whole), scaled to a global budget
+    * of budgetPct% of the corpus, floored at 1 so no topic vanishes.
+    * k rows — driver math on a collected frame. */
   private[ops] def clusterQuotas(sizes: Array[(Int, Long)],
       alpha: Double, budgetPct: Int): Seq[(Int, Long, Long)] = {
     val total = sizes.map(_._2).sum
@@ -1018,12 +973,11 @@ object Similarity {
   def clusterBalancedSample(spark: SparkSession, dir: String,
       k: Int = SampleK, alpha: Double = SampleAlpha,
       budgetPct: Int = SampleBudgetPct): DataFrame = {
-    val cents = ivfCentroids(normalized(spark, dir), k)
-    import spark.implicits._
-    val centDf = cents.toSeq.toDF("cid", "cvec")
+    val corpus = normalized(spark, dir)
     // ONE assignment pass (the only corpus-sized stage): the quota
     // frame and the ranked selection both derive from it
-    val assign = assignCells(normalized(spark, dir), centDf)
+    val assign = probeCells(corpus, ivfCentroidsDf(corpus, k), 1)
+      .select("vec_id", "cell")
       .localCheckpoint()
     val quotas = clusterQuotaFrame(assign, alpha, budgetPct)
     val w = Window.partitionBy("cell")

@@ -59,8 +59,9 @@ import graft.ops.{Components, Similarity}
 object IngestEmbed {
 
   private def corpusPath(workDir: String) = s"$workDir/embeddings.parquet"
-  private def centsPath(workDir: String) = s"$workDir/vindex/centroids"
-  private def dataPath(workDir: String) = s"$workDir/vindex/data"
+  private def indexPath(workDir: String) = s"$workDir/vindex"
+  private def centsPath(workDir: String) = s"${indexPath(workDir)}/centroids"
+  private def dataPath(workDir: String) = s"${indexPath(workDir)}/data"
 
   /** Cell granularity for a work dir's discipline — ONE formula
     * shared by first-batch training and [[rebuildEmbedIndex]], whose
@@ -152,23 +153,15 @@ object IngestEmbed {
           .write.mode("overwrite").parquet(centsPath(workDir))
       }
       val cents = spark.read.parquet(centsPath(workDir)).localCheckpoint()
-      val assigned = Similarity.assignCells(vecs, cents, nprobe)
-        .localCheckpoint()
+      val assigned = Similarity.probeCells(vecs, cents, nprobe)
+        .select("vec_id", "cell").localCheckpoint()
 
       // 1. vs history: any kept vector at cosine ≥ tau in a probed
-      //    cell kills the batch vector. Probe cells are a bounded
-      //    driver list (≤ cell count) → directory-level pruning, the
-      //    ivfTopKIndexed pattern.
+      //    cell kills the batch vector; only the probed cell dirs are
+      //    read ([[Similarity.cellScan]])
       val fresh =
         if (Dirs.exists(spark, dataPath(workDir))) {
-          val probeCells = assigned.select("cell").distinct()
-            .collect().map(_.getInt(0)).toSeq
-          // packedScan: the per-(cell,batch) layout is one tiny file
-          // each — pack the probed splits to data-proportional tasks
-          val hist = graft.core.Tables.packedScan(
-            spark.read.parquet(dataPath(workDir))
-              .where(col("cell").isin(probeCells: _*)),
-            dataPath(workDir))
+          val hist = Similarity.cellScan(dataPath(workDir), assigned)
             .select(col("cell"), col("vec").as("hvec"))
           val dropped = assigned
             .join(vecs, "vec_id")
@@ -185,14 +178,7 @@ object IngestEmbed {
           // one codegen map pass: owning cell AND the similarity to
           // its centroid together (the batch screen's only dot per
           // arrival besides the verify below)
-          val centsArr = cents
-            .agg(collect_list(struct(col("cid"), col("cvec"))).as("cc"))
-          val scored = fresh.crossJoin(broadcast(centsArr))
-            .select(col("vec_id"), col("vec"),
-              graft.functions.VectorFunctions
-                .bestCell(col("vec"), col("cc")).as("b"))
-            .select(col("vec_id"), col("vec"),
-              col("b.cid").as("cell"), col("b.sim").as("sim"))
+          val scored = Similarity.probeCells(fresh, cents, 1)
             .localCheckpoint()
           val w = org.apache.spark.sql.expressions.Window
             .partitionBy("cell").orderBy(col("sim").desc, col("vec_id"))
@@ -265,8 +251,7 @@ object IngestEmbed {
       // creation while keeping one file per (cell, batch) — each cell
       // still lands in exactly one task.
       val nCells = cents.count().toInt
-      Similarity.assignCells(normed, cents, nprobe = 1)
-        .join(normed, "vec_id")
+      Similarity.probeCells(normed, cents, 1).drop("sim")
         .withColumn("batch", lit(batchId))
         .repartition(
           math.max(1, math.min(nCells,
@@ -298,48 +283,22 @@ object IngestEmbed {
 
   /** ANN top-k over the ingest's vector index — the read side that
     * makes `vindex/` a queryable artifact, not just dedup plumbing:
-    * probe each query's `nprobe` best cells (0 = auto-tune against
-    * the index's cell count, [[graft.ops.Similarity.nprobeAuto]] —
-    * a fixed budget quietly loses recall as the first batch's size,
-    * hence the frozen cell count, grows), scan ONLY those cell
-    * directories (static IN-list → directory-level pruning, the
-    * ivfTopKIndexed pattern), exact dot, per-query top-k. `queries`
-    * is a (query_id, qvec) side input of unit vectors — never
-    * fetched from the index itself (the [[graft.ops.Quantize
-    * .ivfPqTopK]] full-scan trap). */
+    * probe each query's `nprobe` best cells and scan ONLY those cell
+    * directories ([[Similarity.probeIndex]]; 0 = auto-tune against the
+    * index's cell count — a fixed budget quietly loses recall as the
+    * first batch's size, hence the frozen cell count, grows), exact
+    * dot, per-query top-k. `queries` is a (query_id, qvec) side input
+    * of unit vectors — never fetched from the index itself. */
   def embedIndexTopK(spark: SparkSession, workDir: String,
       queries: DataFrame, k: Int = 10, nprobe: Int = 0): DataFrame = {
-    val centArr = spark.read.parquet(centsPath(workDir))
-      .agg(collect_list(struct(col("cid"), col("cvec"))).as("cc"))
-      .localCheckpoint()
-    val np = if (nprobe > 0) nprobe
-      else Similarity.nprobeAuto(
-        centArr.select(size(col("cc"))).head().getInt(0))
-    val probes = queries.select(col("query_id"), col("qvec"))
-      .crossJoin(broadcast(centArr))
-      .select(col("query_id"), col("qvec"),
-        explode(slice(reverse(array_sort(transform(col("cc"),
-          c => struct(dot(col("qvec"), c.getField("cvec")).as("sim"),
-            c.getField("cid").as("cid"))))), 1, np)
-          .getField("cid")).as("cell"))
-      .localCheckpoint()
-    val probeCells = probes.select("cell").distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val scored = graft.core.Tables.packedScan(
-        spark.read.parquet(dataPath(workDir))
-          .where(col("cell").isin(probeCells: _*)),
-        dataPath(workDir))
-      .select(col("cell"), col("vec_id"), col("vec"))
-      .join(broadcast(probes), Seq("cell"))
-      .where(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        dot(col("vec"), col("qvec")).as("sim"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank")
+    val (probes, data) =
+      Similarity.probeIndex(spark, indexPath(workDir), queries, nprobe)
+    Similarity.rankNeighbors(
+      data.select(col("cell"), col("vec_id"), col("vec"))
+        .join(broadcast(probes), Seq("cell"))
+        .where(col("vec_id") =!= col("query_id"))
+        .select(col("query_id"), col("vec_id").as("neighbor_id"),
+          dot(col("vec"), col("qvec")).as("sim")), k)
   }
 
   /** REBUILD the ingest's vector index from the full kept history —
@@ -363,14 +322,13 @@ object IngestEmbed {
     val cents = Similarity
       .ivfCentroidsDf(hist.select("vec_id", "vec"), nCells, iters = 2)
       .localCheckpoint()
-    Dirs.swap(spark, s"$workDir/vindex") { tmp =>
+    Dirs.swap(spark, indexPath(workDir)) { tmp =>
       cents.write.parquet(s"$tmp/centroids")
       // explicit count, same reason as the append write: AQE coalesces
       // a keyless repartition to 1 partition and that task creates
       // every (cell, batch) file serially (measured 9.8 s for the
       // 353-file rebuild at sf0.1)
-      Similarity.assignCells(hist.select("vec_id", "vec"), cents, nprobe = 1)
-        .join(hist, "vec_id")
+      Similarity.probeCells(hist, cents, 1)
         .repartition(
           math.max(1, math.min(nCells,
             spark.sparkContext.defaultParallelism)), col("cell"))

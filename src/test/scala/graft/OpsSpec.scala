@@ -839,61 +839,78 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
     spark.catalog.clearCache()
   }
 
-  test("persisted IVF index: partition-pruned probe, same results") {
-    val idx = tempDir("graft-ivf-idx") + "/index"
-    val cents = graft.ops.Similarity.buildIvfIndex(spark, sf, idx)
-    // nprobe pinned to 4 and 4 queries: the pruning assertion needs the
-    // probe-cell union to stay under all 16 dirs (de-biased centroids
-    // spread 10 queries' probes wider than the old seed-coincident
-    // ones), and parity needs the same settings on both paths
-    val indexed = graft.ops.Similarity.ivfTopKIndexed(spark, idx, cents,
-      numQueries = 4, nprobe = 4)
-    // pruning: the probe scan must touch only the probed cell dirs
-    // (descend through the AQE wrapper — it is a leaf node)
-    val physical = indexed.queryExecution.executedPlan match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        a.executedPlan
-      case p => p
+  test("IVF on an empty and a one-row embeddings table: no exception, " +
+    "zero rows when empty, one label row from one vector") {
+    val em = graft.core.Tables.embeddings(spark, sf)
+    def tableOf(rows: org.apache.spark.sql.DataFrame): String = {
+      val dir = tempDir("graft-ivf-degenerate")
+      rows.write.parquet(s"$dir/embeddings.parquet")
+      dir
     }
-    val scan = physical.collectLeaves()
-      .collectFirst {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec
-            if f.partitionFilters.nonEmpty => f
-      }
-    assert(scan.isDefined, "no partitioned scan found")
-    assert(scan.get.selectedPartitions.partitionCount < 16,
-      s"probe scanned ${scan.get.selectedPartitions.partitionCount}/16 cells")
-    // parity with the unindexed IVF path (same centroids/seeds)
-    val direct = graft.ops.Similarity.ivfTopK(spark, sf, numQueries = 4,
-      nprobe = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val viaIndex = indexed
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(viaIndex === direct)
-    // side-input queries: same results, and the index is scanned ONLY
-    // through the pruned probe (no second, unpruned scan for the
-    // query-vector fetch)
-    val sideQueries = graft.ops.Similarity.normalized(spark, sf)
-    val viaSide = graft.ops.Similarity.ivfTopKIndexed(spark, idx, cents,
-      numQueries = 4, nprobe = 4, queriesFrom = sideQueries)
-    // plan check BEFORE execution (post-execution AQE leaves are query
-    // stages, not scans)
-    val sidePhysical = viaSide.queryExecution.executedPlan match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        a.executedPlan
-      case p => p
-    }
-    val indexScans = sidePhysical.collectLeaves().collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec
-          if f.relation.location.rootPaths.exists(_.toString.contains(idx)) =>
-        f
-    }
-    assert(indexScans.nonEmpty && indexScans.forall(_.partitionFilters.nonEmpty),
-      s"side-input probe still carries an unpruned index scan: " +
-        s"${indexScans.map(_.partitionFilters).mkString(";")}")
-    assert(viaSide.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet === direct)
+    val empty = tableOf(em.where(lit(false)))
+    assert(Similarity.ivfTopK(spark, empty).collect().isEmpty)
+    assert(Similarity.ivfRecallPerQuery(spark, empty).collect().isEmpty)
+    assert(Similarity.clusterBalancedSample(spark, empty).collect().isEmpty)
+    val one = tableOf(em.where(col("vec_id") === 0))
+    // the one vector is a query with no other vector to rank
+    assert(Similarity.ivfTopK(spark, one).collect().isEmpty)
+    assert(Similarity.ivfRecallPerQuery(spark, one).collect().isEmpty)
+    val labels = Similarity.clusterBalancedSample(spark, one).collect()
+    assert(labels.length === 1)
+    assert(labels(0).getAs[Long]("vec_id") === 0L)
+    assert(labels(0).getAs[Long]("selected") === 1L)
+  }
+
+  test("ivfTopK and hybridRrfTopKIvf leave no session cache entry") {
     spark.catalog.clearCache()
+    Similarity.ivfTopK(spark, sf).collect()
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "ivfTopK left a cached frame in the session")
+    graft.ops.Retrieval.hybridRrfTopKIvf(spark, sf).collect()
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "hybridRrfTopKIvf left a cached frame in the session")
+  }
+
+  test("probeCells: nprobe 1 is BestCell's argmax, ties go to the lower " +
+    "cid at every nprobe, nprobe 0 probes nprobeAuto(cells) cells") {
+    val corpus = Similarity.normalized(spark, sf.replace("sf0.001", "sf0.01"))
+      .select("vec_id", "vec").localCheckpoint()
+    val cents = Similarity.ivfCentroidsDf(corpus, 16)
+    val probed = Similarity.probeCells(corpus, cents, 1)
+      .select("vec_id", "cell", "sim")
+      .collect().map(r => (r.getLong(0), (r.getInt(1), r.getDouble(2))))
+      .toMap
+    val best = corpus.crossJoin(
+        cents.agg(collect_list(struct(col("cid"), col("cvec"))).as("cc")))
+      .select(col("vec_id"),
+        VectorFunctions.bestCell(col("vec"), col("cc")).as("b"))
+      .collect().map(r => (r.getLong(0),
+        (r.getStruct(1).getInt(0), r.getStruct(1).getDouble(1)))).toMap
+    assert(probed.size === corpus.count())
+    assert(probed === best)
+    // the nearest of each vector's top-2 cells is its nprobe-1 cell
+    val top2 = Similarity.probeCells(corpus, cents, 2)
+      .select("vec_id", "cell", "sim").collect()
+      .groupBy(_.getLong(0))
+    assert(top2.values.forall(_.length == 2))
+    assert(top2.forall { case (id, rs) =>
+      rs.maxBy(_.getDouble(2)).getInt(1) == probed(id)._1 })
+    // two identical centroids: cid 3 and cid 7 hold the same vector
+    val dup = Seq((7, Array(1.0, 0.0)), (3, Array(1.0, 0.0)),
+        (5, Array(0.0, 1.0))).toDF("cid", "cvec")
+    val v = Seq((1L, Array(0.8, 0.6))).toDF("vec_id", "vec")
+    assert(Similarity.probeCells(v, dup, 1).select("cell").head.getInt(0)
+      === 3)
+    assert(Similarity.probeCells(v, dup, 2).select("cell").collect()
+      .map(_.getInt(0)).toSeq === Seq(3, 7))
+    // nprobe 0: the auto budget of the centroid count, per vector
+    for (k <- Seq(16, 20)) {
+      val counts = Similarity.probeCells(corpus,
+          Similarity.ivfCentroidsDf(corpus, k), 0)
+        .groupBy("vec_id").count().select("count").distinct()
+        .collect().map(_.getLong(0)).toSeq
+      assert(counts === Seq(Similarity.nprobeAuto(k).toLong), s"k=$k")
+    }
   }
 
   test("winnowing: identical docs share all fingerprints, near-dups many") {

@@ -384,7 +384,7 @@ class PipelineOpsSpec extends AnyFunSuite with SharedSpark {
     assert(again === got)
     // the whole point of the screen: no corpus×corpus pair join ever
     // forms. The BroadcastNestedLoopJoins present are the intended
-    // n×k centroid scoring passes (assignCells: corpus ⨯ broadcast
+    // n×k centroid scoring passes (probeCells: corpus ⨯ broadcast
     // k-row centroid table — bounded by k, not by pair count); what
     // must be absent is an unbroadcast product or an equi-join of the
     // corpus with itself on a pair condition.
@@ -410,8 +410,8 @@ class PipelineOpsSpec extends AnyFunSuite with SharedSpark {
     "single-level assignment") {
     val corpus = Similarity.normalized(spark, sf)
     val cents = Similarity.ivfCentroidsDf(corpus, 16).localCheckpoint()
-    val single = Similarity.assignCells(corpus, cents)
-      .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
+    val single = Similarity.probeCells(corpus, cents, 1)
+      .select("vec_id", "cell").collect().map(r => (r.getLong(0), r.getInt(1))).toSet
     // coarseProbe = coarseK ⇒ every fine centroid is scored, so the
     // two-level argmax must reproduce the single-level one bit-for-bit
     val two = Similarity.assignCellsTwoLevel(corpus, cents,

@@ -37,4 +37,28 @@ class SourceRulesSpec extends AnyFunSuite {
     assert(confSets === Seq(
       "graft/core/Tables.scala" -> """if (nanos) spark.conf.set(key, "true")"""))
   }
+
+  test("one IVF probe path: no plan-literal centroid vector, the cell " +
+    "probe and the neighbour ranking window are each written once") {
+    val lines = sourceLines()
+    def sites(p: String): Seq[(String, String)] = {
+      val re = p.r
+      lines.collect {
+        case (f, l) if re.findFirstIn(l).isDefined => f -> l.trim
+      }
+    }
+    // a vector literal scored by dot: k·dim plan literals per projection
+    assert(sites("""dot\(.*\.map\(lit\)""").isEmpty)
+    // the probe shapes (argmax and sorted top-n over the centroid
+    // array) live in Similarity.probeCells only
+    val probes = sites("""bestCell\(col|array_max\(transform\(col\("cc"|""" +
+      """slice\((reverse\()?(array_sort|sort_array)\(""")
+    assert(probes.map(_._1) === Seq.fill(2)("graft/ops/Similarity.scala"),
+      probes.mkString("\n"))
+    // one neighbour ranking window: Similarity.rankNeighbors
+    val ranks = sites(
+      """orderBy\(col\("sim"\)\.desc,\s*col\("neighbor_id"\)\)""")
+    assert(ranks.map(_._1) === Seq("graft/ops/Similarity.scala"),
+      ranks.mkString("\n"))
+  }
 }

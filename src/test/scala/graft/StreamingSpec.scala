@@ -708,6 +708,30 @@ class StreamingSpec extends AnyFunSuite with SharedSpark {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = truth.intersect(got).size.toDouble / truth.size
     assert(recall >= 0.8, s"rebuilt-probe recall $recall below band")
+    // the probe reads the index only through the cell-pruned scan.
+    // nprobe pinned to 4: at the auto budget the 5 queries' probe-cell
+    // union can cover every cell dir. Plan checked BEFORE execution
+    // (post-execution AQE leaves are query stages, not scans)
+    val probe = graft.streaming.IngestEmbed
+      .embedIndexTopK(spark, work, queries, k = 10, nprobe = 4)
+    val physical = probe.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.executedPlan
+      case p => p
+    }
+    val indexScans = physical.collectLeaves().collect {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec
+          if f.relation.location.rootPaths
+            .exists(_.toString.contains(s"$work/vindex/data")) => f
+    }
+    assert(indexScans.nonEmpty && indexScans.forall(_.partitionFilters.nonEmpty),
+      s"the probe carries an unpruned index scan: " +
+        s"${indexScans.map(_.partitionFilters).mkString(";")}")
+    val cellDirs = spark.read.parquet(s"$work/vindex/data")
+      .select("cell", "batch").distinct().count()
+    val probed = indexScans.map(_.selectedPartitions.partitionCount).max
+    assert(probed < cellDirs,
+      s"probe scanned $probed of $cellDirs cell dirs")
     em.unpersist()
   }
 
