@@ -127,8 +127,8 @@ object SparkEntry {
     // bloom-screened twin: same oracle — the hash match proves the
     // Bloom gate in front of the history anti-join is result-invariant
     "q_dedup_incremental_bloom" -> (Dedup.dedupIncrementalBloom _),
-    // prefix-SHARDED bloom screen (8 shards forced): bounded per-job
-    // plan literals past the single-filter ceiling, same oracle again
+    // the same cogroup screen at 8 prefix shards (forced), same
+    // oracle again
     "q_dedup_incremental_bloom_sharded" ->
       (Dedup.dedupIncrementalBloomSharded _),
     // PERSISTED-STORE twin: screen from the bloom store, confirm

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.sketch.BloomFilter
 
 import graft.core.{Dirs, Session, Tables}
 
@@ -63,15 +64,42 @@ object Dedup {
     * One anti-join on the 16-byte fingerprint: the history side is a
     * (fp)-only table, so at 100 TB the shuffle carries fingerprints,
     * never text; with the store bucketed by fp the join is
-    * shuffle-free. Self-dups within the new batch collapse to their
-    * min doc_id as usual. */
+    * shuffle-free. Self-dups within the new batch collapse by
+    * [[firstArrivals]]. */
   def dedupAgainstHistory(newDocs: DataFrame, historyFps: DataFrame): DataFrame = {
-    val fresh = newDocs
-      .withColumn("fp", TextStats.fingerprint(col("text")))
-      .join(historyFps.select("fp"), Seq("fp"), "left_anti")
-    val survivors = fresh.groupBy("fp").agg(min(col("doc_id")).as("doc_id"))
-    fresh.join(survivors.select("doc_id"), Seq("doc_id"), "left_semi")
+    val rows = newDocs.withColumn("fp", TextStats.fingerprint(col("text")))
+    firstArrivals(rows,
+        rows.join(historyFps.select("fp"), Seq("fp"), "left_anti"))
       .select("doc_id", "lang", "source", "n_chars")
+  }
+
+  /** The one survivor rule of every exact dedup against a fingerprint
+    * history (plain, Bloom-screened, and both ingest batch forms):
+    * `fresh` holds the (doc_id, fp) of the batch rows no history fp
+    * matched; a row survives when its doc_id is the min doc_id of SOME
+    * fp group of `fresh` — the oracle's `doc_id IN (SELECT MIN(doc_id)
+    * FROM fresh GROUP BY fp)`, a semi-join on doc_id alone. The
+    * survivors' full rows come back from `rows` (the batch with its
+    * `fp` column) by (doc_id, fp), so a duplicate doc_id keeps only
+    * its own fresh texts, and by NULL-SAFE fp equality, so a null-text
+    * row (null fp, which matches no history fp) survives as it does in
+    * the oracle.
+    *
+    * `fresh` is localCheckpoint'd (batch-sized, two columns): it fans
+    * out into the collapse aggregate and the semi-join, and Spark
+    * inlines the subtree per reference — without the checkpoint the
+    * history anti-join, whose cost is the store scan, ran once per
+    * reference (2-3 store scans per batch, measured at 8M fps). */
+  private[graft] def firstArrivals(rows: DataFrame,
+      fresh: DataFrame): DataFrame = {
+    val f = fresh.select("doc_id", "fp").localCheckpoint()
+    val keep = f.join(
+        f.groupBy("fp").agg(min(col("doc_id")).as("doc_id")).select("doc_id"),
+        Seq("doc_id"), "left_semi")
+      .select(col("doc_id").as("__id"), col("fp").as("__fp"))
+    rows.join(keep,
+      rows("doc_id") === keep("__id") && rows("fp") <=> keep("__fp"),
+      "left_semi")
   }
 
   /** Oracle query: sources src0/src1 arrive as the new batch, the rest
@@ -108,8 +136,8 @@ object Dedup {
     * shuffle of the BATCH against the HISTORY fingerprint store; even
     * fp-bucketed, every batch row touches the store. A Bloom filter
     * over the history fps (built once per ingest epoch, reused across
-    * batches; ~1.2 GB at 10⁹ fps / 1% fpp) splits the batch at scan
-    * speed: definite-new rows (no false negatives — the overwhelming
+    * batches; ~1.2 GB at 10⁹ fps / 1% fpp) splits the batch:
+    * definite-new rows (no false negatives — the overwhelming
     * majority of a healthy crawl) SKIP the store entirely; only
     * bloom-positive rows (true dups + fpp of the new) are confirmed
     * by the exact anti-join, so the join input shrinks from |batch|
@@ -118,59 +146,22 @@ object Dedup {
     * shared DuckDB oracle (a from-scratch NOT IN) makes the hash
     * match a differential proof of that.
     *
-    * Plan shape: the membership probe is Catalyst's codegen'd
-    * `BloomFilterMightContain` over `xxhash64(fp)` (the same
-    * expression pair Spark's runtime row-level filtering injects), so
-    * the screen rides whole-stage codegen — no UDF, no shuffle. The
-    * serialized filter is embedded as a plan literal — exactly the
-    * regime Spark's own runtime filtering caps at 4M items / 8 MB
-    * per filter; past `shards = 1` this function runs the
-    * PREFIX-SHARDED screen instead (see [[dedupAgainstHistoryBloomSharded]]),
-    * which embeds no literal at all — filters travel as cogroup rows.
-    *
-    * Null fingerprints (null/absent text) never enter a filter and
-    * always take the exact confirm path (an explicit `fp IS NULL`
-    * branch — the probe itself is never null, xxhash64 maps null to
-    * its seed), so the screened output is IDENTICAL to
-    * [[dedupAgainstHistory]] on null-fp rows too — the anti-join
-    * keeps them (null matches nothing), same as the unscreened
-    * form. */
+    * The filter is SHARDED BY FP PREFIX ([[bloomShardFrame]]) and the
+    * batch is screened by the one [[cogroupScreen]]; one shard is
+    * just the cogroup with a single filter row. `shards ≤ 0` picks
+    * ceil(expectedItems / [[BloomShardItemCap]]) shards. No plan
+    * embeds a filter literal, so no per-filter size ceiling applies.
+    * Null fingerprints never enter a filter and always take the
+    * exact confirm path, where the anti-join keeps them (null matches
+    * nothing), same as the unscreened form. */
   def dedupAgainstHistoryBloom(newDocs: DataFrame, historyFps: DataFrame,
       expectedItems: Long, fpp: Double = 0.01, shards: Int = 0): DataFrame = {
-    val numShards = if (shards > 0) shards
-      else math.max(1L, (math.max(expectedItems, 1L) + BloomShardItemCap - 1)
-        / BloomShardItemCap).toInt
-    if (numShards > 1)
-      return dedupAgainstHistoryBloomSharded(newDocs, historyFps,
-        numShards, (expectedItems + numShards - 1) / numShards, fpp)
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-    import org.apache.spark.sql.graftbridge.Bridge
-    import org.apache.spark.sql.types.BinaryType
-    val bloom = historyFps
-      // null history fps never enter a filter (same as the sharded
-      // build) — they can match nothing in the anti-join anyway
-      .where(col("fp").isNotNull)
-      .select(xxhash64(col("fp")).as("h"))
-      .stat.bloomFilter("h", math.max(expectedItems, 1L), fpp)
-    val bos = new java.io.ByteArrayOutputStream()
-    bloom.writeTo(bos)
-    val might = Bridge.column(BloomFilterMightContain(
-      Literal(bos.toByteArray, BinaryType),
-      Bridge.expression(xxhash64(col("fp")))))
-    val tagged = newDocs
-      .withColumn("fp", TextStats.fingerprint(col("text")))
-      // null fp ⇒ the exact confirm path by its OWN branch: a
-      // coalesce over the probe is dead code (xxhash64(null) returns
-      // the SEED, never null, so the probe itself never is) and would
-      // quietly give null rows whatever verdict hash-of-seed draws
-      .withColumn("__maybe",
-        when(col("fp").isNull, lit(true)).otherwise(might))
-      // materialized: the confirm tail fans out (distinct-fp collect,
-      // anti-join slice, definite-new slice) and an unmaterialized
-      // screen re-runs the md5 + probe once per reference — the same
-      // lazy-fan-out term the sharded path checkpoints away
-      .localCheckpoint()
-    dedupeScreened(tagged, historyFps)
+    val items = math.max(expectedItems, 1L)
+    val n = if (shards > 0) shards
+      else ((items + BloomShardItemCap - 1) / BloomShardItemCap).toInt
+    val filters = bloomShardFrame(historyFps, n, (items + n - 1) / n, fpp)
+    dedupeScreened(newDocs, cogroupScreen(newDocs, filters, n), historyFps)
+      .select("doc_id", "lang", "source", "n_chars")
   }
 
   /** Positive-slice size under which the exact confirm runs as an
@@ -180,24 +171,20 @@ object Dedup {
     * while an IN-set of the slice's fps BUCKET-PRUNES the store scan
     * (`SelectedBucketsCount` < total in the plan; the fps ship to the
     * driver first, a collect bounded by this cap — ~320 KiB of
-    * 32-char fps at the default). That makes the steady state's per-batch store IO
+    * 32-char fps). That makes the steady state's per-batch store IO
     * proportional to the DUPLICATE COUNT, not the accumulated history
     * — the mostly-new batch (the common crawl-ingest regime) touches
     * only the buckets its few re-crawls hash to. Above the cap the
     * merge join over the bucket layout is the right plan (exchange-
-    * and sort-free on the store side). Tunable / disable-with-0 via
-    * `spark.graft.dedup.confirmInFilterCap` (the plan-shape specs pin
-    * both regimes).
+    * and sort-free on the store side). The plan-shape specs pin both
+    * regimes through [[confirmAgainstHistory]]'s `cap` argument.
     *
     * Sizing note: the positive slice of a mostly-new batch is
     * ~`fpp × batchSize` FALSE positives plus the true re-crawls, so
     * the cap must exceed that product for the probe to fire in the
     * very regime it serves — 10k covers a 400k-row batch at the
-    * default fpp 0.01 with headroom (the collect stays ~320 KiB of
-    * 32-char fps). */
-  private def confirmInFilterCap(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.dedup.confirmInFilterCap")
-      .map(_.toLong).getOrElse(10000L)
+    * default fpp 0.01 with headroom. */
+  private val ConfirmInFilterCap = 10000
 
   /** The store fps matching a small fp set — the probe scan of the
     * bucket-pruned confirm. MUST execute with
@@ -213,24 +200,20 @@ object Dedup {
     historyFps.select("fp").where(col("fp").isin(fps: _*))
 
   /** The exact confirm of a bloom-positive slice against the history
-    * store — IN-set probe below the cap, full anti-join above (see
-    * [[confirmInFilterCap]]). `maybes` must be a MATERIALIZED frame
-    * (checkpointed screen output): the count and the small collect
-    * re-read cached blocks, never re-run the screen. Identical output
-    * either way: null fps match nothing in both forms and duplicate
-    * store fps can't multiply an anti-join.
+    * store — IN-set probe up to `cap` distinct fps, full anti-join
+    * above or at `cap = 0` (see [[ConfirmInFilterCap]]). `maybes` must
+    * be a MATERIALIZED frame (checkpointed screen output): the small
+    * collect re-reads cached blocks, never re-runs the screen.
+    * Identical output either way: null fps match nothing in both
+    * forms and duplicate store fps can't multiply an anti-join.
     *
     * The probe materializes EAGERLY (a ≤ cap-row localCheckpoint)
     * under the same conf lock the store's appends use — the
     * bucketed-scan pin and an append's identical toggle must not
     * race each other's save/restore. */
-  private def confirmAgainstHistory(maybes: DataFrame,
-      historyFps: DataFrame): DataFrame = {
+  private[graft] def confirmAgainstHistory(maybes: DataFrame,
+      historyFps: DataFrame, cap: Int = ConfirmInFilterCap): DataFrame = {
     val spark = maybes.sparkSession
-    // clamp before the +1: a conf cap >= Int.MaxValue would overflow
-    // limit() to a negative argument and fail at runtime instead of
-    // (as the contract says) falling back to the merge join
-    val cap = math.min(confirmInFilterCap(spark), Int.MaxValue - 1L).toInt
     // ONE bounded job decides the regime AND fetches the probe set:
     // collect at most cap+1 distinct fps (driver memory bounded by
     // the cap either way) — cap+1 rows back means "too many, take
@@ -254,42 +237,24 @@ object Dedup {
     } else maybes.join(historyFps.select("fp"), Seq("fp"), "left_anti")
   }
 
-  /** Shared tail of every bloom-screened variant: bloom-positive rows
-    * are confirmed by the exact anti-join ([[confirmAgainstHistory]]
-    * — bucket-pruned IN probe when the slice is small), definite-new
-    * rows skip the store, batch self-dups collapse to min doc_id.
-    *
-    * `fresh` is localCheckpoint'd (batch-sized, slim) because it fans
-    * out TWICE below (survivor aggregate + final semi-join) and Spark
-    * inlines the subtree at each reference: without the checkpoint
-    * the confirm anti-join — whose cost is the HISTORY-side store
-    * scan, the dominant per-batch term — executes once per
-    * reference. Measured at 8M fps: the store anti-join appeared 2-3x
-    * in one executed plan; checkpointing collapses it to exactly ONE
-    * store scan per batch. */
-  private def dedupeScreened(tagged: DataFrame,
-      historyFps: DataFrame): DataFrame = {
-    val confirmed =
-      confirmAgainstHistory(tagged.where(col("__maybe")), historyFps)
-    val fresh = tagged.where(!col("__maybe")).unionByName(confirmed)
-      .localCheckpoint()
-    val survivors = fresh.groupBy("fp").agg(min(col("doc_id")).as("doc_id"))
-    fresh.join(survivors.select("doc_id"), Seq("doc_id"), "left_semi")
-      .select("doc_id", "lang", "source", "n_chars")
-  }
-
-  /** [[confirmAgainstHistory]] for callers outside this file (the
-    * streaming ingest loop's screened micro-batch). */
-  private[graft] def confirmScreened(maybes: DataFrame,
+  /** Shared tail of every bloom-screened dedup: bloom-positive
+    * verdicts are confirmed by the exact anti-join
+    * ([[confirmAgainstHistory]]), definite-new ones skip the store,
+    * and [[firstArrivals]] collapses batch self-dups and re-attaches
+    * the batch's full rows (plus `fp`). */
+  private def dedupeScreened(newDocs: DataFrame, verdicts: DataFrame,
       historyFps: DataFrame): DataFrame =
-    confirmAgainstHistory(maybes, historyFps)
+    firstArrivals(newDocs.withColumn("fp", TextStats.fingerprint(col("text"))),
+      confirmAgainstHistory(verdicts.where(col("__maybe")), historyFps)
+        .unionByName(verdicts.where(!col("__maybe"))))
 
-  /** Per-filter item budget for the plan-literal screen — Spark's own
-    * runtime row-level filtering refuses to build a single bloom past
-    * 4M items / 8 MB (`spark.sql.optimizer.runtime.bloomFilter.max*`
-    * defaults), and that is the honest ceiling for embedding one
-    * filter in every task's plan. A 100 TB crawl history crosses it
-    * immediately — hence the prefix-sharded form below. */
+  /** Per-filter item budget: [[dedupAgainstHistoryBloom]] picks
+    * ceil(items / cap) shards when the caller passes none, and
+    * [[rebuildBloomStore]] grows a store's shard count to keep every
+    * shard under it. 4M items is Spark's own runtime row-level
+    * filtering ceiling (`spark.sql.optimizer.runtime.bloomFilter.max*`
+    * defaults) — ~4.6 MiB per filter at 1% fpp, one filter held per
+    * in-flight screen group. */
   private[graft] val BloomShardItemCap = 4000000L
 
   /** Shard id of a fingerprint: the fp's first 12 bits (3 hex chars of
@@ -305,9 +270,10 @@ object Dedup {
     * exact fp count come out of the SAME history scan, so the store's
     * sizing stats are a free by-product, never a second corpus action
     * (the r12 `docs.count()` lesson). Filters are Catalyst's own
-    * `BloomFilterAggregate` over `xxhash64(fp)` (byte-compatible with
-    * the `BloomFilterMightContain` probe), sized to `itemsPerShard`. */
-  private[ops] def bloomShardFrame(historyFps: DataFrame, shards: Int,
+    * `BloomFilterAggregate` over `xxhash64(fp)`, sized to
+    * `itemsPerShard`; [[cogroupScreen]] reads them back through the
+    * public sketch API. */
+  private[graft] def bloomShardFrame(historyFps: DataFrame, shards: Int,
       itemsPerShard: Long, fpp: Double): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
@@ -337,199 +303,118 @@ object Dedup {
       .agg(count(lit(1)).as("n_fps"), agg.as("filter"))
   }
 
-  /** Slim row shape the sharded screen shuffles: the batch projection
-    * plus the precomputed probe hash (the same `xxhash64(fp)` the
-    * filters were built over) and the shard id (-1 = null fp). Text
-    * is already gone — it dies at the fingerprint projection. */
-  private[ops] case class ScreenRow(doc_id: Long, lang: String,
-      source: String, n_chars: Long, fp: String, h: Long, shard: Int)
-
-  /** [[ScreenRow]] plus the screen verdict; `maybe` is renamed to the
-    * internal `__maybe` column on the way out. */
-  private[ops] case class ScreenedRow(doc_id: Long, lang: String,
-      source: String, n_chars: Long, fp: String, maybe: Boolean)
-
-  /** Verdict-only row shapes for [[screenVerdictsAgainstBloomStore]]
-    * — the generic form the streaming ingest loop joins back to its
-    * full-schema batch by doc_id (text and the rest never ride the
-    * cogroup shuffle). */
+  /** The slim batch row the screen shuffles — text dies at the
+    * fingerprint — with the probe hash (the `xxhash64(fp)` the filters
+    * were built over) and the shard id (-1 = null fp); and the one
+    * verdict row every screen returns, as (doc_id, fp, __maybe). */
   private[ops] case class FpRow(doc_id: Long, fp: String, h: Long,
       shard: Int)
   private[ops] case class FpVerdict(doc_id: Long, fp: String,
       maybe: Boolean)
 
-  /** Salt fan-out per shard for the cogroup screen. One shard's batch
-    * slice is one cogroup group, so a store at its natural small
-    * shard count (1-2 shards below ~8M fps) would screen the whole
-    * batch on 1-2 cores of a many-core host. Salting the batch-side
-    * key to (shard, h mod salts) and replicating each ~MiB filter row
-    * once per salt keeps screen parallelism ≥ min(cores, rows)
-    * regardless of shard count. The replication cost is bounded by
-    * CORES, not shards: salts shrinks as shards grows
-    * (shards ≥ parallelism ⇒ salts = 1, today's exact behavior), so
-    * the filter frame's shuffle volume never exceeds
-    * ~parallelism × filter bytes. Verdicts are per-row functions of
-    * (h, shard filters), so results are salt-invariant by
-    * construction (SCALE.md's StressBloom shard-flatness row;
-    * hashes pinned by the registered store twin).
+  /** The one Bloom screen: verdicts (doc_id, fp, __maybe) for any
+    * (doc_id, text) batch against a (shard, …, filter) frame — built
+    * in memory ([[bloomShardFrame]]) or read from a persisted
+    * [[buildBloomStore]] store. ONE job, a typed COGROUP: batch rows
+    * keyed by (shard, h mod salts) meet their shard's filter row(s),
+    * replicated per salt; each group deserializes its filters once
+    * and probes the precomputed hashes. No plan embeds a filter
+    * literal and no driver loop runs, so per-batch wall is flat in
+    * BOTH history size and shard count (SCALE.md's StressBloom rows).
+    * The batch moves once (slim), the filter frame once (one ~MiB row
+    * per shard per salt). A healthy store has ONE filter row per
+    * shard per epoch; several rows (incremental
+    * [[appendToBloomStore]] appends, or a torn store write) are the
+    * shard's history UNION, so every row is probed — taking the first
+    * would turn the extras' dups into false "new" rows. Shard < 0
+    * (null fp) rides to the exact confirm; a shard with batch rows
+    * but no filter row is definite-new.
     *
-    * Tradeoff knob `spark.graft.dedup.screenSalts` (> 0 overrides):
-    * more salts = wider probe parallelism but salts× the filter
-    * frame's shuffle bytes per batch (8 shards × 4 salts × 4.6 MiB ≈
-    * 147 MB/batch) — on small batches the replication can cost more
-    * than the parallelism buys back. */
-  private def saltsFor(spark: SparkSession, shards: Int): Int =
-    spark.conf.getOption("spark.graft.dedup.screenSalts")
-      .map(_.toInt).filter(_ > 0)
-      .getOrElse(math.max(1, math.min(16,
-        spark.sparkContext.defaultParallelism / math.max(shards, 1))))
-
-  /** The one cogroup screen both row shapes ride: batch rows keyed by
-    * (shard, h mod salts) meet the shard's filter row(s), replicated
-    * per salt; each group deserializes its filter(s) once via the
-    * public sketch API and probes the precomputed hashes. A healthy
-    * store has ONE filter row per shard per epoch; multiple rows
-    * (incremental [[appendToBloomStore]] appends, or a torn store
-    * write) are the shard's history UNION, so every row is probed —
-    * silently taking the first would turn the extras' dups into
-    * false "new" rows. Shard < 0 (null fp) rides to the exact
-    * confirm; a shard with batch rows but no filter row is
-    * definite-new. */
-  private def cogroupScreen[T, U: org.apache.spark.sql.Encoder](
-      rows: org.apache.spark.sql.Dataset[T], filters: DataFrame,
-      salts: Int, shardOf: T => Int, hashOf: T => Long,
-      out: (T, Boolean) => U): org.apache.spark.sql.Dataset[U] = {
-    val spark = rows.sparkSession
+    * Salts: one shard's batch slice is one cogroup group, so a store
+    * at a small shard count would screen the whole batch on 1-2
+    * cores. `salts ≤ 0` takes min(16, parallelism / shards) (≥ 1):
+    * screen parallelism ≥ min(cores, rows) at any shard count, while
+    * the filter frame's shuffle volume stays ~parallelism × filter
+    * bytes (shards ≥ parallelism ⇒ one salt). Verdicts are per-row
+    * functions of (h, shard filters), so they are salt-invariant by
+    * construction; the salt spec passes `salts` explicitly.
+    *
+    * localCheckpoint'd: the confirm tail reads the verdicts twice
+    * (positive and negative slices) and a lazy cogroup re-executes
+    * per reference — measured 3x the whole screen riding in the full
+    * dedup wall. Batch-sized and slim, so bounded at any history. */
+  private[graft] def cogroupScreen(newDocs: DataFrame, filters: DataFrame,
+      shards: Int, salts: Int = 0): DataFrame = {
+    val spark = newDocs.sparkSession
     import spark.implicits._
+    val nSalts = if (salts > 0) salts
+      else math.max(1, math.min(16,
+        spark.sparkContext.defaultParallelism / math.max(shards, 1)))
+    val rows = newDocs
+      .select(col("doc_id").cast("long").as("doc_id"),
+        TextStats.fingerprint(col("text")).as("fp"))
+      .select(col("doc_id"), col("fp"), xxhash64(col("fp")).as("h"),
+        coalesce(fpShard(col("fp"), shards), lit(-1)).as("shard"))
+      .as[FpRow]
     val filts = filters.select(col("shard"), col("filter"))
       .as[(Int, Array[Byte])]
-      .flatMap { case (s, f) =>
-        (0 until salts).iterator.map(k => (s, k, f)) }
-    rows.groupByKey(r => (shardOf(r),
-        java.lang.Math.floorMod(hashOf(r), salts.toLong).toInt))
+      .flatMap { case (s, f) => (0 until nSalts).iterator.map(k => (s, k, f)) }
+    rows.groupByKey(r => (r.shard,
+        java.lang.Math.floorMod(r.h, nSalts.toLong).toInt))
       .cogroup(filts.groupByKey(t => (t._1, t._2))) {
         case ((shard, _), rs, fs) =>
-          if (shard < 0)
-            // null fp: never in a filter, always exact-confirmed
-            rs.map(out(_, true))
-          else if (!fs.hasNext)
-            // no history rows landed in this shard: definite new
-            rs.map(out(_, false))
-          else {
-            val bfs = fs.map(f =>
-              org.apache.spark.util.sketch.BloomFilter.readFrom(
-                new java.io.ByteArrayInputStream(f._3))).toArray
-            rs.map(r => out(r, bfs.exists(_.mightContainLong(hashOf(r)))))
-          }
+          val bfs = if (shard < 0) Array.empty[BloomFilter]
+            else fs.map(f =>
+              BloomFilter.readFrom(new java.io.ByteArrayInputStream(f._3)))
+              .toArray
+          // null fp: never in a filter, always exact-confirmed; no
+          // filter row in this shard: definite new
+          rs.map(r => FpVerdict(r.doc_id, r.fp,
+            shard < 0 || bfs.exists(_.mightContainLong(r.h))))
       }
-  }
-
-  /** The scale form of the bloom screen: the epoch's filter is SHARDED
-    * BY FP PREFIX and the whole batch is screened in ONE job — a typed
-    * COGROUP on shard id brings each batch slice and its shard's
-    * filter row to the same task, where the filter deserializes once
-    * per group and probes the slice's precomputed `xxhash64(fp)`
-    * hashes. No plan ever embeds a filter literal at all, no driver
-    * loop runs, and per-batch wall is flat in BOTH history size and
-    * shard count (SCALE.md's StressBloom rows): shard groups spread
-    * across the cluster like any other aggregation key, and executor
-    * memory holds one deserialized filter per in-flight group.
-    *
-    * Shuffle discipline: the batch moves once (slim projection —
-    * text died at the fingerprint), the filter frame moves once
-    * (one ~MiB row per shard). Shards with batch rows but no history
-    * rows get no filter row and short-circuit to definite-new; null
-    * fingerprints ride shard -1 straight to the exact confirm path.
-    *
-    * Output is EXACTLY [[dedupAgainstHistory]]'s — the shared oracle
-    * makes the hash match a differential proof, same as the
-    * single-filter form. */
-  def dedupAgainstHistoryBloomSharded(newDocs: DataFrame,
-      historyFps: DataFrame, shards: Int, itemsPerShard: Long,
-      fpp: Double = 0.01): DataFrame = {
-    val filters = bloomShardFrame(historyFps, shards, itemsPerShard, fpp)
-    dedupeScreened(
-      screenShardedBatch(shardTagged(newDocs, shards), filters, shards),
-      historyFps)
-  }
-
-  /** Fingerprint + shard-tag the batch (the slim projection both
-    * sharded screen entry points share). */
-  private def shardTagged(newDocs: DataFrame, shards: Int): DataFrame =
-    newDocs
-      .withColumn("fp", TextStats.fingerprint(col("text")))
-      .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
-        col("fp"), fpShard(col("fp"), shards).as("__shard"))
-
-  /** One-job sharded screen over a (shard, …, filter) frame — see
-    * [[dedupAgainstHistoryBloomSharded]] for the plan story and
-    * [[cogroupScreen]] for the salted group key. The filter bytes are
-    * Catalyst `BloomFilterAggregate` output, read back through the
-    * public sketch API (`BloomFilter.readFrom`) — byte-compatible by
-    * construction (it is the same format `BloomFilterMightContain`
-    * deserializes). */
-  private def screenShardedBatch(tagged: DataFrame,
-      filters: DataFrame, shards: Int): DataFrame = {
-    val spark = tagged.sparkSession
-    import spark.implicits._
-    val rows = tagged.select(
-        col("doc_id").cast("long"), col("lang"), col("source"),
-        col("n_chars").cast("long"), col("fp"),
-        xxhash64(col("fp")).as("h"),
-        coalesce(col("__shard"), lit(-1)).as("shard"))
-      .as[ScreenRow]
-    cogroupScreen[ScreenRow, ScreenedRow](rows, filters,
-        saltsFor(spark, shards), _.shard, _.h,
-        (r, m) => ScreenedRow(r.doc_id, r.lang, r.source, r.n_chars,
-          r.fp, m))
-      .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
-        col("fp"), col("maybe").as("__maybe"))
-      // materialize ONCE: the confirm tail references this frame four
-      // times (not-maybe slice, confirm slice, survivor aggregate,
-      // final semi-join) and a lazy cogroup re-executes per reference
-      // — measured 3x the whole screen riding in the full-dedup wall.
-      // Batch-sized and slim (text died at the fingerprint), so the
-      // checkpoint is bounded at any history size.
-      .localCheckpoint()
-  }
-
-  /** Screen VERDICTS only — (doc_id, fp, __maybe) for any
-    * (doc_id, text) frame against a persisted [[buildBloomStore]]
-    * store. The slim shape the streaming ingest loop uses: the batch's
-    * full schema (text included) never rides the cogroup shuffle; the
-    * caller joins the verdicts back by doc_id. localCheckpoint'd for
-    * the same fan-out reason as [[screenShardedBatch]] (the confirm
-    * tail references it three times). */
-  def screenVerdictsAgainstBloomStore(spark: SparkSession,
-      newDocs: DataFrame, storePath: String, shards: Int): DataFrame = {
-    import spark.implicits._
-    // shard ROUTING is store layout — the same guard the sibling
-    // screenAgainstBloomStore applies: a caller probing at another
-    // count routes fps to the wrong shard's filters and tags true
-    // duplicates definite-new (a silent readmission). shards ≤ 0
-    // takes the store's own count from the sidecar.
-    val meta = bloomStoreMeta(spark, storePath)
-    meta.foreach(m =>
-      require(shards <= 0 || m.shards == shards,
-        s"bloom store at $storePath was built with ${m.shards} shards; " +
-          s"caller asked for $shards — probing at another count " +
-          "silently misses"))
-    val useShards = meta.map(_.shards).getOrElse(shards)
-    require(useShards > 0,
-      s"bloom store at $storePath has no sidecar and the caller " +
-        s"passed shards = $shards — the shard count is unknowable")
-    val rows = newDocs
-      .withColumn("fp", TextStats.fingerprint(col("text")))
-      .select(col("doc_id").cast("long"), col("fp"),
-        xxhash64(col("fp")).as("h"),
-        coalesce(fpShard(col("fp"), useShards), lit(-1)).as("shard"))
-      .as[FpRow]
-    cogroupScreen[FpRow, FpVerdict](rows, readBloomFrame(spark, storePath),
-        saltsFor(spark, useShards), _.shard, _.h,
-        (r, m) => FpVerdict(r.doc_id, r.fp, m))
       .select(col("doc_id"), col("fp"), col("maybe").as("__maybe"))
       .localCheckpoint()
   }
+
+  /** The one store check of a persisted filter store: reads the
+    * [[BloomMeta]] sidecar and returns it with the shard count to
+    * route by. `shards ≤ 0` means the store's own count; a store
+    * without a sidecar needs `shards > 0`; a positive count that
+    * disagrees with the sidecar fails loudly — shard ROUTING is store
+    * layout, and probing at another count routes fps to the wrong
+    * shard's filters, tagging true duplicates definite-new (a silent
+    * readmission). */
+  private def bloomStoreLayout(spark: SparkSession, storePath: String,
+      shards: Int): (Option[BloomMeta], Int) = {
+    val meta = bloomStoreMeta(spark, storePath)
+    val n = meta.fold(shards)(_.shards)
+    if (n <= 0)
+      throw new IllegalStateException(
+        s"bloom store at $storePath has no $BloomMetaSidecar sidecar " +
+          s"(pre-coherence layout) and the caller passed shards = " +
+          s"$shards — the shard count is unknowable; rebuild it via " +
+          "buildBloomStore")
+    require(shards <= 0 || n == shards,
+      s"bloom store at $storePath was built with $n shards; caller " +
+        s"asked for $shards — shard routing is store layout, probing " +
+        "at another count silently misses")
+    (meta, n)
+  }
+
+  /** Screen verdicts (doc_id, fp, __maybe) of a batch against a
+    * persisted [[buildBloomStore]] store — the pure per-batch
+    * steady-state stage, [[cogroupScreen]] at the count
+    * [[bloomStoreLayout]] resolves (`shards ≤ 0`: the store's own).
+    * Downstream, bloom-positive rows go to the exact confirm join,
+    * whose cost is a store-layout property: against an fp-BUCKETED
+    * history store ([[dedupAgainstIngestStore]]) the confirm is
+    * co-located and sort-free; against a flat fp table it re-sorts
+    * the history side each batch (the measured growth term in
+    * StressBloom's flat-history full-dedup column). */
+  def screenAgainstBloomStore(spark: SparkSession, newDocs: DataFrame,
+      storePath: String, shards: Int): DataFrame =
+    cogroupScreen(newDocs, readBloomFrame(spark, storePath),
+      bloomStoreLayout(spark, storePath, shards)._2)
 
   /** Schema of a persisted [[buildBloomStore]] store. Reads go
     * through this declared schema so an EMPTY store (a fresh
@@ -727,7 +612,7 @@ object Dedup {
 
   /** The loud coherence gate every two-store screen passes through:
     * the filter store must cover the fp store's live append epoch,
-    * and the caller's shard count must match the store layout. A
+    * and the caller's shard count must pass [[bloomStoreLayout]]. A
     * stale filter does not degrade — it silently drops the dedup
     * guarantee for every post-build fp — so staleness is a crash,
     * not a warning. `shards ≤ 0` means "whatever the store uses"
@@ -735,15 +620,11 @@ object Dedup {
   private[graft] def requireCoherentStores(spark: SparkSession,
       fpStoreDir: String, bloomStorePath: String,
       shards: Int): BloomMeta = {
-    val meta = bloomStoreMeta(spark, bloomStorePath).getOrElse(
+    val meta = bloomStoreLayout(spark, bloomStorePath, shards)._1.getOrElse(
       throw new IllegalStateException(
         s"bloom store at $bloomStorePath has no $BloomMetaSidecar " +
           "sidecar (pre-coherence layout) — staleness vs the fp store " +
           "is uncheckable; rebuild it via buildBloomStore"))
-    require(shards <= 0 || meta.shards == shards,
-      s"bloom store at $bloomStorePath was built with ${meta.shards} " +
-        s"shards; caller asked for $shards — shard routing is store " +
-        "layout, probing at another count silently misses")
     val fpEpoch = graft.streaming.Ingest.storeEpoch(spark, fpStoreDir)
     if (fpEpoch == 0 &&
         Dirs.holdsData(spark, fpStoreDir))
@@ -767,42 +648,6 @@ object Dedup {
     meta
   }
 
-  /** Screen a batch against a persisted [[buildBloomStore]] store:
-    * returns the batch (slim projection + fp) tagged `__maybe` —
-    * the pure per-batch steady-state stage, one cogroup job whose
-    * cost is batch-sized and FLAT in both history size and shard
-    * count (SCALE.md's StressBloom rows; see
-    * [[dedupAgainstHistoryBloomSharded]] for the plan story).
-    * Downstream, bloom-positive rows go to the exact confirm join —
-    * whose cost is a store-layout property: against an fp-BUCKETED
-    * history store ([[dedupAgainstIngestStore]]) the confirm is
-    * co-located and sort-free; against a flat fp table it re-sorts
-    * the history side each batch (the measured growth term in
-    * StressBloom's flat-history full-dedup column). */
-  def screenAgainstBloomStore(spark: SparkSession, newDocs: DataFrame,
-      storePath: String, shards: Int): DataFrame = {
-    // shard ROUTING is store layout: validate the caller's count
-    // against the sidecar when one exists (legacy stores screen
-    // un-validated, as before)
-    bloomStoreMeta(spark, storePath).foreach(m =>
-      require(m.shards == shards,
-        s"bloom store at $storePath was built with ${m.shards} shards; " +
-          s"caller asked for $shards — probing at another count " +
-          "silently misses"))
-    screenShardedBatch(shardTagged(newDocs, shards),
-      readBloomFrame(spark, storePath), shards)
-  }
-
-  /** [[dedupAgainstHistoryBloomSharded]] reading filters from a
-    * persisted [[buildBloomStore]] store instead of rebuilding them —
-    * the per-batch steady state: screen cost is batch-sized, the
-    * history is touched only by the bloom-positive confirm join. */
-  def dedupAgainstBloomStore(spark: SparkSession, newDocs: DataFrame,
-      historyFps: DataFrame, storePath: String, shards: Int): DataFrame =
-    dedupeScreened(
-      screenAgainstBloomStore(spark, newDocs, storePath, shards),
-      historyFps)
-
   /** The FULL steady-state batch dedup against persisted stores — the
     * shape a 100 TB ingest loop actually runs: the bloom screen reads
     * the [[buildBloomStore]] filter store (one cogroup job, flat in
@@ -814,29 +659,34 @@ object Dedup {
     * bloom-positive slice of the batch shuffles (IngestSpec
     * plan-asserts both properties; SCALE.md's StressBloom rows show
     * the full column flat where the flat-table twin grew 4.3→51 s over 16×).
+    * `shards ≤ 0` screens at the store's own count. */
+  def dedupAgainstIngestStore(spark: SparkSession, newDocs: DataFrame,
+      fpStoreDir: String, bloomStorePath: String, shards: Int): DataFrame =
+    storeSurvivors(spark, newDocs, fpStoreDir, bloomStorePath, shards)
+      .select("doc_id", "lang", "source", "n_chars")
+
+  /** [[dedupAgainstIngestStore]] keeping every batch column plus `fp`
+    * — also the screened micro-batch of the streaming ingest
+    * ([[graft.streaming.Ingest.ingestBatchScreened]]).
     *
-    * Sort-free reading needs Spark's opt-in
+    * The coherence guard runs first: a bloom store that missed an fp
+    * append would silently readmit the appended fps' duplicates.
+    * Sort-free reading of the store needs Spark's opt-in
     * `spark.sql.legacy.bucketedTableScan.outputOrdering` (the scan
     * reports the written order only under it, and only when each
     * bucket holds one file — guaranteed after [[graft.streaming
     * .Ingest.compactStore]], and checked per-file by Spark before the
-    * order is claimed). This function sets it only while the screened
-    * dedup runs: that body checkpoints the confirm, so the join is
-    * planned and executed inside the scope and the caller's conf is
-    * left as it was. */
-  def dedupAgainstIngestStore(spark: SparkSession, newDocs: DataFrame,
+    * order is claimed). It is set only while the screened dedup runs:
+    * [[firstArrivals]] checkpoints the confirmed rows inside the
+    * scope, so the confirm join is planned and executed there and the
+    * caller's conf is left as it was. */
+  private[graft] def storeSurvivors(spark: SparkSession, newDocs: DataFrame,
       fpStoreDir: String, bloomStorePath: String, shards: Int): DataFrame = {
-    // the loud stale-filter gate: a bloom store that missed an fp
-    // append would silently readmit the appended fps' duplicates.
-    // The returned meta carries the store's REAL shard count, which
-    // honors the "shards ≤ 0 means whatever the store uses" contract
-    // (forwarding the raw argument would fail the screen's own
-    // validation on a contract-conformant 0)
     val meta = requireCoherentStores(spark, fpStoreDir, bloomStorePath,
       shards)
     Session.withConf(spark,
         "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true") {
-      dedupeScreened(
+      dedupeScreened(newDocs,
         screenAgainstBloomStore(spark, newDocs, bloomStorePath, meta.shards),
         graft.streaming.Ingest.readStore(spark, fpStoreDir))
     }
@@ -858,9 +708,9 @@ object Dedup {
       history, expectedItems = history.count())
   }
 
-  /** Registered PREFIX-SHARDED twin — shards forced past 1 so the
-    * sharded machinery (per-shard filters, bounded per-job literals,
-    * null-fp routing) is exercised and hash-proven against the same
+  /** Registered PREFIX-SHARDED twin — 8 shards forced so the
+    * multi-shard screen (per-shard filters, shard routing, null-fp
+    * routing) is exercised and hash-proven against the same
     * from-scratch oracle at every verify run. */
   def dedupIncrementalBloomSharded(spark: SparkSession,
       dir: String): DataFrame = {
@@ -868,9 +718,9 @@ object Dedup {
     val history = docs.where(!col("source").isin("src0", "src1"))
       .select(TextStats.fingerprint(col("text")).as("fp")).distinct()
       .localCheckpoint()
-    dedupAgainstHistoryBloomSharded(
+    dedupAgainstHistoryBloom(
       docs.where(col("source").isin("src0", "src1")), history,
-      shards = 8, itemsPerShard = math.max(1L, history.count() / 8))
+      expectedItems = history.count(), shards = 8)
   }
 
   /** Registered PERSISTED-STORE twin — the same batch/history split

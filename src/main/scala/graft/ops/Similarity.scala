@@ -568,6 +568,17 @@ object Similarity {
         assignCellsTwoLevel(corpus, cents, nprobe)
       else probeCells(corpus, cents, nprobe).select("vec_id", "cell"))
       .localCheckpoint()
+    verifiedPairs(corpus, buckets, tau)
+  }
+
+  /** The cell-bucketed pair join: (src, dst) id pairs, src < dst, of
+    * `corpus` unit vectors at cosine ≥ tau that share a probe cell of
+    * `assigned` (vec_id, cell — one row per probed cell). Callers
+    * bring their own assignment: [[tauVerifiedPairs]] trains cells
+    * over the corpus, the streaming embed ingest probes frozen
+    * centroids. */
+  private[graft] def verifiedPairs(corpus: DataFrame, assigned: DataFrame,
+      tau: Double): DataFrame = {
     // Verify INSIDE the cell join, exactly once per pair — the shape
     // that survives the Θ(n^1.5) candidate volume. Materializing
     // candidate ids first (the old shape: self-join → distinct →
@@ -580,7 +591,7 @@ object Similarity {
     // only pairs ≥ tau come out. The probe-set column (nprobe ints)
     // makes each pair verify at its SMALLEST shared cell only, so no
     // distinct is needed and no dot is computed twice.
-    val probes = buckets.groupBy("vec_id")
+    val probes = assigned.groupBy("vec_id")
       .agg(sort_array(collect_list(col("cell"))).as("cells"))
       .join(corpus.select("vec_id", "vec"), "vec_id")
     val sided = probes.select(col("vec_id"), col("vec"), col("cells"),

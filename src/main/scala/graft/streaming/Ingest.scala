@@ -376,21 +376,14 @@ object Ingest {
     Dirs.commitStaged(spark, stageDir, commitDir, corpusDir)
   }
 
-  /** One micro-batch: survivors (new content, min doc_id per fp) and
-    * their fingerprints. Exposed for testing the batch semantics
-    * without the stream. */
+  /** One micro-batch: survivors (new content, min doc_id per fp) with
+    * their fingerprints — the history anti-join plus the one survivor
+    * rule, [[graft.ops.Dedup.firstArrivals]]. Exposed for testing the
+    * batch semantics without the stream. */
   def ingestBatch(batch: DataFrame, history: DataFrame): DataFrame = {
-    // localCheckpoint: `fresh` fans out below (collapse aggregate +
-    // semi-join) and each reference re-executes the anti-join — i.e.
-    // re-SCANS the history store, the dominant per-batch term. The
-    // checkpoint pins one batch-sized frame and makes it exactly one
-    // store scan per micro-batch.
-    val fresh = batch
-      .withColumn("fp", TextStats.fingerprint(col("text")))
-      .join(history.select("fp"), Seq("fp"), "left_anti")
-      .localCheckpoint()
-    val keep = fresh.groupBy("fp").agg(min(col("doc_id")).as("doc_id"))
-    fresh.join(keep.select("doc_id"), Seq("doc_id"), "left_semi")
+    val rows = batch.withColumn("fp", TextStats.fingerprint(col("text")))
+    graft.ops.Dedup.firstArrivals(rows,
+      rows.join(history.select("fp"), Seq("fp"), "left_anti"))
   }
 
   /** [[ingestBatch]] with the sharded bloom screen in front — the
@@ -404,55 +397,17 @@ object Ingest {
     * (the store page-caches) while this path's fixed screen+confirm
     * overhead is ~3-6 s — no single-node crossover exists; the win
     * case is cluster-scale IO-bound store scans, where per-batch
-    * store IO drops to ∝ duplicate count (SCALE.md r16). Verdicts ride a
-    * slim (doc_id, fp) frame — the batch's text never enters the
-    * cogroup shuffle — and join back to the full-schema batch by
-    * doc_id at the end. Output is row-identical to [[ingestBatch]]
-    * (same anti-join + min-doc_id collapse semantics, null fps routed
-    * to the exact path); IngestSpec proves the equality and the
-    * coherence guard makes a stale filter store a loud failure, never
-    * a silent readmission. */
+    * store IO drops to ∝ duplicate count (SCALE.md r16). It is
+    * [[graft.ops.Dedup.dedupAgainstIngestStore]] at the bloom store's
+    * own shard count, keeping every batch column: the coherence
+    * guard, the slim (doc_id, fp) screen — the batch's text never
+    * enters the cogroup shuffle — and the same survivor rule as
+    * [[ingestBatch]], so the output is row-identical to it
+    * (IngestSpec proves the equality). */
   def ingestBatchScreened(spark: SparkSession, batch: DataFrame,
-      storeDir: String, bloomStorePath: String): DataFrame = {
-    val meta = graft.ops.Dedup.requireCoherentStores(spark, storeDir,
-      bloomStorePath, shards = 0)
-    val verdicts = graft.ops.Dedup.screenVerdictsAgainstBloomStore(
-      spark, batch, bloomStorePath, meta.shards)
-    // localCheckpoint for the same reason as ingestBatch: the frame
-    // fans out into the collapse + semi-join and would otherwise
-    // re-run the store anti-join once per reference. The confirm
-    // itself is Dedup.confirmScreened: a small positive slice probes
-    // the store as a bucket-PRUNED IN-set scan (per-batch store IO
-    // proportional to the duplicate count), a large one takes the
-    // exchange-free merge join off the bucket layout — sort-free under
-    // the scoped conf, which reaches the join because the checkpoint
-    // plans and runs it inside (same contract as dedupAgainstIngestStore)
-    val fresh = graft.core.Session.withConf(spark,
-        "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true") {
-      graft.ops.Dedup.confirmScreened(
-          verdicts.where(col("__maybe")), readStore(spark, storeDir))
-        .unionByName(verdicts.where(!col("__maybe")))
-        .select("doc_id", "fp")
-        .localCheckpoint()
-    }
-    val keep = fresh.groupBy("fp").agg(min(col("doc_id")).as("doc_id"))
-    val survivors = fresh.join(keep.select("doc_id"), Seq("doc_id"),
-      "left_semi")
-    // (doc_id, fp) SEMI join, not an inner join on doc_id alone: a
-    // batch with duplicate doc_ids would otherwise cross-pair each
-    // text with every survivor fp of that id (row inflation vs
-    // ingestBatch); the fingerprint recompute keys each row to its
-    // own content exactly as the plain path does. The fp leg is
-    // NULL-SAFE (<=>): a null text fingerprints to a null fp, which
-    // survives the whole screened pipeline (shard -1 → exact confirm
-    // → anti-join keeps it) only to be dropped here by null-unsafe
-    // equality — the plain path keeps its min-doc_id null row, so a
-    // plain = would silently lose every null-text document.
-    val withFp = batch.withColumn("fp", TextStats.fingerprint(col("text")))
-    withFp.join(survivors,
-      withFp("doc_id") === survivors("doc_id") &&
-        withFp("fp") <=> survivors("fp"), "left_semi")
-  }
+      storeDir: String, bloomStorePath: String): DataFrame =
+    graft.ops.Dedup.storeSurvivors(spark, batch, storeDir, bloomStorePath,
+      shards = 0)
 
   /** The store as a DataFrame: the bucketed catalog table (registered
     * from the sidecar on a fresh JVM if needed); a plain parquet read

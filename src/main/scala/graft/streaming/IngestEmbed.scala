@@ -203,21 +203,10 @@ object IngestEmbed {
         case _ =>
           // cell-bucketed pair verify (each pair once, at its
           // smallest shared probe cell) + CC, min-id survivor
-          val freshAssigned = assigned
-            .join(fresh.select("vec_id"), Seq("vec_id"), "left_semi")
-          val sided = freshAssigned.groupBy("vec_id")
-            .agg(sort_array(collect_list(col("cell"))).as("cells"))
-            .join(fresh, "vec_id")
-            .select(col("vec_id"), col("vec"), col("cells"),
-              explode(col("cells")).as("cell"))
-          val pairs = sided.as("a")
-            .join(sided.as("b"),
-              col("a.cell") === col("b.cell") &&
-                col("a.vec_id") < col("b.vec_id"))
-            .where(col("a.cell") ===
-                array_min(array_intersect(col("a.cells"), col("b.cells"))) &&
-              dot(col("a.vec"), col("b.vec")) >= tau)
-            .select(col("a.vec_id").as("src"), col("b.vec_id").as("dst"))
+          val pairs = Similarity.verifiedPairs(fresh,
+            assigned.join(fresh.select("vec_id"), Seq("vec_id"),
+              "left_semi"),
+            tau)
           Components.connectedComponents(
               fresh.select(col("vec_id").as("node")), pairs)
             .groupBy("component").agg(min("node").as("vec_id"))

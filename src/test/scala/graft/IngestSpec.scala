@@ -302,26 +302,28 @@ class IngestSpec extends AnyFunSuite with SharedSpark {
       itemsPerShard = math.max(1L, history.count() / 4),
       coversEpoch = Ingest.storeEpoch(spark, s"$base/fps"))
 
-    // end-to-end result parity under BOTH confirm regimes (the
-    // confirm executes eagerly inside — `fresh` is checkpointed — so
-    // plan shapes are asserted on the confirm frame itself below)
+    // end-to-end result parity (the confirm executes eagerly inside —
+    // `fresh` is checkpointed — so plan shapes are asserted on the
+    // confirm frame itself below)
     val want = graft.ops.Dedup.dedupAgainstHistory(batch, history)
       .collect().map(_.getLong(0)).toSet
     assert(graft.ops.Dedup.dedupAgainstIngestStore(spark, batch,
         s"$base/fps", s"$base/bloom", shards = 4)
       .collect().map(_.getLong(0)).toSet === want)
-    spark.conf.set("spark.graft.dedup.confirmInFilterCap", "0")
-    try assert(graft.ops.Dedup.dedupAgainstIngestStore(spark, batch,
-        s"$base/fps", s"$base/bloom", shards = 4)
-      .collect().map(_.getLong(0)).toSet === want)
-    finally spark.conf.unset("spark.graft.dedup.confirmInFilterCap")
     assert(want.nonEmpty)
 
     // the confirm frame, probed directly: screen the batch, take the
-    // positive slice, confirm against the bucketed store
+    // positive slice, confirm against the bucketed store. Both confirm
+    // regimes keep the same rows, so the end-to-end result above holds
+    // under either.
     val maybes = graft.ops.Dedup.screenAgainstBloomStore(spark, batch,
       s"$base/bloom", shards = 4).where(col("__maybe")).localCheckpoint()
     val store = Ingest.readStore(spark, s"$base/fps")
+    def confirmed(cap: Int): Set[(Long, String)] =
+      graft.ops.Dedup.confirmAgainstHistory(maybes, store, cap)
+        .select("doc_id", "fp").collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSet
+    assert(confirmed(10000) === confirmed(0))
     def expand(p: org.apache.spark.sql.execution.SparkPlan):
         Seq[org.apache.spark.sql.execution.SparkPlan] = {
       val kids = p match {
@@ -368,10 +370,9 @@ class IngestSpec extends AnyFunSuite with SharedSpark {
     // only the batch side moves. The confirm frame is planned here, so
     // the sorted-scan conf the screened paths scope around their own
     // confirm is set for this block too.
-    spark.conf.set("spark.graft.dedup.confirmInFilterCap", "0")
     spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
     try noBroadcast {
-      val df = graft.ops.Dedup.confirmScreened(maybes, store)
+      val df = graft.ops.Dedup.confirmAgainstHistory(maybes, store, cap = 0)
       df.collect()
       val nodes = expand(df.queryExecution.executedPlan)
       val storeScans = nodes.collect {
@@ -394,10 +395,8 @@ class IngestSpec extends AnyFunSuite with SharedSpark {
       assert(historySorts.isEmpty,
         s"history side re-sorted ${historySorts.size}x (written bucket " +
           s"order should carry):\n${nodes.head}")
-    } finally {
-      spark.conf.unset("spark.graft.dedup.confirmInFilterCap")
+    } finally
       spark.conf.unset("spark.sql.legacy.bucketedTableScan.outputOrdering")
-    }
   }
 
   test("dedupAgainstIngestStore and ingestBatchScreened leave the " +
@@ -438,7 +437,7 @@ class IngestSpec extends AnyFunSuite with SharedSpark {
       // the probe is CORRECT at the wide layout ...
       assert(probe.collect().map(_.getString(0)).toSet === posFps.toSet)
       // ... and PRUNED: ≤ one bucket per probe fp out of 4096, the
-      // regime claimed at Dedup.confirmInFilterCap's doc
+      // regime claimed at Dedup.ConfirmInFilterCap's doc
       val plan = probe.queryExecution.executedPlan.toString
       val sel = "SelectedBucketsCount: (\\d+) out of (\\d+)".r
         .findAllMatchIn(plan)

@@ -543,40 +543,63 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
     assert(plain.exceptAll(sharded).count() === 0)
     assert(sharded.exceptAll(plain).count() === 0)
 
-    // null texts: null fp rows must take the exact confirm path and
-    // survive IDENTICALLY to the unscreened anti-join (r12 ADVICE) —
-    // in both the single-filter and the sharded screen
+    // every history-dedup entry point returns the same survivors on a
+    // crafted batch: null texts (null fp rows take the exact confirm
+    // path and survive as in the unscreened anti-join), in-batch dups,
+    // and a duplicate doc_id carrying two texts
     val docs = Seq(
       (1L, "alpha beta", "hist"), (2L, null, "hist"),
       (10L, "alpha beta", "new"), // dup of history → dropped
       (11L, null, "new"),         // null fp → kept (null matches nothing)
-      (12L, "fresh one", "new")
+      (12L, "fresh one", "new"),
+      (13L, "fresh one", "new"),  // in-batch dup of 12 → dropped
+      // one doc_id, two texts: the history dup is dropped, the fresh
+      // text kept
+      (14L, "gamma delta", "new"), (14L, "alpha beta", "new"),
+      // one doc_id, two fresh texts: 16 is the min id of "eps one", so
+      // both of its rows survive — the oracle's `doc_id IN (SELECT
+      // MIN(doc_id) … GROUP BY fp)` keys on doc_id alone
+      (16L, "eps one", "new"), (16L, "fresh one", "new")
     ).toDF("doc_id", "text", "source")
       .withColumn("lang", lit("en"))
       .withColumn("n_chars", length(coalesce(col("text"), lit(""))))
     val hist = docs.where(col("source") === "hist")
       .select(TextStats.fingerprint(col("text")).as("fp")).distinct()
     val batch = docs.where(col("source") === "new")
-    val exact = Dedup.dedupAgainstHistory(batch, hist)
-      .select("doc_id").as[Long].collect().toSet
-    assert(exact === Set(11L, 12L))
-    val single = Dedup.dedupAgainstHistoryBloom(batch, hist,
-      expectedItems = 2)
-      .select("doc_id").as[Long].collect().toSet
-    assert(single === exact)
-    val shard4 = Dedup.dedupAgainstHistoryBloomSharded(batch, hist,
-      shards = 4, itemsPerShard = 4)
-      .select("doc_id").as[Long].collect().toSet
-    assert(shard4 === exact)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+      df.select(col("doc_id").cast("long"), col("n_chars").cast("long"))
+        .as[(Long, Long)].collect().toSeq.sorted
+    val exact = rows(Dedup.dedupAgainstHistory(batch, hist))
+    assert(exact === Seq((11L, 0L), (12L, 9L), (14L, 11L), (16L, 7L), (16L, 9L)))
+    assert(rows(Dedup.dedupAgainstHistoryBloom(batch, hist,
+      expectedItems = 2, shards = 1)) === exact)
+    assert(rows(Dedup.dedupAgainstHistoryBloom(batch, hist,
+      expectedItems = 4, shards = 4)) === exact)
+    assert(rows(Dedup.dedupAgainstHistoryBloom(batch, hist,
+      expectedItems = 2, fpp = 0.5)) === exact)
 
-    // persisted store: build once, screen from the store's own rows
-    // (sizing stats ride in the store — zero corpus actions)
-    val store = tempDir("graft-bloom-store") + "/epoch0"
-    Dedup.buildBloomStore(hist, store, shards = 4, itemsPerShard = 4)
-    val fromStore = Dedup.dedupAgainstBloomStore(spark, batch, hist,
-      store, shards = 4)
-      .select("doc_id").as[Long].collect().toSet
-    assert(fromStore === exact)
+    // persisted stores: the fp store plus a filter store built once,
+    // screened from the store's own rows (sizing stats ride in the
+    // store — zero corpus actions), at its count and at shards = 0
+    // (the store's own count)
+    val base = tempDir("graft-bloom-store")
+    graft.streaming.Ingest.appendToStore(spark, s"$base/fps", hist)
+    Dedup.buildBloomStore(hist, s"$base/bloom", shards = 4,
+      itemsPerShard = 4,
+      coversEpoch = graft.streaming.Ingest.storeEpoch(spark, s"$base/fps"))
+    for (n <- Seq(4, 0))
+      assert(rows(Dedup.dedupAgainstIngestStore(spark, batch, s"$base/fps",
+        s"$base/bloom", shards = n)) === exact, s"shards = $n")
+    assert(rows(graft.streaming.Ingest.ingestBatch(batch,
+      graft.streaming.Ingest.readStore(spark, s"$base/fps"))) === exact)
+    assert(rows(graft.streaming.Ingest.ingestBatchScreened(spark, batch,
+      s"$base/fps", s"$base/bloom")) === exact)
+    def verdicts(n: Int): Set[(Long, String, Boolean)] =
+      Dedup.screenAgainstBloomStore(spark, batch, s"$base/bloom", shards = n)
+        .select("doc_id", "fp", "__maybe").as[(Long, String, Boolean)]
+        .collect().toSet
+    assert(verdicts(0) === verdicts(4))
+    intercept[IllegalArgumentException] { verdicts(2) }
 
     // a store holding SEVERAL filter rows for one shard (torn or
     // duplicated write) screens against their UNION — taking only the
@@ -1010,18 +1033,20 @@ class OpsSpec extends AnyFunSuite with SharedSpark {
       .unionByName(docs.where(col("doc_id") >= 250 && col("doc_id") < 270)
         .withColumn("doc_id", col("doc_id") + 9000)) // history re-crawls
       .localCheckpoint()
-    val key = "spark.graft.dedup.screenSalts"
-    def run(salts: Int): Set[Long] = {
-      spark.conf.set(key, salts.toString)
-      try Dedup.dedupAgainstHistoryBloomSharded(batch, hist,
-          shards = 4, itemsPerShard = 1000)
-        .select("doc_id").as[Long].collect().toSet
-      finally spark.conf.unset(key)
-    }
+    // the screen's verdicts are the only salted stage: the confirm
+    // and the survivor rule downstream are functions of them, so equal
+    // verdicts per row mean equal survivors
+    val filters = Dedup.bloomShardFrame(hist, shards = 4,
+      itemsPerShard = 1000, fpp = 0.01)
+    def run(salts: Int): Set[(Long, Boolean)] =
+      Dedup.cogroupScreen(batch, filters, shards = 4, salts = salts)
+        .select("doc_id", "__maybe").as[(Long, Boolean)].collect().toSet
     val (s1, s4, s8) = (run(1), run(4), run(8))
-    assert(s1.nonEmpty && !s1.exists(_ >= 9000L))
-    assert(s1 === s4, "salts=4 changed the survivor set")
-    assert(s1 === s8, "salts=8 changed the survivor set")
+    assert(s1.size === batch.count())
+    assert(s1.filter(_._1 >= 9000L).forall(_._2),
+      "a history re-crawl read bloom-negative")
+    assert(s1 === s4, "salts=4 changed the verdicts")
+    assert(s1 === s8, "salts=8 changed the verdicts")
   }
 
   // ----- multimodal -----

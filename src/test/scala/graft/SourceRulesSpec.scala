@@ -38,15 +38,16 @@ class SourceRulesSpec extends AnyFunSuite {
       "graft/core/Tables.scala" -> """if (nanos) spark.conf.set(key, "true")"""))
   }
 
+  /** (path, trimmed line) of every source line matching `pattern`. */
+  private def sites(pattern: String): Seq[(String, String)] = {
+    val re = pattern.r
+    sourceLines().collect {
+      case (f, l) if re.findFirstIn(l).isDefined => f -> l.trim
+    }
+  }
+
   test("one IVF probe path: no plan-literal centroid vector, the cell " +
     "probe and the neighbour ranking window are each written once") {
-    val lines = sourceLines()
-    def sites(p: String): Seq[(String, String)] = {
-      val re = p.r
-      lines.collect {
-        case (f, l) if re.findFirstIn(l).isDefined => f -> l.trim
-      }
-    }
     // a vector literal scored by dot: k·dim plan literals per projection
     assert(sites("""dot\(.*\.map\(lit\)""").isEmpty)
     // the probe shapes (argmax and sorted top-n over the centroid
@@ -60,5 +61,24 @@ class SourceRulesSpec extends AnyFunSuite {
       """orderBy\(col\("sim"\)\.desc,\s*col\("neighbor_id"\)\)""")
     assert(ranks.map(_._1) === Seq("graft/ops/Similarity.scala"),
       ranks.mkString("\n"))
+  }
+
+  test("one history-dedup path: no plan-literal Bloom probe; the " +
+    "survivor collapse, the cogroup screen with its one verdict row and " +
+    "the bloom store's shard-count check are each written once, in " +
+    "ops/Dedup.scala") {
+    assert(sites("BloomFilterMightContain").isEmpty)
+    val once = Seq(
+      // min doc_id per fp: Dedup.firstArrivals
+      """groupBy\("fp"\)\.agg\(min\(col\("doc_id"\)\)""",
+      // the screen and the one row shape it returns: Dedup.cogroupScreen
+      """\.cogroup\(""", """\bmaybe: Boolean\)""",
+      // the caller's count against the sidecar: Dedup.bloomStoreLayout
+      """require\(.*==\s*shards\b""")
+    for (p <- once) {
+      val found = sites(p)
+      assert(found.map(_._1) === Seq("graft/ops/Dedup.scala"),
+        s"$p:\n${found.mkString("\n")}")
+    }
   }
 }
