@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
@@ -24,10 +23,11 @@ import graft.functions.VectorFunctions._
   *
   * Spark mapping — everything rides the same discipline as the IVF
   * path:
-  *  - codebooks are DATA in one broadcast row (array of m × ksub
-  *    centroid structs), never plan literals (k·dim literal
-  *    expressions blow the codegen method limit — the
-  *    [[Similarity.ivfCentroidsDf]] lesson);
+  *  - codebooks train through the same one-task k-means trainer as
+  *    the IVF centroids ([[Similarity.trainCentroids]]) and are DATA
+  *    in one broadcast row (array of m × ksub centroid structs),
+  *    never plan literals (k·dim literal expressions blow the codegen
+  *    method limit — the [[Similarity.ivfCentroidsDf]] lesson);
   *  - encode is one `crossJoin(broadcast(onerow))` + per-row array
   *    expressions over the codegen'd [[graft.functions.DotProduct]]:
   *    zero shuffle, scan-speed;
@@ -52,78 +52,20 @@ import graft.functions.VectorFunctions._
   */
 object Quantize {
 
-  /** Subvector slices of a (vec_id, vec) frame: one row per (vec_id,
-    * sub, svec), sub ∈ [0, m). Pure per-row fan-out, no shuffle. */
-  private def subvectors(vectors: DataFrame, m: Int): DataFrame = {
-    val dsub = expr(s"size(vec) DIV $m")
-    vectors
-      // loud, not truncated: m ∤ dim would silently leave the trailing
-      // dim % m dimensions out of codebooks, codes AND query LUTs —
-      // ADC quality quietly below what the parameters imply. The
-      // assert rides the row (codegen'd, no extra pass); isNull keeps
-      // the select's type = vec's
-      .withColumn("vec", when(
-        assert_true(expr(s"size(vec) % $m = 0"),
-          lit(s"PQ subvector count m=$m must divide the vector " +
-            "dimension — trailing dims would silently drop from " +
-            "codebooks, codes and LUTs")).isNull,
-        col("vec")))
-      .select(col("vec_id"), posexplode(
-        transform(sequence(lit(0), lit(m - 1)),
-          j => slice(col("vec"), j * dsub + 1, dsub))))
-      .select(col("vec_id"), col("pos").as("sub"), col("col").as("svec"))
-  }
-
-  /** Per-subspace codebooks: for each of the `m` subspaces, `ksub`
-    * centroids seeded from a seeded-hash sample (deterministic,
-    * id-distribution-independent) and
-    * refined by one Lloyd step (plain means — PQ centroids live in the
-    * subspace, they are NOT renormalized). Output one row per (sub,
-    * code) with the centroid and its precomputed half squared norm:
-    * argmin_c ‖x−c‖² ≡ argmax_c (x·c − ‖c‖²/2), so assignment later
-    * costs one dot per candidate. All DataFrame compute; the result is
-    * k = m·ksub tiny rows. */
-  def pqCodebooks(vectors: DataFrame, m: Int = 8, ksub: Int = 16,
-      trainSample: Int = 65536): DataFrame = {
-    // codebooks are statistics, not indexes: train on a bounded sample
-    // (the FAISS practice) — at 10⁹ vectors the Lloyd join below would
-    // otherwise shuffle n·m subvector rows for a 128-row result. The
-    // sample is the seeded-hash permutation (Similarity.hashSample):
-    // deterministic like the old lowest-vec_id sample, but independent
-    // of the id distribution — time-ordered ids no longer bias the
-    // codebooks toward the oldest data. 64k vectors estimate m·ksub ≤
-    // a few thousand subspace centroids with huge margin.
-    val sample = Similarity.hashSample(vectors, trainSample, "pqtrain")
-    val sub = subvectors(sample, m)
-    // seeds: per subspace, the first ksub rows of a SECOND seeded-hash
-    // permutation (bounded window) — same de-bias rationale as the
-    // sample itself; vec_id tiebreak keeps the order total
-    val seeds = sub
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("sub").orderBy(
-          md5(concat(lit("graft:pqseed:"), col("vec_id").cast("string"))),
-          col("vec_id"))))
-      .where(col("rn") <= ksub)
-      .select(col("sub"), (col("rn") - 1).cast("int").as("code"),
-        col("svec").as("cvec"))
-    val assigned = assignCodes(sub, packBooks(seeds))
-    // one Lloyd step: mean per (sub, code, pos); codes that captured
-    // no vectors keep their seed (left join back)
-    val refined = assigned.join(sub, Seq("vec_id", "sub"))
-      .select(col("sub"), col("code"), posexplode(col("svec")))
-      .groupBy("sub", "code", "pos").agg(avg("col").as("mu"))
-      .groupBy("sub", "code")
-      .agg(array_sort(collect_list(struct(col("pos"), col("mu"))))
-        .as("pairs"))
-      .select(col("sub"), col("code"),
-        transform(col("pairs"), p => p.getField("mu")).as("cvec"))
-    seeds.select("sub", "code")
-      .join(refined, Seq("sub", "code"), "left")
-      .join(seeds.select(col("sub"), col("code"),
-        col("cvec").as("seed_cvec")), Seq("sub", "code"))
-      .select(col("sub"), col("code"),
-        coalesce(col("cvec"), col("seed_cvec")).as("cvec"))
-  }
+  /** Per-subspace codebooks: for each of the `m` equal subvector
+    * slices, `ksub` centroids trained by the one k-means trainer
+    * ([[Similarity.trainCentroids]]: seeded-hash sample, one task, all
+    * m subspaces in it) with one Lloyd step of plain means — PQ
+    * centroids live in the subspace, they are NOT renormalized. m
+    * must divide the vector dimension (checked in the task). Output
+    * one row per (sub, code) with the centroid; [[packBooks]] adds its
+    * half squared norm: argmin_c ‖x−c‖² ≡ argmax_c (x·c − ‖c‖²/2), so
+    * encoding costs one dot per candidate. */
+  def pqCodebooks(vectors: DataFrame, m: Int = 8, ksub: Int = 16)
+      : DataFrame =
+    Similarity.trainCentroids(vectors, ksub, "pqtrain", slices = m,
+        rounds = 1, unit = false)
+      .select(col("sub"), col("cid").as("code"), col("cvec"))
 
   /** The m × ksub codebook table as ONE broadcast-able row: `books` is
     * an array indexed by sub, each element the array of (code, cvec,
@@ -139,16 +81,6 @@ object Quantize {
         .as("pairs"))
       .select(transform(col("pairs"), p => p.getField("entries"))
         .as("books"))
-
-  /** Nearest code per (vec_id, sub) row — used by the Lloyd step. */
-  private def assignCodes(sub: DataFrame, packed: DataFrame): DataFrame =
-    sub.crossJoin(broadcast(packed))
-      .select(col("vec_id"), col("sub"),
-        (-array_max(transform(element_at(col("books"), col("sub") + 1),
-          e => struct((dot(col("svec"), e.getField("cvec")) -
-            e.getField("halfn")).as("s"),
-            (-e.getField("code")).cast("double").as("nc"))))
-          .getField("nc")).cast("int").as("code"))
 
   /** PQ-encode a (vec_id, vec) frame: (vec_id, codes array<int>) with
     * codes(j) = the j-th subspace's nearest centroid. One broadcast
@@ -239,12 +171,10 @@ object Quantize {
     * neighbors — hash-oracle-able for the same reason as
     * [[Similarity.ivfRecall]] (DuckDB cannot re-run PQ, but it can
     * state the invariant, so the hash compare becomes a hard recall
-    * assertion). Deterministic given a fixed partitioning: seeds and
-    * argmins are seeded/tie-broken, but the Lloyd step's distributed
-    * avg() over doubles is not bit-stable across partition layouts
-    * (the [[Similarity.ivfCentroidsDf]] caveat) — in principle a
-    * near-boundary ADC ordering could differ between cluster sizes;
-    * the ≥0.9 band has ample margin over that last-ulp noise. */
+    * assertion). Deterministic: the codebooks train in one task over
+    * a vec_id-sorted seeded sample, so they are bit-identical across
+    * input partitionings and session widths (TrainerSpec), and encode
+    * argmins break ties to the lowest code. */
   def pqRecall(spark: SparkSession, dir: String, numQueries: Int = 10,
       k: Int = 10, m: Int = 16, ksub: Int = 32, rerank: Int = 20)
       : DataFrame =
@@ -286,8 +216,8 @@ object Quantize {
       cells: Int = 16, m: Int = 16, ksub: Int = 32,
       twoLevelFrom: Int = 512): Unit = {
     val corpus = vectors.localCheckpoint()
-    val cents = Similarity.ivfCentroidsDf(corpus, cells).localCheckpoint()
-    val books = pqCodebooks(corpus, m, ksub).localCheckpoint()
+    val cents = Similarity.ivfCentroidsDf(corpus, cells)
+    val books = pqCodebooks(corpus, m, ksub)
     // past ~512 cells the single-level n·k assignment dominates the
     // build; switch to the two-level probe (the semanticDedupClusters
     // threshold — measured 5.8× at k=1788/200k vectors, see SCALE.md)

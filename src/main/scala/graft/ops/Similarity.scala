@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,8 +17,10 @@ import graft.functions.VectorFunctions._
   *    pre-normalized unit vectors (cosine ≡ dot), with the small query
   *    side broadcast: the corpus streams through whole-stage codegen
   *    once, no shuffle of the big side.
-  *  - IVF (inverted file) — seeded k-means cells ([[ivfCentroidsDf]]);
-  *    a query scans only its `nprobe` nearest cells. Every IVF caller
+  *  - IVF (inverted file) — seeded k-means cells ([[ivfCentroidsDf]],
+  *    trained in one task by the one Lloyd loop that also trains the
+  *    PQ codebooks, [[trainCentroids]]); a query scans only its
+  *    `nprobe` nearest cells. Every IVF caller
   *    (this object, [[Quantize]], the embed ingest) goes through
   *    [[probeCells]] for "which cells does this vector belong to",
   *    [[probeIndex]] for a persisted cell-partitioned index and
@@ -226,120 +228,143 @@ object Similarity {
     * vec_id tiebreak keeps it total even on a hash collision. */
   def hashSample(vectors: DataFrame, n: Int, tag: String = "train")
       : DataFrame =
-    vectors.orderBy(
-      md5(concat(lit(s"graft:$tag:"), col("vec_id").cast("string"))),
-      col("vec_id")).limit(n)
+    vectors.orderBy(hashKey(tag), col("vec_id")).limit(n)
 
-  /** Centroids as a DATAFRAME (cid, cvec): k seeded sample vectors
-    * refined by up to `iters` Lloyd rounds, with every vec·centroid
-    * product computed against the centroid table as one broadcast row
-    * ([[probeCells]]) — centroids are DATA, never plan literals. A
-    * literal-array form embeds k·dim literals into each projection; at
-    * k=128 that is 8k+ expressions, past the codegen method-size limit,
-    * and the whole scoring drops to interpreted evaluation — measured
-    * 113× blowup at the 20× stress scale. The broadcast form is
-    * codegen'd at any k.
-    *
-    * Training cost is bounded on both axes (centroids are statistics,
-    * not indexes — the pqCodebooks discipline):
-    *  - the Lloyd step runs over a [[hashSample]] of `trainSample`
-    *    vectors (0 = auto: max(64k, 32·k), the FAISS
-    *    points-per-centroid band), never the full corpus — at 10⁹
-    *    vectors the assignment join would otherwise shuffle n·k rows
-    *    to build a k-row result;
-    *  - past k ≥ 512 the training assignment itself goes through the
-    *    two-level coarse probe ([[assignCellsTwoLevel]] — recursive
-    *    two-leveling: its own coarse step re-enters here at kc = √k <
-    *    512, so the recursion bottoms out single-level), cutting the
-    *    sample·k dot count to sample·(√k + wc·√k).
-    * Seeds and sample come from the same seeded hash permutation, so
-    * the result stays deterministic — just no longer biased toward
-    * the lowest ids.
-    *
-    * `iters` Lloyd rounds (default 5) converge the cells honestly.
-    * The single round this ran before was masked by the old seed
-    * bias: with lowest-vec_id seeds the gate QUERIES (vec_id < 10)
-    * were literally the centroids, so one round looked sufficient —
-    * unbiased seeds exposed it at 0.47 IVF-PQ recall. Each round
-    * costs one bounded-sample assignment + one k-row aggregate, and
-    * empty cells carry their previous centroid forward so k never
-    * silently shrinks. Rounds stop early at the Lloyd fixed point
-    * (no vector changed cell ⇒ identical means forever after) —
-    * output-invariant, so `iters` is a cap, not a count. */
-  def ivfCentroidsDf(corpus: DataFrame, k: Int,
-      trainSample: Int = 0, iters: Int = 5): DataFrame = {
-    val n = if (trainSample > 0) trainSample
-      else math.max(65536, 32 * k)
-    val sample = hashSample(corpus, n).localCheckpoint()
-    // k rows: the window is bounded and intentional
-    val seeds = hashSample(sample, k, "seed")
-      .withColumn("cid",
-        row_number().over(Window.orderBy("vec_id")).cast("int") - 1)
-      .select(col("cid"), col("vec").as("cvec")).localCheckpoint()
+  /** The md5 permutation key of [[hashSample]]. */
+  private def hashKey(tag: String): Column =
+    md5(concat(lit(s"graft:$tag:"), col("vec_id").cast("string")))
+
+  /** The one Lloyd loop — pure math, no Spark. Refines `seeds` (cid =
+    * array index) over `points` for at most `rounds` rounds:
+    *  - assign: each point goes to the argmax over c of x·c − ‖c‖²/2
+    *    (≡ argmin ‖x − c‖²), ties to the lowest cid as in
+    *    [[graft.functions.BestCell]]; for unit centroids the half-norm
+    *    is the same for every c, so this is the argmax of x·c;
+    *  - refine: each centroid moves to the mean of its points,
+    *    normalized when `unit` (spherical k-means for IVF cells; PQ
+    *    codebooks live in the subspace and keep plain means); a cell
+    *    that captured no point keeps its previous centroid, so k never
+    *    shrinks;
+    *  - stop: when no point changed cell the means would repeat bit
+    *    for bit, so the loop ends there and `rounds` is a cap.
+    * Sums run in `points` order: the result is a pure function of the
+    * two arrays. */
+  private[graft] def lloyd(points: Array[Array[Double]],
+      seeds: Array[Array[Double]], rounds: Int, unit: Boolean)
+      : Array[Array[Double]] = {
+    def dotOf(a: Array[Double], b: Array[Double]): Double = {
+      var acc = 0.0
+      var i = 0
+      while (i < a.length) { acc += a(i) * b(i); i += 1 }
+      acc
+    }
     var cents = seeds
-    var prevAssign: DataFrame = null
-    var converged = false
-    for (i <- 0 until iters if !converged) {
-      // Job-count discipline (r17, guide §1.2 "don't compute things
-      // you throw away"): the convergence check on the LAST round can
-      // only skip its own round's refine, and recomputing means over
-      // an unchanged assignment is bit-identical output — so the last
-      // round never checks, and an assignment consumed ONLY by its
-      // own refine (no current- or next-round check reads it) skips
-      // the localCheckpoint job too. An iters=2 build (the dedup
-      // screens) drops 3 jobs; iters=5 (the ANN trainers) drops 2.
-      // Mid-loop early exit at the Lloyd fixed point is preserved:
-      // if no vector changed cell, recomputing the means reproduces
-      // the same centroids bit-for-bit (same assignment, same pinned
-      // sample partitions) — the remaining rounds are no-ops.
-      val checksNow = prevAssign != null
-      val nextChecks = i + 1 <= iters - 2
-      val assignPlan = if (k >= 512) assignCellsTwoLevel(sample, cents)
-        else probeCells(sample, cents, 1).select("vec_id", "cell")
-      val assign = if (checksNow || nextChecks) assignPlan.localCheckpoint()
-        else assignPlan
-      converged = checksNow &&
-        assign.join(prevAssign
-            .withColumnRenamed("cell", "prev_cell"), "vec_id")
-          .where(col("cell") =!= col("prev_cell")).count() == 0
-      // the previous round's assignment blocks are dead once the
-      // convergence check has consumed them — release eagerly (the
-      // connectedComponents retention lesson; sample-bounded here,
-      // but 5 rounds × 64k+ vectors is still pinned block churn)
-      if (prevAssign != null)
-        org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(prevAssign)
-      prevAssign = if (nextChecks) assign else null
-      if (!converged) {
-      // (r17 note: a per-dimension column-aggregate refine — dim avg
-      // buffers in one groupBy, no posexplode — was A/B'd and measured
-      // SLOWER than this explode form at dim 64: 3.8 vs 3.1 s on
-      // q_semantic_dedup; the explode's (cid, pos) partials are
-      // cheaper per row than dim nullable avg buffers. Kept as-is.)
-      val refined = sample.join(assign, "vec_id")
-        .select(col("cell").as("cid"), posexplode(col("vec")))
-        .groupBy("cid", "pos").agg(avg("col").as("m"))
-        .groupBy("cid")
-        .agg(array_sort(collect_list(struct(col("pos"), col("m"))))
-          .as("pairs"))
-        .select(col("cid"),
-          normalize(transform(col("pairs"), p => p.getField("m")))
-            .as("cvec"))
-      // cells that captured nothing this round keep their previous
-      // centroid (left join back) — k never silently shrinks
-      cents = cents.select(col("cid"), col("cvec").as("prev_cvec"))
-        .join(refined, Seq("cid"), "left")
-        .select(col("cid"),
-          coalesce(col("cvec"), col("prev_cvec")).as("cvec"))
-        .localCheckpoint()
+    var prev: Array[Int] = null
+    var r = 0
+    while (r < rounds) {
+      val half = cents.map(c => dotOf(c, c) / 2)
+      val assign = points.map { x =>
+        var best = 0
+        var bestScore = Double.NegativeInfinity
+        var j = 0
+        while (j < cents.length) {
+          val s = dotOf(x, cents(j)) - half(j)
+          if (s > bestScore) { best = j; bestScore = s }
+          j += 1
+        }
+        best
       }
-      // an assignment checkpointed ONLY for its own round's check
-      // (no next-round check keeps a handle) is dead once the refine
-      // above materialized through it — release its blocks here
-      if (checksNow && !nextChecks)
-        org.apache.spark.sql.graftbridge.Bridge.unpersistCheckpoint(assign)
+      if (prev != null && java.util.Arrays.equals(assign, prev)) r = rounds
+      else {
+        val sums = cents.map(c => new Array[Double](c.length))
+        val counts = new Array[Int](cents.length)
+        points.indices.foreach { p =>
+          val s = sums(assign(p))
+          var i = 0
+          while (i < s.length) { s(i) += points(p)(i); i += 1 }
+          counts(assign(p)) += 1
+        }
+        cents = cents.indices.map { j =>
+          if (counts(j) == 0) cents(j)
+          else {
+            val mean = sums(j).map(_ / counts(j))
+            val nrm = math.sqrt(dotOf(mean, mean))
+            if (unit && nrm > 0) mean.map(_ / nrm) else mean
+          }
+        }.toArray
+        prev = assign
+        r += 1
+      }
     }
     cents
   }
+
+  /** The one k-means trainer: [[lloyd]] over a [[hashSample]] of
+    * max(64k, 32·k) vectors (the FAISS points-per-centroid band —
+    * centroids are statistics, never trained on the full corpus), run
+    * in ONE executor task (`repartition(1).mapPartitions`, the
+    * [[Components.connectedComponents]] small-graph precedent): at
+    * dim 64 the sample is ~32 MB and every round is plain array math
+    * instead of a distributed job. Inside the task the points are
+    * sorted by vec_id before any sum, so the centroid bits do not
+    * depend on how the input was partitioned or on the session width.
+    * Seeds: the first k vectors of the sample's own hash order (a
+    * uniform pick — the sample is a prefix of one md5 permutation),
+    * cid = seed rank; fewer than k vectors give fewer centroids.
+    * `slices` > 1 cuts every vector into that many equal subvectors
+    * and trains each subspace with its own loop in the same task (PQ
+    * codebooks). Returns (sub, cid, cvec) rows, materialized, so the
+    * training runs once however often callers read the centroids. */
+  private[ops] def trainCentroids(vectors: DataFrame, k: Int, tag: String,
+      slices: Int, rounds: Int, unit: Boolean): DataFrame = {
+    val spark = vectors.sparkSession
+    import spark.implicits._
+    hashSample(vectors, math.max(65536, 32 * k), tag)
+      .select(col("vec_id").cast("long"), hashKey(tag), col("vec"))
+      .as[(Long, String, Array[Double])]
+      .repartition(1)
+      .mapPartitions { it =>
+        val pts = it.toArray.sortBy(_._1)
+        pts.foreach(p => require(p._3.length % slices == 0,
+          s"subvector count $slices must divide the vector dimension " +
+            s"${p._3.length} — trailing dims would silently drop from " +
+            "codebooks, codes and LUTs"))
+        val seeds = pts.sortBy(p => (p._2, p._1)).take(k).map(_._3)
+        (0 until slices).iterator.flatMap { s =>
+          def cut(v: Array[Double]) = {
+            val d = v.length / slices
+            v.slice(s * d, (s + 1) * d)
+          }
+          lloyd(pts.map(p => cut(p._3)), seeds.map(cut), rounds, unit)
+            .zipWithIndex.map { case (c, cid) => (s, cid, c) }
+        }
+      }
+      .toDF("sub", "cid", "cvec")
+      .localCheckpoint()
+  }
+
+  /** Spherical k-means centroids as a DATAFRAME (cid, cvec): the one
+    * trainer ([[trainCentroids]]) with unit centroids and up to
+    * `iters` Lloyd rounds. Centroids are DATA, never plan literals:
+    * every vec·centroid product downstream reads the table as one
+    * broadcast row ([[probeCells]]). A literal-array form embeds k·dim
+    * literals into each projection; at k=128 that is 8k+ expressions,
+    * past the codegen method-size limit, and the whole scoring drops
+    * to interpreted evaluation — measured 113× blowup at the 20×
+    * stress scale.
+    *
+    * Training assigns exactly (k dots per sample vector), at any k:
+    * the in-task loop is cheaper than the distributed two-level probe
+    * it replaced past k ≥ 512 (SCALE.md, k-means build). `iters`
+    * (default 5) is a cap — the loop stops at the Lloyd fixed point.
+    * One round looked sufficient only while biased lowest-vec_id
+    * seeds made the gate queries the centroids; unbiased seeds
+    * measured 0.47 IVF-PQ recall after one round.
+    * Seeded and sorted, so the result is bit-identical across runs,
+    * input partitionings and session widths (TrainerSpec). */
+  def ivfCentroidsDf(corpus: DataFrame, k: Int, iters: Int = 5): DataFrame =
+    trainCentroids(corpus, k, "train", slices = 1, iters, unit = true)
+      .select("cid", "cvec")
 
   /** The one cell prober — "which cells does this vector belong to"
     * for every IVF caller. Adds `cell` and `sim` (the vector·centroid
@@ -423,9 +448,8 @@ object Similarity {
 
   /** Coarse quantizer over the centroid table itself — level 2 of the
     * two-level IVF probe: ~√k super-cells clustering the k fine
-    * centroids, built by the same seeded-sample + one-Lloyd-step
-    * machinery ([[ivfCentroidsDf]] applied to the centroids as if they
-    * were the corpus). */
+    * centroids, trained by the one k-means trainer ([[ivfCentroidsDf]]
+    * applied to the centroids as if they were the corpus). */
   def coarseCentroids(cents: DataFrame, kc: Int): DataFrame =
     ivfCentroidsDf(
       cents.select(col("cid").as("vec_id"), col("cvec").as("vec")), kc)
@@ -463,7 +487,7 @@ object Similarity {
     val kc = if (coarseK > 0) coarseK
       else math.max(2, math.round(math.sqrt(k.toDouble)).toInt)
     val wc = math.min(kc, math.max(coarseProbe, nprobe))
-    val coarse = coarseCentroids(cents, kc).localCheckpoint()
+    val coarse = coarseCentroids(cents, kc)
     // fine → coarse: each of the k fine centroids keeps its best
     // super-cell (k rows total; ties to the lowest ccid)
     val packedFine = cents.crossJoin(broadcast(coarse))
@@ -555,8 +579,8 @@ object Similarity {
     // 2 Lloyd rounds, not the ANN default 5: cells here only GENERATE
     // candidates (exact cosine verifies every pair), so rough locality
     // is enough — pair precision/recall vs the exact clustering stay
-    // 1.0 (PipelineOpsSpec), and the build saves 3 assignment rounds
-    val cents = ivfCentroidsDf(corpus, k, iters = 2).localCheckpoint()
+    // 1.0 (PipelineOpsSpec)
+    val cents = ivfCentroidsDf(corpus, k, iters = 2)
     // multi-probe candidates: each vector lists its nprobe nearest
     // cells; a pair is a candidate if the probe sets intersect.
     // past ~512 cells the single-level n·k assignment term dominates;
@@ -642,29 +666,40 @@ object Similarity {
       .join(reps, "vh")
       .where(col("vec_id") =!= col("rep_id"))
       .select(col("rep_id").as("src"), col("vec_id").as("dst"))
-    val pairs = tauVerifiedPairs(corpus, tau, cells, nprobe, twoLevelFrom)
     // every vector is a node; duplicate members connect through their
     // rep's star edge, so component labels (min reachable id) — hence
     // survivor sets — are what the uncollapsed flow would produce
+    clusterTail(corpusAll,
+      tauVerifiedPairs(corpus, tau, cells, nprobe, twoLevelFrom)
+        .unionByName(stars),
+      corpus, corpusAll)
+  }
+
+  /** The one clustering tail of the semantic dedup paths: connected
+    * components over `edges` (src, dst) with every vec_id of `vectors`
+    * a node, as (vec_id, cluster = the min member id). The `cached`
+    * frames are unpersisted once the components are computed:
+    * connectedComponents runs its driver loop eagerly and checkpoints,
+    * so nothing downstream reads them, and cached vector partitions
+    * would otherwise pile up across calls in a long-lived session. */
+  private[graft] def clusterTail(vectors: DataFrame, edges: DataFrame,
+      cached: DataFrame*): DataFrame = {
     val clusters = Components.connectedComponents(
-        corpusAll.select(col("vec_id").as("node")),
-        pairs.unionByName(stars))
+        vectors.select(col("vec_id").as("node")), edges)
       .select(col("node").as("vec_id"), col("component").as("cluster"))
-    // connectedComponents ran its driver loop above and checkpointed
-    // every round, so nothing downstream reads the corpus caches —
-    // drop them here rather than letting cached vector partitions
-    // pile up across calls in a long-lived session
-    corpus.unpersist()
-    corpusAll.unpersist()
+    cached.foreach(_.unpersist())
     clusters
   }
+
+  /** The min-id survivor of each cluster of a [[clusterTail]] frame:
+    * the rows a training mix keeps. */
+  private[graft] def clusterSurvivors(clusters: DataFrame): DataFrame =
+    clusters.where(col("vec_id") === col("cluster")).select(col("vec_id"))
 
   /** Survivors of [[semanticDedupClusters]]: one representative (min
     * vec_id) per semantic cluster — the rows a training mix keeps. */
   def semanticDedupSurvivors(spark: SparkSession, dir: String): DataFrame =
-    semanticDedupClusters(spark, dir)
-      .where(col("vec_id") === col("cluster"))
-      .select(col("vec_id"))
+    clusterSurvivors(semanticDedupClusters(spark, dir))
 
   /** SCREEN-FIRST hybrid semantic dedup — the composition the r9
     * measurements argued for: the centroid screen
@@ -753,14 +788,10 @@ object Similarity {
         Seq("vec_id"), "left_anti")
       .cache()
     // stage 2 — tau-level pairwise clustering on survivors only
-    val pairs = tauVerifiedPairs(corpus, tau, cells, nprobe, twoLevelFrom)
-    val clusters = Components.connectedComponents(
-        corpusAll.select(col("vec_id").as("node")),
-        pairs.unionByName(stars))
-      .select(col("node").as("vec_id"), col("component").as("cluster"))
-    corpus.unpersist()
-    corpusAll.unpersist()
-    clusters
+    clusterTail(corpusAll,
+      tauVerifiedPairs(corpus, tau, cells, nprobe, twoLevelFrom)
+        .unionByName(stars),
+      corpus, corpusAll)
   }
 
   /** SemDeDup-paper screening variant: dedup by CENTROID proximity
@@ -830,7 +861,7 @@ object Similarity {
       if (cells > 0) cells
       else math.min(4096, math.max(16,
         math.sqrt(corpus.count().toDouble).toLong)).toInt
-    val cents = ivfCentroidsDf(corpus, k, iters = 2).localCheckpoint()
+    val cents = ivfCentroidsDf(corpus, k, iters = 2)
     // assignment AND the owning-centroid similarity in one shuffle-free
     // codegen pass ([[probeCells]] at nprobe 1): the n·√n dot count
     // runs map-side over the broadcast centroid array — no n·k scored

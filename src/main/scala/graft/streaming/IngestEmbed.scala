@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.StructType
 
 import graft.core.Dirs
 import graft.functions.VectorFunctions.{dot, normalize, toDoubleVec}
-import graft.ops.{Components, Similarity}
+import graft.ops.Similarity
 
 /** Continuous EMBEDDING ingest with online semantic dedup — the
   * vector analogue of [[Ingest]]'s text flow, completing the
@@ -207,10 +207,7 @@ object IngestEmbed {
             assigned.join(fresh.select("vec_id"), Seq("vec_id"),
               "left_semi"),
             tau)
-          Components.connectedComponents(
-              fresh.select(col("vec_id").as("node")), pairs)
-            .groupBy("component").agg(min("node").as("vec_id"))
-            .select("vec_id")
+          Similarity.clusterSurvivors(Similarity.clusterTail(fresh, pairs))
       }
       batch.join(survivors, Seq("vec_id"), "left_semi")
         .write.mode("overwrite").parquet(stageDir.toString)
@@ -310,7 +307,6 @@ object IngestEmbed {
     val nCells = cellCount(hist.count().toDouble, withinBatch, nprobe)
     val cents = Similarity
       .ivfCentroidsDf(hist.select("vec_id", "vec"), nCells, iters = 2)
-      .localCheckpoint()
     Dirs.swap(spark, indexPath(workDir)) { tmp =>
       cents.write.parquet(s"$tmp/centroids")
       // explicit count, same reason as the append write: AQE coalesces

@@ -81,4 +81,52 @@ class SourceRulesSpec extends AnyFunSuite {
         s"$p:\n${found.mkString("\n")}")
     }
   }
+
+  /** The body of `def name` in `file`: the lines after the def line up
+    * to the next member at the def's indent. Empty if no such def. */
+  private def body(file: String, name: String): Seq[String] = {
+    val ls = Files.readAllLines(root.resolve(file)).asScala.toSeq
+    val start = ls.indexWhere(l => s"""\\bdef $name\\b""".r.findFirstIn(l).isDefined)
+    if (start < 0) Seq.empty
+    else {
+      def indent(l: String) = l.takeWhile(_ == ' ').length
+      val at = indent(ls(start))
+      ls.drop(start + 1).takeWhile(l =>
+        l.trim.isEmpty || indent(l) > at || l.trim.startsWith("}"))
+    }
+  }
+
+  test("one k-means trainer: no Lloyd refine written as a Spark " +
+    "aggregate (avg over a posexplode of a vector) in ops") {
+    val refines = sourceLines().filter(_._1.startsWith("graft/ops/"))
+      .groupBy(_._1).toSeq.flatMap { case (f, ls) =>
+        val text = ls.map(_._2)
+        text.indices.collect {
+          case i if text(i).contains("posexplode(col(") &&
+            text.slice(i, i + 4).exists(_.contains("avg(")) =>
+            f -> text(i).trim
+        }
+      }
+    assert(refines.isEmpty, refines.mkString("\n"))
+  }
+
+  test("one k-means trainer: training assigns exactly, never through " +
+    "the two-level probe") {
+    val trainer = Seq("ivfCentroidsDf", "trainCentroids", "lloyd")
+      .flatMap(body("graft/ops/Similarity.scala", _)) ++
+      body("graft/ops/Quantize.scala", "pqCodebooks")
+    assert(!trainer.exists(_.contains("assignCellsTwoLevel(")),
+      trainer.filter(_.contains("assignCellsTwoLevel(")).mkString("\n"))
+  }
+
+  test("one k-means trainer: one Lloyd loop, called only by " +
+    "Similarity.trainCentroids") {
+    val defs = sites("""\bdef lloyd\b""")
+    assert(defs.map(_._1) === Seq("graft/ops/Similarity.scala"),
+      defs.mkString("\n"))
+    val calls = sites("""\blloyd\(""").filterNot(_._2.contains("def lloyd"))
+    assert(calls.length === 1 &&
+      body("graft/ops/Similarity.scala", "trainCentroids")
+        .exists(_.contains("lloyd(")), calls.mkString("\n"))
+  }
 }
